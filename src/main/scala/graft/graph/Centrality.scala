@@ -21,11 +21,11 @@ import graft.Lineage._
   * before damping, restoring (floor-exact) mass conservation. Web-style
   * corpora are sink-heavy, and without the term their ranks bias low.
   *
-  * Scale shape per iteration: one join edges⋈ranks on src (co-partitioned
-  * with the outdegree join), one groupBy dst (map-side combinable sum),
-  * one left join back to the node set. O(E) work per round, no closure
-  * materialization; lineage truncated per round with a lazy
-  * localCheckpoint exactly like [[Fixpoint]].
+  * Scale shape per iteration (unweighted and personalized PageRank): one
+  * vertex-state aggregation — rank-share messages unioned with the
+  * (node, rank, out-neighbors) rows, one exchange, a map-side combinable
+  * sum. O(E) work per round, no closure materialization; lineage
+  * truncated per round with a lazy cut exactly like [[Fixpoint]].
   */
 object Centrality {
 
@@ -33,57 +33,46 @@ object Centrality {
     * Output: (node, rank_x1e6). */
   def pagerank(edges: DataFrame, iterations: Int,
                redistributeDangling: Boolean = false): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().pin
-    val seeded = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-      .select(col("node"), lit(1000000L).as("r0"), lit(150000L).as("tel"))
-      .pin
-    dampedRank(e, seeded, iterations, redistributeDangling)
+    val e = edges.select(col("src"), col("dst")).pin
+    val state = e.unionByName(e.select(col("dst").as("src"), nullOf(e, "dst").as("dst")))
+      .groupBy(col("src").as("node"))
+      .agg(collect_set(col("dst")).as("out"))
+      .select(col("node"), lit(1000000L).as("r"), lit(150000L).as("tel"), col("out"))
+    dampedRank(state, iterations, redistributeDangling)
   }
 
-  /** Shared damped-fixpoint loop under both PageRank variants:
-    * `seeded` = (node, r0, tel) — initial rank and per-node teleport
-    * mass in ppm. Per iteration: one join edges⋈ranks on src
-    * (co-partitioned with the outdegree join), one groupBy dst
-    * (map-side combinable sum), one left join back to the node set.
-    * With redistribution, add one tiny whole-table agg per round whose
-    * 1-row result joins back as a broadcast scalar — the share
-    * `S div N` is exact integer math, so determinism is preserved. */
-  private def dampedRank(e: DataFrame, seeded: DataFrame, iterations: Int,
-                         redistributeDangling: Boolean = false): DataFrame = {
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // dangling set and node count are edge-structure constants: compute once
-    val dangling =
-      if (!redistributeDangling) null
-      else seeded.select(col("node"))
-        .join(e.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
-        .pin
-    val nNodes =
-      if (!redistributeDangling) null
-      else seeded.agg(count(lit(1)).as("nn"))
-    var r = seeded.select(col("node"), col("r0").as("r"))
+  /** Shared damped-fixpoint loop under both PageRank variants over the
+    * vertex state (node, r, tel, out): current rank and per-node
+    * teleport mass in ppm, and the node's distinct out-neighbors — an
+    * O(out-degree) row, built by the caller in one aggregation. A round
+    * unions the rank shares `r div |out|` (one message per out-edge)
+    * with the state rows and aggregates once by node (map-side
+    * combinable sum): one exchange, so one job per iteration under the
+    * lazy lineage cut. With redistribution, the dangling share `S div N`
+    * (S = rank held by nodes without out-edges) is one tiny per-round
+    * sum ([[Fixpoint.loopSums]]) on the job that materializes the
+    * previous round — exact integer math, so determinism is preserved. */
+  private def dampedRank(init: DataFrame, iterations: Int,
+                         redistributeDangling: Boolean): DataFrame = {
+    var state = init.cut
     (1 to iterations).foreach { _ =>
-      val contrib = e.join(r.withColumnRenamed("node", "src"), Seq("src"))
-        .join(outdeg, Seq("src"))
-        .select(col("dst").as("node"), expr("r div deg").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("m"))
-      val damped = seeded.join(contrib, Seq("node"), "left")
-      r = (if (!redistributeDangling) {
-        damped.select(col("node"),
-          expr("tel + (85 * coalesce(m, CAST(0 AS BIGINT))) div 100").as("r"))
-      } else {
-        val share = r.join(dangling, Seq("node"), "left_semi")
-          .agg(coalesce(sum(col("r")), lit(0L)).as("s"))
-          .crossJoin(nNodes)
-          .select(expr("s div nn").as("dshare"))
-        damped.crossJoin(broadcast(share))
-          .select(col("node"),
-            expr("tel + (85 * (coalesce(m, CAST(0 AS BIGINT)) + dshare)) div 100")
-              .as("r"))
-      }).cut
+      val mass = coalesce(col("m"), lit(0L))
+      val shared = if (!redistributeDangling) mass else {
+        val s = Fixpoint.loopSums(state, when(size(col("out")) === 0, col("r")), lit(1L))
+        mass + lit((s(0) / s(1).max(1)).toLong)
+      }
+      state = state
+        .select(explode(col("out")).as("node"), nullOf(state, "tel").as("tel"),
+          nullOf(state, "out").as("out"), expr("r div size(out)").as("c"))
+        .unionByName(state.select(col("node"), col("tel"), col("out"),
+          nullOf(state, "r").as("c")))
+        .groupBy(col("node"))
+        .agg(max(col("tel")).as("tel"), max(col("out")).as("out"), sum(col("c")).as("m"))
+        .withColumn("m", shared)
+        .select(col("node"), expr("tel + (85 * m) div 100").as("r"), col("tel"), col("out"))
+        .cut
     }
-    r.select(col("node"), col("r").as("rank_x1e6"))
+    state.select(col("node"), col("r").as("rank_x1e6"))
   }
 
   /** Personalized (topic-sensitive) PageRank: the teleport mass returns
@@ -96,20 +85,18 @@ object Centrality {
     * exactly 0 (never the uniform floor). */
   def pagerankPersonalized(edges: DataFrame, seeds: DataFrame,
                            iterations: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().pin
+    val e = edges.select(col("src"), col("dst")).pin
     // node universe = edge endpoints ∪ seeds: a seed with no incident
     // edges still ranks at its teleport floor instead of vanishing
-    val seeded = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .unionByName(seeds.select(col("node")))
-      .distinct()
-      .join(seeds.select(col("node")).distinct().withColumn("_s", lit(1L)),
-        Seq("node"), "left")
-      .select(col("node"),
-        (coalesce(col("_s"), lit(0L)) * 1000000L).as("r0"),
-        (coalesce(col("_s"), lit(0L)) * 150000L).as("tel"))
-      .pin
-    dampedRank(e, seeded, iterations)
+    val state = e.withColumn("_s", lit(0L))
+      .unionByName(e.select(col("dst").as("src"), nullOf(e, "dst").as("dst"), lit(0L).as("_s")))
+      .unionByName(seeds.select(col("node").as("src"), nullOf(e, "dst").as("dst"),
+        lit(1L).as("_s")))
+      .groupBy(col("src").as("node"))
+      .agg(collect_set(col("dst")).as("out"), max(col("_s")).as("_s"))
+      .select(col("node"), (col("_s") * 1000000L).as("r"), (col("_s") * 150000L).as("tel"),
+        col("out"))
+    dampedRank(state, iterations, redistributeDangling = false)
   }
 
   /** WEIGHTED PageRank: each node's rank splits across its out-edges in
@@ -122,9 +109,9 @@ object Centrality {
     * Weights must be POSITIVE longs; parallel edges merge by weight sum
     * first. Overflow headroom: r ≤ 1e6·|V| and r·w must stay under 2^63
     * — at |V| = 1e9 that allows weights to ~9e3; pre-scale weights down
-    * if yours are larger. Same per-round scale shape as [[pagerank]]:
-    * one edges⋈ranks join co-partitioned with the out-weight join, one
-    * map-side-combinable sum, one left join back to the node set. */
+    * if yours are larger. Per round: one edges⋈ranks join co-partitioned
+    * with the out-weight join, one map-side-combinable sum, one left
+    * join back to the node set. */
   def pagerankWeighted(edges: DataFrame, iterations: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w"))
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
@@ -534,10 +521,12 @@ object Centrality {
     // stages for the full query — the r17 "slower at 32 cores than 8"
     // signature). One explicit hash exchange on u at the session's
     // configured shuffle parallelism (the scale knob, not a constant)
-    // feeds BOTH the adjacency agg (same key — no further exchange)
-    // and the intersect join's probe side (exchange reuse), restoring
-    // task parallelism ∝ cores (guide §2.5: compute-heavy narrow rows
-    // are exactly what size-based coalescing cannot see).
+    // feeds the adjacency agg (same key — no further exchange); the
+    // adjacency is pinned in its own execution, so the intersect join's
+    // probe side repeats that exchange rather than reusing it. The
+    // intersect keeps the exchange's width while both adjacency joins
+    // broadcast (guide §2.5: compute-heavy narrow rows are exactly what
+    // size-based coalescing cannot see).
     val owide = widenByKey(o, col("u"))
     val adj = owide.groupBy(col("u")).agg(collect_list(col("v")).as("ns")).pin
     val closed = owide
@@ -1192,13 +1181,26 @@ object Centrality {
     * partition coalescing only sees bytes, so a few-MB frame that fans
     * out into Σ d⁺² of compute gets collapsed onto 1-4 tasks and the
     * stage runs serial no matter how many cores the session has
-    * (guide §2.5). The explicit numPartitions pins the exchange
-    * against AQE re-coalescing; the count is the session's shuffle
-    * knob — at real scale it is the same width every other exchange
-    * gets, never a local constant. */
+    * (guide §2.5). The count is the session's shuffle knob — at real
+    * scale it is the same width every other exchange gets, never a
+    * local constant.
+    *
+    * What the executed `graph_triangles` plan shows: the explicit
+    * numPartitions makes a REPARTITION_BY_NUM exchange, which AQE never
+    * coalesces, and an aggregation on the same key runs in the stage
+    * right after it with no further exchange. Width holds only within
+    * that stage: the intersect stays there because both adjacency
+    * joins broadcast, while a sort-merge join would re-shuffle on its
+    * own key (ENSURE_REQUIREMENTS, coalescable again). Every query
+    * execution that reads the widened frame repeats the exchange — the
+    * pinned adjacency aggregation and the intersect's probe side are
+    * two shuffles, not one reused one. */
   private def widenByKey(df: DataFrame, keys: Column*): DataFrame =
     df.repartition(
       df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
+
+  /** A typed null matching `df`'s column `c`, for union arms that lack it. */
+  private def nullOf(df: DataFrame, c: String): Column = lit(null).cast(df.schema(c).dataType)
 
   /** Degree-ordered orientation of an undirected simple graph: each
     * distinct edge appears once as (u, v) with

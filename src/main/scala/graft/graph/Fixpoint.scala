@@ -15,6 +15,16 @@ import graft.Lineage._
   * chains. Each round localCheckpoints to truncate lineage (otherwise the
   * logical plan doubles every round and Catalyst analysis time explodes)
   * and the loop exits when the pair count stops growing.
+  *
+  * Per-round cost is mostly job count, not compute: under adaptive
+  * execution every exchange or broadcast of a round runs as its own
+  * Spark job and replan. The vertex-state fixpoints
+  * ([[connectedComponents]], [[greedyColoring]], and PageRank in
+  * [[Centrality]]) therefore keep one (node, state…) table whose rows
+  * carry O(degree) adjacency, union each round's messages with it and
+  * aggregate once by node (the Pregel superstep), and read their loop
+  * test off the round's own materialization ([[loopSums]]) instead of a
+  * global aggregate: coloring runs two jobs per round, components three.
   */
 object Fixpoint {
 
@@ -64,96 +74,89 @@ object Fixpoint {
     * takes the min of its own label and its neighbors' labels, then
     * shortcuts through its label's label (path halving). The label's
     * reach roughly doubles per round, so convergence is O(log diameter)
-    * — a 2M-hop chain closes in ~20 rounds — while each round stays one
-    * groupBy + one self-join over the label table (O(E) work, no closure
-    * materialization, no O(cluster²) pair space). localCheckpoint
-    * truncates lineage per round like the closure above. Non-convergence
-    * within maxRounds throws instead of silently returning split
-    * components. */
+    * — a 2M-hop chain closes in ~20 rounds — with O(E) work per round,
+    * no closure materialization and no O(cluster²) pair space.
+    *
+    * Vertex-state rounds (the Pregel shape): one (node, component, nbrs)
+    * table carries each node's symmetrized adjacency in its row —
+    * O(degree) per row, the bound of the mex arrays in
+    * [[greedyColoring]]. A round unions the label messages (one per
+    * adjacency entry) with the state rows and aggregates ONCE by node;
+    * the pointer jump is one self-join of that aggregate, whose node-
+    * keyed side reuses the aggregation's exchange, so a round plans two
+    * exchanges (or one plus a broadcast when adaptive execution sees a
+    * small label table). The label-sum convergence test runs on the
+    * round's own materialization ([[loopSums]]): three jobs per round.
+    * Lineage is cut per round. Non-convergence within maxRounds throws
+    * instead of silently returning split components. */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
     // checkpoint the PAIR input before symmetrizing: the union otherwise
-    // embeds the caller's (possibly huge) pair-generation plan twice, and
-    // the lazy checkpoint's toRdd pays planning + codegen for both copies
-    // on the driver — measured 3.4s of pure driver time on the minhash
-    // pipeline before this split
+    // embeds the caller's (possibly huge) pair-generation plan twice
     val p = pairs.select(col("a"), col("b")).pin
-    val edges = p
-      .unionByName(p.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .pin
-    // NO standalone materializing count here: the first labelSum below
-    // materializes the (lazy) pair, edge, and init-label pins in ONE
-    // job; rounds re-read the cached edge blocks either way. A separate
-    // edges.count() was one extra job per call — per MICRO-BATCH for
-    // the streaming fold sinks, where fixed job cost dominates.
     // init fuses the first min-propagation: label = min(self, neighbors) —
-    // one round fewer than starting from label = self (every node appears
-    // as `a` in the symmetrized edge set, so the groupBy covers all nodes)
-    var labels = edges.groupBy(col("a").as("node"))
-      .agg(min(col("b")).as("_nbr"))
-      .select(col("node"), least(col("node"), col("_nbr")).as("component"))
-      .pin
+    // every node appears as `a` in the symmetrized set, so the groupBy
+    // covers all nodes; collect_set dedups without a distinct exchange.
+    // A null id is not a node.
+    var state = p.unionByName(p.select(col("b").as("a"), col("a").as("b")))
+      .filter(col("a").isNotNull)
+      .groupBy(col("a").as("node"))
+      .agg(collect_set(col("b")).as("nbrs"))
+      .select(col("node"), least(col("node"), array_min(col("nbrs"))).as("component"),
+        col("nbrs"))
+      .cut
+    // min over own label and every neighbor's label, adjacency carried
+    // along. The (always true) null filter is the one the pointer jump's
+    // join infers for its right side: stating it here keeps both join
+    // sides the same plan, so they share one exchange.
+    def propagate(s: DataFrame): DataFrame =
+      s.select(explode(col("nbrs")).as("node"), col("component"),
+          lit(null).cast(s.schema("nbrs").dataType).as("nbrs"))
+        .unionByName(s)
+        .groupBy(col("node"))
+        .agg(min(col("component")).as("component"), max(col("nbrs")).as("nbrs"))
+        .filter(col("node").isNotNull)
     // labels only ever DECREASE, so the label sum strictly decreases
-    // until convergence — a single decimal aggregate replaces a
-    // join-and-count change detector (decimal: a 10^12-node graph's id
-    // sum overflows int64)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("component").cast("decimal(38,0)"))).head.getDecimal(0)
-    var prevSum = labelSum(labels)
-    // empty pair set (e.g. a corpus with no near-dup pairs at all):
-    // sum-of-nothing is null and there is nothing to propagate — the
+    // until convergence (BigInt: a 10^12-node graph's id sum overflows
+    // int64); the same pass counts the nodes
+    def labelSum(df: DataFrame): (BigInt, BigInt) = {
+      val s = loopSums(df, lit(1L), col("component"))
+      (s(0), s(1))
+    }
+    val (nodes, sum0) = labelSum(state)
+    var prevSum = sum0
+    // empty pair set (e.g. a corpus with no near-dup pairs at all): the
     // empty (node, component) frame IS the fixpoint
-    if (prevSum == null) return labels
+    if (nodes == 0) return state.select(col("node"), col("component"))
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("node", "b")
-          .withColumnRenamed("component", "nbr_component"), Seq("b"))
-        .groupBy(col("a").as("node"))
-        .agg(min(col("nbr_component")).as("nbr_component"))
-      // lazy checkpoint: propagated is BOTH sides of the pointer-jump
-      // self-join below — without it the edges-join + groupBy run twice
-      // per round
-      val propagated = labels.join(neighborMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("component"), coalesce(col("nbr_component"), col("component")))
-            .as("component"))
-        .cut
+      val propagated = propagate(state)
       // pointer jump (path halving): component := component's component.
       // Every label value is itself a node id (mins over node ids), so the
-      // self-join resolves; coalesce is belt-and-braces for the root.
-      val next = propagated
-        .join(propagated
-          .select(col("node").as("component"), col("component").as("_jumped")),
+      // self-join resolves; coalesce is belt-and-braces for the root. The
+      // right side keeps `nbrs` too (never reached: every state row has
+      // an array) so column pruning cannot turn it into a second, narrower
+      // aggregation — both sides share the one exchange.
+      state = propagated
+        .join(propagated.select(col("node").as("component"),
+          col("component").as("_jumped"), col("nbrs").as("_nbrs")),
           Seq("component"), "left")
-        .select(col("node"), coalesce(col("_jumped"), col("component")).as("component"))
+        .select(col("node"), coalesce(col("_jumped"), col("component")).as("component"),
+          coalesce(col("nbrs"), col("_nbrs")).as("nbrs"))
         .cut
-      val s = labelSum(next)
-      labels = next
-      converged = s.compareTo(prevSum) == 0
+      val s = labelSum(state)._2
+      converged = s == prevSum
       prevSum = s
       round += 1
     }
     // Same boundary case as transitiveClosure: the last permitted round may
     // have landed exactly on the fixpoint. Confirm with one more
     // propagation before declaring failure.
-    if (!converged) {
-      val confirm = edges
-        .join(labels.withColumnRenamed("node", "b")
-          .withColumnRenamed("component", "nbr_component"), Seq("b"))
-        .groupBy(col("a").as("node"))
-        .agg(min(col("nbr_component")).as("nbr_component"))
-      val confirmed = labels.join(confirm, Seq("node"), "left")
-        .select(col("node"),
-          least(col("component"), coalesce(col("nbr_component"), col("component")))
-            .as("component"))
-      if (labelSum(confirmed).compareTo(prevSum) != 0)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxRounds rounds; " +
-            "raise maxRounds (labels would be silently wrong otherwise)")
-    }
-    labels
+    if (!converged && labelSum(propagate(state))._2 != prevSum)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxRounds rounds; " +
+          "raise maxRounds (labels would be silently wrong otherwise)")
+    state.select(col("node"), col("component"))
   }
 
   /** Incremental connected components: fold a NEW batch of pairs into an
@@ -897,70 +900,74 @@ object Fixpoint {
     * dense small ints ≤ max-degree — the register-allocation /
     * conflict-scheduling / mutex-partitioning primitive.
     *
-    * Each round: one blocked-neighbor semi-join + one colored-neighbor
-    * mex agg; mex computed in-row as
-    * `array_min(array_except(sequence(0, n), colors))` — exact, no UDF.
-    * Throws past `maxRounds`. Output: (node, color). */
+    * Vertex-state rounds (the Pregel shape): the priority is a function
+    * of the id, so each node's LOWER-priority neighbors (`down`) are
+    * fixed once, in-row, when the state is built — and that build is
+    * round 1 (a node is blocked iff a neighbor outranks it). A state row
+    * (node, down, used, color) is O(degree): `down` plus the colors its
+    * colored neighbors use, the mex array. Each round, every row
+    * messages its `down` set — "blocked" while uncolored, its color in
+    * the round after it colored — and one aggregation by node folds the
+    * messages into the uncolored rows: unblocked rows take
+    * `array_min(array_except(sequence(0, n), used))` (exact mex, no
+    * UDF). Rows that have sent their color leave the state. One exchange
+    * per round; the live count rides on the round's own materialization
+    * ([[loopSums]]): two jobs per round. Throws past `maxRounds`.
+    * Output: (node, color). */
   def greedyColoring(edges: DataFrame, maxRounds: Int = 24): DataFrame = {
     val p = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
-    val und = p.unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().pin
     def prio(c: Column): Column =
       struct(graft.functions.HashFunctions.md5_prefix64(c.cast("string")).as("h"),
         c.as("id"))
-    var live = und.select(col("src").as("node")).distinct().pin
-    var cur = und
-    val spark = und.sparkSession
-    var colored = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      new org.apache.spark.sql.types.StructType()
-        .add("node", "long").add("color", "long"))
-    var round = 0
-    // per-round accumulation as a LIST of pinned parts: re-pinning the
-    // whole colored set each round copied O(V) blocks per round
-    // (O(V·rounds) total writes); the union-of-leaves plan reads the
-    // same cached parts and only the round's OWN delta is ever newly
-    // pinned. The nbrColors join consumes the union either way.
-    var coloredParts = List(colored)
-    def coloredAll = coloredParts.reduce(_ unionByName _)
-    // live-count bookkeeping: the count comes from the round's own `live`
-    // materialization, so loop control costs no extra isEmpty job
-    var nLive = live.count()
+    def mex(used: Column): Column =
+      array_min(array_except(sequence(lit(0L), size(used).cast("long")), used))
+    // round 1: collect_set dedups the symmetrized edges without a distinct
+    var state = p.unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
+      .groupBy(col("src").as("node"))
+      .agg(collect_set(when(prio(col("dst")) < prio(col("src")), col("dst"))).as("down"),
+        max(prio(col("dst")) > prio(col("src"))).as("blocked"))
+      .select(col("node"), col("down"), typedLit(Seq.empty[Long]).as("used"),
+        when(!col("blocked"), lit(0L)).as("color"))
+      .cut
+    // a colored neighbor is always of HIGHER priority (it blocked this
+    // node until it colored), so blocks and colors both flow along `down`
+    def step(s: DataFrame): DataFrame =
+      s.filter(col("color").isNull)
+        .select(col("node"), col("down"), col("used"), lit(false).as("blocked"))
+        .unionByName(s.select(explode(col("down")).as("node"),
+          lit(null).cast(s.schema("down").dataType).as("down"),
+          when(col("color").isNotNull, array(col("color"))).as("used"),
+          col("color").isNull.as("blocked")))
+        .groupBy(col("node"))
+        .agg(max(col("down")).as("down"),
+          array_distinct(flatten(collect_list(col("used")))).as("used"),
+          max(col("blocked")).as("blocked"))
+        .select(col("node"), col("down"), col("used"),
+          when(!col("blocked"), mex(col("used"))).as("color"))
+    def counts(s: DataFrame): (BigInt, BigInt) = {
+      val c = loopSums(s, lit(1L), col("color").isNull)
+      (c(0), c(1))
+    }
+    def budget(round: Int): Unit =
+      require(round <= maxRounds, s"greedyColoring did not converge in $maxRounds rounds")
+    // per-round output as a LIST of the rounds' colored rows, read from
+    // the cut states: nothing is re-pinned, the final union reads the
+    // same cached blocks
+    var coloredParts = List(state.filter(col("color").isNotNull))
+    val (nodes, live0) = counts(state)
+    var nLive = live0
+    var round = if (nodes > 0) 1 else 0
+    budget(round)
     while (nLive > 0) {
       round += 1
-      require(round <= maxRounds,
-        s"greedyColoring did not converge in $maxRounds rounds")
-      // ready = live nodes with no higher-priority LIVE neighbor.
-      // `blocked` stays duplicate-bearing: left_anti ignores right-side
-      // multiplicity, so the old per-round distinct was one whole
-      // exchange+agg of pure overhead.
-      val blocked = cur
-        .filter(prio(col("dst")) > prio(col("src")))
-        .select(col("src").as("node"))
-      val ready = live.join(blocked, Seq("node"), "left_anti")
-        .pin
-      // mex over already-colored neighbors (full adjacency, not cur —
-      // cur only keeps live-live edges)
-      val nbrColors = und
-        .join(ready.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(coloredAll.select(col("node").as("dst"), col("color")), Seq("dst"))
-        .groupBy(col("src").as("node"))
-        .agg(array_sort(collect_set(col("color"))).as("arr"))
-      val newlyColored = ready.join(nbrColors, Seq("node"), "left")
-        .select(col("node"),
-          when(col("arr").isNull, lit(0L)).otherwise(
-            array_min(array_except(sequence(lit(0L), size(col("arr")).cast("long")),
-              col("arr")))).as("color"))
-      coloredParts = coloredParts :+ newlyColored.pin
-      live = live.join(ready, Seq("node"), "left_anti").cut
-      nLive = live.count()
-      cur = cur
-        .join(live.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(live.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")).cut
+      budget(round)
+      state = step(state).cut
+      nLive = counts(state)._2
+      coloredParts = state.filter(col("color").isNotNull) :: coloredParts
     }
-    coloredAll
+    coloredParts.reduce(_ unionByName _)
+      .select(col("node").cast("long").as("node"), col("color"))
   }
 
   /** Greedy maximal matching by mutual-minimum edges: each round an
@@ -1340,5 +1347,24 @@ object Fixpoint {
       acc = acc.unionByName(frontier).distinct().cutEager
     }
     acc
+  }
+
+  /** Column sums (as longs, summed exactly) over `df` in ONE job that
+    * also materializes a lazily cut frame: the loop-control statistic of
+    * a vertex-state round rides on the round's own materialization
+    * instead of a global-aggregate exchange (an aggregate is two jobs
+    * under AQE). Null cells count 0; an empty frame sums to zeros. */
+  private[graph] def loopSums(df: DataFrame, cols: Column*): IndexedSeq[BigInt] = {
+    val n = cols.length
+    df.select(cols.map(_.cast("long")): _*).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val acc = Array.fill(n)(BigInt(0))
+        rows.foreach { r =>
+          var i = 0
+          while (i < n) { if (!r.isNullAt(i)) acc(i) += r.getLong(i); i += 1 }
+        }
+        Iterator(acc.toIndexedSeq)
+      }
+      .fold(IndexedSeq.fill(n)(BigInt(0)))((x, y) => x.zip(y).map { case (a, b) => a + b })
   }
 }

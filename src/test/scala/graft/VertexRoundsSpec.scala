@@ -1,0 +1,276 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.graph.{Centrality, Fixpoint}
+
+/** The vertex-state fixpoints — [[Fixpoint.greedyColoring]],
+  * [[Centrality.pagerank]] / [[Centrality.pagerankPersonalized]] and
+  * [[Fixpoint.connectedComponents]] / `incrementalComponents` — against
+  * plain-Scala references, across execution configs, and under a
+  * per-round job budget. */
+class VertexRoundsSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  type Edges = Seq[(Long, Long)]
+
+  private def df(s: SparkSession, e: Edges, a: String, b: String): DataFrame =
+    s.createDataFrame(e).toDF(a, b)
+
+  /** Seeded random multigraph over ids spread by 7: duplicates, reversed
+    * duplicates and a few self-loops included. */
+  private def randomGraph(seed: Int, n: Int, m: Int): Edges = {
+    val rnd = new scala.util.Random(seed)
+    def id() = rnd.nextInt(n).toLong * 7 + 3
+    val es = Seq.fill(m)((id(), id()))
+    es ++ es.take(m / 10).map(_.swap) ++ Seq.fill(3) { val v = id(); (v, v) }
+  }
+
+  private val star: Edges = (1L to 2000L).map(i => (0L, i))
+
+  // ---- plain-Scala references ------------------------------------------
+
+  private def md5Prefix64(id: Long): Long =
+    java.security.MessageDigest.getInstance("MD5").digest(id.toString.getBytes("UTF-8"))
+      .take(7).foldLeft(0L)((acc, b) => (acc << 8) | (b & 0xffL))
+
+  /** Jones–Plassmann with (md5-prefix64, id) priorities: every node takes
+    * the mex of its higher-priority neighbors' colors; its round is one
+    * more than the latest such neighbor's. Returns (colors, rounds). */
+  private def jonesPlassmann(e: Edges): (Map[Long, Long], Int) = {
+    val adj = e.filter { case (a, b) => a != b }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+    val prio = adj.keys.map(v => v -> ((md5Prefix64(v), v))).toMap
+    val ord = Ordering.Tuple2[Long, Long]
+    val colors = scala.collection.mutable.Map.empty[Long, Long]
+    val level = scala.collection.mutable.Map.empty[Long, Int]
+    adj.keys.toSeq.sortBy(prio)(ord.reverse).foreach { v =>
+      val higher = adj(v).filter(u => ord.gt(prio(u), prio(v)))
+      val used = higher.map(colors)
+      colors(v) = Iterator.from(0).map(_.toLong).find(c => !used(c)).get
+      level(v) = (higher.map(level) + 0).max + 1
+    }
+    (colors.toMap, if (level.isEmpty) 0 else level.values.max)
+  }
+
+  /** Integer PageRank exactly as documented: shares `r div |out|` over
+    * distinct out-edges, optional dangling share `S div N`, then
+    * `tel + (85 * mass) div 100`. */
+  private def pagerankRef(e: Edges, seeds: Option[Set[Long]], iterations: Int,
+                          dangling: Boolean): Map[Long, Long] = {
+    val out = e.distinct.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    val nodes = e.flatMap { case (a, b) => Seq(a, b) }.toSet ++ seeds.getOrElse(Set.empty)
+    val tel = nodes.map(v => v -> seeds.fold(150000L)(s => if (s(v)) 150000L else 0L)).toMap
+    var r = nodes.map(v => v -> seeds.fold(1000000L)(s => if (s(v)) 1000000L else 0L)).toMap
+    (1 to iterations).foreach { _ =>
+      val m = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
+      out.foreach { case (u, ds) => ds.foreach(d => m(d) += r(u) / ds.size) }
+      val share =
+        if (dangling) nodes.toSeq.filterNot(out.contains).map(r).sum / nodes.size else 0L
+      r = nodes.map(v => v -> (tel(v) + (85 * (m(v) + share)) / 100)).toMap
+    }
+    r
+  }
+
+  /** Union-find components labeled by their minimum node id. */
+  private def unionFind(e: Edges): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    e.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { parent(math.max(ra, rb)) = math.min(ra, rb) }
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  /** Rounds [[Fixpoint.connectedComponents]] runs: min-propagation plus
+    * a pointer jump per round, until the label sum stops moving. */
+  private def componentRounds(e: Edges): Int = {
+    val adj = e.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    var lab = adj.map { case (v, ns) => v -> (ns :+ v).min }
+    var rounds = 0
+    var moved = true
+    while (moved) {
+      val prop = adj.map { case (v, ns) => v -> (ns.map(lab) :+ lab(v)).min }
+      val next = prop.map { case (v, c) => v -> prop(c) }
+      moved = next.values.sum != lab.values.sum
+      lab = next
+      rounds += 1
+    }
+    rounds
+  }
+
+  private def pairs(d: DataFrame): Map[Long, Long] =
+    d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  // ---- coloring --------------------------------------------------------
+
+  test("greedyColoring equals sequential Jones-Plassmann on seeded random graphs") {
+    for (seed <- 1 to 3) {
+      val e = randomGraph(seed, n = 60, m = 150)
+      val (want, rounds) = jonesPlassmann(e)
+      val got = pairs(Fixpoint.greedyColoring(df(spark, e, "src", "dst"), maxRounds = rounds))
+      assert(got == want, s"seed $seed")
+      // the round budget is exact: one round fewer must throw
+      intercept[IllegalArgumentException](
+        Fixpoint.greedyColoring(df(spark, e, "src", "dst"), maxRounds = rounds - 1))
+    }
+  }
+
+  test("greedyColoring on a 2k-leaf star and on self-loops") {
+    // leaves that outrank the center, the center, the leaves below it
+    val (want, rounds) = jonesPlassmann(star)
+    assert(rounds == 3)
+    assert(pairs(Fixpoint.greedyColoring(df(spark, star, "src", "dst"))) == want)
+    // self-loops never constrain a color; a node with ONLY a self-loop
+    // has no proper edge and is not in the output
+    val loops = Seq((1L, 1L), (1L, 2L), (2L, 2L), (9L, 9L), (2L, 3L), (3L, 1L))
+    val got = pairs(Fixpoint.greedyColoring(df(spark, loops, "src", "dst")))
+    assert(got == jonesPlassmann(loops)._1)
+    assert(got.keySet == Set(1L, 2L, 3L) && got.values.toSet == Set(0L, 1L, 2L))
+  }
+
+  test("greedyColoring of an empty edge set is empty") {
+    val got = Fixpoint.greedyColoring(df(spark, Seq((5L, 5L)), "src", "dst"))
+    assert(got.columns.toSeq == Seq("node", "color") && got.collect().isEmpty)
+  }
+
+  // ---- pagerank --------------------------------------------------------
+
+  test("pagerank with and without dangling redistribution equals the integer reference") {
+    for (seed <- 1 to 2; dangling <- Seq(false, true)) {
+      val e = randomGraph(seed, n = 40, m = 70)
+      val got = pairs(Centrality.pagerank(df(spark, e, "src", "dst"), iterations = 4,
+        redistributeDangling = dangling))
+      assert(got == pagerankRef(e, None, 4, dangling), s"seed $seed dangling $dangling")
+    }
+    // a pure chain leaks mass to its sink unless redistributed
+    val chain = Seq((1L, 2L), (2L, 3L))
+    assert(pairs(Centrality.pagerank(df(spark, chain, "src", "dst"), 2)) ==
+      Map(1L -> 150000L, 2L -> 277500L, 3L -> 1000000L))
+    assert(pairs(Centrality.pagerank(df(spark, chain, "src", "dst"), 2, true)) ==
+      pagerankRef(chain, None, 2, dangling = true))
+  }
+
+  test("pagerankPersonalized equals the integer reference, isolated seeds included") {
+    import org.apache.spark.sql.functions.col
+    for (seed <- 1 to 2) {
+      val e = randomGraph(seed, n = 40, m = 70)
+      val seeds = Set(3L, 10L, 7L * 40 + 3) // the last one has no edges
+      val got = pairs(Centrality.pagerankPersonalized(df(spark, e, "src", "dst"),
+        spark.createDataFrame(seeds.toSeq.map(Tuple1(_))).toDF("node"), iterations = 3)
+        .select(col("node"), col("rank_x1e6")))
+      assert(got == pagerankRef(e, Some(seeds), 3, dangling = false), s"seed $seed")
+    }
+  }
+
+  // ---- components ------------------------------------------------------
+
+  test("connectedComponents and both incrementalComponents forms equal union-find") {
+    for (seed <- 1 to 3) {
+      val e = randomGraph(seed, n = 120, m = 90)
+      val want = unionFind(e)
+      assert(pairs(Fixpoint.connectedComponents(df(spark, e, "a", "b"))) == want)
+      val (oldE, newE) = e.splitAt(e.size / 2)
+      val prev = Fixpoint.connectedComponents(df(spark, oldE, "a", "b"))
+      assert(pairs(Fixpoint.incrementalComponents(prev, df(spark, newE, "a", "b"),
+        maxRounds = 20)) == want, s"seed $seed, contracted-star form")
+      assert(pairs(Fixpoint.incrementalComponents(prev, df(spark, newE, "a", "b"))) == want,
+        s"seed $seed, quotient form")
+    }
+    assert(Fixpoint.connectedComponents(df(spark, Seq.empty[(Long, Long)], "a", "b"))
+      .collect().isEmpty)
+  }
+
+  test("connectedComponents round count matches the reference, budget exact") {
+    val chain = (0L until 64L).map(i => (i, i + 1)) ++ Seq((200L, 201L))
+    val rounds = componentRounds(chain)
+    val d = df(spark, chain, "a", "b")
+    assert(pairs(Fixpoint.connectedComponents(d, maxRounds = rounds)) == unionFind(chain))
+    // one round fewer still lands on the fixpoint (the last round only
+    // confirms it) — two fewer must throw
+    assert(pairs(Fixpoint.connectedComponents(d, maxRounds = rounds - 1)) == unionFind(chain))
+    intercept[IllegalStateException](Fixpoint.connectedComponents(d, maxRounds = rounds - 2))
+  }
+
+  // ---- execution-config invariance -------------------------------------
+
+  test("rewritten operators give identical rows across partitions, AQE and lineage mode") {
+    val e = randomGraph(7, n = 50, m = 90)
+    val seeds = Seq(Tuple1(3L), Tuple1(17L))
+    def run(s: SparkSession): Seq[Seq[(Long, Long)]] = {
+      def rows(d: DataFrame) = d.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+      Seq(
+        rows(Fixpoint.greedyColoring(df(s, e, "src", "dst"))),
+        rows(Centrality.pagerank(df(s, e, "src", "dst"), 3)),
+        rows(Centrality.pagerank(df(s, e, "src", "dst"), 3, redistributeDangling = true)),
+        rows(Centrality.pagerankPersonalized(df(s, e, "src", "dst"),
+          s.createDataFrame(seeds).toDF("node"), 3)),
+        rows(Fixpoint.connectedComponents(df(s, e, "a", "b"))))
+    }
+    val ckpt = Files.createTempDirectory("graft-vr-ckpt").toString
+    val want = run(spark)
+    assert(want.head.toMap == jonesPlassmann(e)._1)
+    for (parts <- Seq(1, 7); aqe <- Seq(true, false); mode <- Seq("local", "reliable")) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      s.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      s.conf.set("graft.lineage.mode", mode)
+      s.conf.set("graft.lineage.dir", ckpt)
+      assert(run(s) == want, s"partitions=$parts aqe=$aqe mode=$mode")
+    }
+  }
+
+  // ---- job budget --------------------------------------------------------
+
+  /** Spark jobs `body` runs, counted by a listener. */
+  private def jobsOf(s: SparkSession)(body: => Unit): Int = {
+    val n = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    Bridge.waitListenerBus(s)
+    s.sparkContext.addSparkListener(l)
+    try { body; Bridge.waitListenerBus(s); n.get }
+    finally s.sparkContext.removeSparkListener(l)
+  }
+
+  test("job budget: coloring runs two jobs per round, components three") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    // nullable id columns, as read from files: the plans must not split
+    // an exchange over inferred null filters
+    def nullableDf(e: Edges, a: String, b: String) =
+      s.createDataFrame(e.map { case (x, y) => (Option(x), Option(y)) }).toDF(a, b)
+    val e = randomGraph(11, n = 80, m = 200)
+    val colorRounds = jonesPlassmann(e)._2
+    assert(colorRounds >= 4)
+    // round 1 is the state build (one shuffle + one live count), every
+    // further round one shuffle + one live count, then the collect
+    val colorJobs = jobsOf(s)(Fixpoint.greedyColoring(nullableDf(e, "src", "dst")).collect())
+    assert(colorJobs <= 2 * colorRounds + 1, s"$colorJobs jobs for $colorRounds rounds")
+    val chain = (0L until 64L).map(i => (i, i + 1))
+    val ccRounds = componentRounds(chain)
+    assert(ccRounds >= 4)
+    // state build (shuffle + label sum), per round the aggregation and
+    // pointer-jump exchanges plus the label sum, then the collect
+    val ccJobs = jobsOf(s)(Fixpoint.connectedComponents(nullableDf(chain, "a", "b")).collect())
+    assert(ccJobs <= 3 * ccRounds + 3, s"$ccJobs jobs for $ccRounds rounds")
+  }
+}
