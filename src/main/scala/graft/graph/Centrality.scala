@@ -165,10 +165,7 @@ object Centrality {
     * model — silently dropping them would inflate Q). Output one row:
     * (n_communities, m_edges, q_ppm). */
   def modularity(edges: DataFrame, assignment: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct().pin
+    val und = undirected(edges).pin
     val asg = assignment.select(col("node"), col("community"))
     def lab(end: Column) = coalesce(col("community"), end)
     val aLab = und.join(asg.withColumnRenamed("node", "a"), Seq("a"), "left")
@@ -205,10 +202,7 @@ object Centrality {
   def richClub(edges: DataFrame, ks: Seq[Long]): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 0), "need non-negative thresholds")
     require(ks.distinct.size == ks.size, "duplicate thresholds")
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct().pin
+    val und = undirected(edges).pin
     val deg = und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -295,10 +289,7 @@ object Centrality {
     * (the ratio is undefined, not 0 — a 0 would read as a perfect
     * cluster). */
   def conductance(edges: DataFrame, assignment: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct().pin
+    val und = undirected(edges).pin
     val asg = assignment.select(col("node"), col("community"))
     def lab(end: Column) = coalesce(col("community"), end)
     val both = und
@@ -398,11 +389,7 @@ object Centrality {
     // union disappears (guide §2.3: shuffle fewer bytes; §2.4: remove
     // the duplicate-direction pass outright). Degrees come from one
     // in-row explode of the endpoint pair — same one-shuffle census.
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .pin
+    val und = undirected(edges).pin
     val deg = und.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
     def dec(c: Column) = c.cast("decimal(38,0)")
@@ -430,9 +417,7 @@ object Centrality {
   def coOccurrenceEdges(df: DataFrame, groupCol: String, itemCol: String): DataFrame = {
     val grouped = df.select(col(groupCol).as("g"), col(itemCol).as("i"))
       .groupBy(col("g")).agg(array_sort(collect_set(col("i"))).as("is"))
-    grouped.select(explode(flatten(transform(col("is"), (x, i) =>
-        transform(slice(col("is"), i + lit(2), size(col("is"))),
-          y => struct(x.as("src"), y.as("dst")))))).as("e"))
+    grouped.select(explode(orderedPairs(col("is"), "src", "dst")).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
   }
@@ -450,9 +435,7 @@ object Centrality {
                          minCount: Long): DataFrame = {
     val grouped = df.select(col(groupCol).as("g"), col(itemCol).as("i"))
       .groupBy(col("g")).agg(array_sort(collect_set(col("i"))).as("is"))
-    grouped.select(explode(flatten(transform(col("is"), (x, i) =>
-        transform(slice(col("is"), i + lit(2), size(col("is"))),
-          y => struct(x.as("src"), y.as("dst")))))).as("e"))
+    grouped.select(explode(orderedPairs(col("is"), "src", "dst")).as("e"))
       .groupBy(col("e.src").as("src"), col("e.dst").as("dst"))
       .agg(count(lit(1)).as("n_groups"))
       .filter(col("n_groups") >= minCount)
@@ -483,66 +466,33 @@ object Centrality {
     * spam-farm flagging (link farms are triangle-dense; legitimate
     * topical clusters are too, orphan spam is not).
     *
-    * Orient every edge from its lower to its higher endpoint in
-    * (degree, id) order and close wedges with two equi-joins:
-    * o1(u,v) ⋈ o2(v,w) ⋈ o3(u,w) finds every triangle exactly once as
-    * u ≺ v ≺ w. Per-node counts (orientation-invariant) are the exploded
-    * corner union aggregated once. Nodes in no triangle report 0.
+    * Edge iterator over compact-forward adjacency (Schank & Wagner
+    * 2005): [[closeWedges]] closes every triangle u ≺ v ≺ w exactly once,
+    * at its base edge (u, v), as w ∈ N⁺(u) ∩ N⁺(v) — an in-row
+    * codegen'd array_intersect; the three corners are exploded and
+    * counted in one aggregation. Per-node counts are
+    * orientation-invariant. Nodes in no triangle report 0.
     *
-    * Scale: the oriented wedge join generates Σ_v deg⁺(v)² candidates.
-    * Orienting by DEGREE rank — not node id — is what makes the classic
-    * compact-forward O(E^1.5) bound real: every out-degree is at most
-    * O(√E) because a node keeps only neighbors of higher degree, so a
-    * hub's wedges are charged to its (few, high-degree) successors. An
-    * id orientation has no such bound — a low-id hub keeps its full
-    * neighborhood and the wedge join degenerates to Σ deg². The degree
-    * attach is two node-table equi-joins before the wedge join; the
-    * closing join is an equi-join on (u, w) against the oriented set;
-    * everything shuffles on uniform composite keys, nothing is
-    * broadcast-sized by assumption. */
+    * Scale: Σ d⁺² intersect work. Orienting by DEGREE rank — not node
+    * id — is what makes the compact-forward O(E^1.5) bound real: every
+    * out-degree is at most O(√E) because a node keeps only neighbors of
+    * higher degree, so a hub's wedges are charged to its (few,
+    * high-degree) successors. An id orientation has no such bound — a
+    * low-id hub keeps its full neighborhood and the work degenerates to
+    * Σ deg². Only actual triangles are exploded (3 corners each); the
+    * oriented set is shuffled once, into the adjacency
+    * ([[outAdjacency]]). */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val o = orientByDegree(edges).pin
-    // Edge iterator over compact-forward adjacency (Schank & Wagner
-    // 2005) instead of the 2-join wedge pipeline: triangle u≺v≺w is
-    // closed exactly once, at its base edge (u, v), as
-    // w ∈ N⁺(u) ∩ N⁺(v) — an in-row codegen'd array_intersect. The
-    // wedge join materialized and SHUFFLED Σ C(d⁺, 2) candidate rows
-    // (sf0.1 co-purchase graph: 41M wedge rows for 1.2M edges / 1.9M
-    // triangles) and hash-joined them against the edge set; here each
-    // edge is shuffled once carrying two adjacency arrays bounded by
-    // the orientation's d⁺ = O(√E), and only ACTUAL triangles are
-    // exploded (3 corners each). Same asymptotic Σ d⁺² work, paid as a
-    // fused per-row loop instead of exchanged+probed rows (guide §2.3
-    // "shuffle keys and metadata instead of payloads", §2.4).
-    // Re-widen before the heavy stages: AQE's size-based coalescing
-    // sees only the oriented set's ~16 bytes/row, not the Σ d⁺²
-    // intersect work each row fans into downstream, and collapses the
-    // whole edge iterator onto 1-4 tasks (measured: 32 tasks across 10
-    // stages for the full query — the r17 "slower at 32 cores than 8"
-    // signature). One explicit hash exchange on u at the session's
-    // configured shuffle parallelism (the scale knob, not a constant)
-    // feeds the adjacency agg (same key — no further exchange); the
-    // adjacency is pinned in its own execution, so the intersect join's
-    // probe side repeats that exchange rather than reusing it. The
-    // intersect keeps the exchange's width while both adjacency joins
-    // broadcast (guide §2.5: compute-heavy narrow rows are exactly what
-    // size-based coalescing cannot see).
-    val owide = widenByKey(o, col("u"))
-    val adj = owide.groupBy(col("u")).agg(collect_list(col("v")).as("ns")).pin
-    val closed = owide
-      .join(adj.select(col("u"), col("ns").as("nu")), Seq("u"))
-      .join(adj.select(col("u").as("v"), col("ns").as("nv")), Seq("v"))
-      .select(col("u"), col("v"),
-        array_intersect(col("nu"), col("nv")).as("ws"))
-    // corner census in one scan: the third corners ride the intersect
-    // result; u and v each count once per triangle on their base edge
-    val corners = closed
+    val adj = outAdjacency(undirected(edges))
+    // the third corners ride the intersect result; u and v each count
+    // once per triangle on their base edge
+    val corners = closeWedges(adj)
       .select(explode(concat(col("ws"),
         array_repeat(col("u"), size(col("ws"))),
         array_repeat(col("v"), size(col("ws"))))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n"))
-    val nodes = o.select(col("u").as("node"))
-      .unionByName(o.select(col("v").as("node")))
+    // every non-isolated node has an out-edge or is someone's out-neighbor
+    val nodes = adj.select(explode(concat(array(col("u")), col("ns"))).as("node"))
       .distinct()
     nodes.join(corners, Seq("node"), "left")
       .select(col("node"), coalesce(col("n"), lit(0L)).as("n_triangles"))
@@ -554,46 +504,31 @@ object Centrality {
     * but shallow link farms (a K4 needs all six pairwise ties).
     *
     * Same compact-forward discipline as [[triangleCount]], one order
-    * higher: orient by (degree, id) rank, close each oriented triangle
-    * u≺v≺w, then intersect the out-neighborhoods — a K4 u≺v≺w≺x is a
-    * triangle (u,v,w) plus x adjacent to all three, found by joining
-    * the triangle's (v,w) corner against oriented wedges and closing
-    * (u,x). Every K4 counted exactly once under the total order. The
-    * degree orientation keeps out-degrees O(√E), so the candidate
-    * volume is Σ deg⁺² per closure level — the O(E^1.5)-flavored bound,
-    * not Σ deg². Output one row: (n_k4). */
+    * higher: [[closeWedges]] yields every oriented triangle u ≺ v ≺ w
+    * with ws = N⁺(u) ∩ N⁺(v); a fourth node x completes a K4 exactly
+    * when x ∈ ws ∩ N⁺(w). So n_k4 = Σ over closed (u, v, w ∈ ws) of
+    * |ws ∩ N⁺(w)| — one more adjacency join and in-row intersect. Each
+    * K4 a ≺ b ≺ c ≺ d is counted exactly once: at base edge (a, b), with
+    * w = c. The degree orientation keeps out-degrees O(√E), so the work
+    * is Σ d⁺² per closure level, not Σ deg². Output one row: (n_k4). */
   def cliqueCensusK4(edges: DataFrame): DataFrame = {
-    val o = orientByDegree(edges).pin
-    val tris = o.as("e1")
-      .join(o.as("e2"), col("e1.v") === col("e2.u"))
-      .join(o.as("e3"),
-        col("e1.u") === col("e3.u") && col("e2.v") === col("e3.v"))
-      .select(col("e1.u").as("x"), col("e1.v").as("y"), col("e2.v").as("z"))
-    tris.as("t")
-      // x adjacent beyond z in oriented order: close z≺w via (z, w) ...
-      .join(o.as("e4"), col("t.z") === col("e4.u"))
-      // ... and require the two remaining ties (y, w) and (x, w)
-      .join(o.as("e5"),
-        col("t.y") === col("e5.u") && col("e4.v") === col("e5.v"), "left_semi")
-      .join(o.as("e6"),
-        col("t.x") === col("e6.u") && col("e4.v") === col("e6.v"), "left_semi")
-      .agg(count(lit(1)).as("n_k4"))
+    val adj = outAdjacency(undirected(edges))
+    closeWedges(adj)
+      .select(explode(col("ws")).as("w"), col("ws"))
+      .join(adj.select(col("u").as("w"), col("ns").as("nw")), Seq("w"))
+      .agg(coalesce(sum(size(array_intersect(col("ws"), col("nw")))), lit(0L))
+        .as("n_k4"))
   }
 
   /** Local clustering coefficient per node: 2·triangles / (deg·(deg−1))
     * in exact millionths — how close each node's neighborhood is to a
     * clique (Watts & Strogatz 1998). The link-farm/cohesion signal read
     * together with [[triangleCount]]: high coefficient + high degree =
-    * densely interlinked cluster. Cost is [[triangleCount]] (oriented
-    * wedge join, O(E^1.5)) plus one degree aggregation; nodes with
-    * degree < 2 report 0. */
+    * densely interlinked cluster. Cost is [[triangleCount]] (one
+    * adjacency intersect, O(E^1.5)) plus one degree aggregation; nodes
+    * with degree < 2 report 0. */
   def clusteringCoefficient(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .pin
+    val und = undirected(edges).pin
     val deg = und.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
     triangleCount(und.select(col("a").as("src"), col("b").as("dst")))
@@ -745,11 +680,7 @@ object Centrality {
     * center contributes 50M wedge pairs); cap or sample hub
     * neighborhoods upstream when predicting over power-law graphs. */
   def linkPrediction(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct().pin
+    val und = undirected(edges).pin
     val adj = und.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -757,9 +688,7 @@ object Centrality {
       .groupBy(col("node"), col("deg"))
       .agg(array_sort(collect_set(col("nbr"))).as("nbrs"))
     val pairs = centers.select(col("deg").as("wdeg"),
-      explode(flatten(transform(col("nbrs"), (x, i) =>
-        transform(slice(col("nbrs"), i + lit(2), size(col("nbrs"))),
-          y => struct(x.as("u"), y.as("v")))))).as("p"))
+      explode(orderedPairs(col("nbrs"), "u", "v")).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"), col("wdeg"))
     val scored = pairs.groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("common_neighbors"),
@@ -783,55 +712,32 @@ object Centrality {
     * unreinforced — and as an edge-sampling weight that preserves
     * community structure.
     *
-    * Cost is exactly one oriented wedge join (the [[triangleCount]]
-    * O(E^1.5) bound via [[orientByDegree]]) plus one in-row explode of
-    * the three edges per triangle and a map-side-combinable count. Edges
-    * in no triangle are kept with support 0 via one left join against the
-    * canonical edge set. Output: (a, b, support) with a < b. */
+    * Cost is one adjacency intersect ([[closeWedges]], the
+    * [[triangleCount]] O(E^1.5) bound via [[orientByDegree]]) plus one
+    * in-row explode of the three edges per triangle and a
+    * map-side-combinable count. Edges in no triangle are kept with
+    * support 0 via one left join against the canonical edge set.
+    * Output: (a, b, support) with a < b. */
   def edgeSupport(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    supportOn(und.pin)
+    val und = undirected(edges).pin
+    und.join(supportOn(und), Seq("a", "b"), "left")
+      .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
   }
 
-  /** Support over an already-canonical (a < b, distinct) edge set. */
+  /** (a, b, support) for the edges of an already-canonical (a < b,
+    * distinct) edge set that lie in at least one triangle. */
   private def supportOn(und: DataFrame): DataFrame = {
-    // Edge iterator over compact-forward adjacency, same shape as
-    // [[triangleCount]]: triangle u≺v≺w closes exactly once at its base
-    // edge (u, v) via the in-row intersect of the two out-neighbor
-    // arrays, instead of shuffling Σ C(d⁺, 2) wedge rows into a closing
-    // hash join — which ktruss paid once per PEEL ROUND. The oriented
-    // set is consumed by the adjacency agg and the two attach joins
-    // (pinHot as before: once per peel round in ktruss).
-    val o = orientByDegree(und.select(col("a").as("src"), col("b").as("dst")))
-      .pinHot
-    // same re-widening as [[triangleCount]]: the intersect stage's
-    // per-row work is invisible to AQE's size-based coalescing
-    val owide = widenByKey(o, col("u"))
-    val adj = owide.groupBy(col("u")).agg(collect_list(col("v")).as("ns")).pin
-    val closed = owide
-      .join(adj.select(col("u"), col("ns").as("nu")), Seq("u"))
-      .join(adj.select(col("u").as("v"), col("ns").as("nv")), Seq("v"))
-      .select(col("u"), col("v"),
-        array_intersect(col("nu"), col("nv")).as("ws"))
     def edge(p: Column, q: Column): Column =
       struct(least(p, q).as("a"), greatest(p, q).as("b"))
-    // one scan of the closed-triangle set: the three member edges of
-    // each (u, v, w) — (u,v) once per w plus the two w-edges — exploded
-    // in-row and counted map-side
-    val hits = closed
+    // the three member edges of each closed (u, v, w) — (u,v) once per
+    // w plus the two w-edges — exploded in-row and counted map-side
+    closeWedges(outAdjacency(und))
       .select(explode(concat(
         array_repeat(edge(col("u"), col("v")), size(col("ws"))),
         transform(col("ws"), w => edge(col("u"), w)),
         transform(col("ws"), w => edge(col("v"), w)))).as("e"))
       .groupBy(col("e.a").as("a"), col("e.b").as("b"))
       .agg(count(lit(1)).as("support"))
-    und.join(hits, Seq("a", "b"), "left")
-      .select(col("a"), col("b"),
-        coalesce(col("support"), lit(0L)).as("support"))
   }
 
   /** Bounded k-truss peel (Cohen 2008): `rounds` synchronous rounds of
@@ -846,23 +752,20 @@ object Centrality {
     * converged case. Returns the surviving edges with the support each
     * had in the final pre-filter subgraph: (a, b, support), a < b.
     *
-    * Per round: one oriented wedge join over the CURRENT survivor set
-    * (shrinking monotonically, so later rounds are cheaper), lineage
+    * Per round: [[supportOn]] over the CURRENT survivor set (shrinking
+    * monotonically, so later rounds are cheaper) — one degree census,
+    * one adjacency build and one adjacency intersect — lineage
     * truncated per round. Requires k ≥ 3 so the support-0 edges (absent
-    * from the triangle census) can never survive the filter. */
+    * from the triangle census) can never survive the filter, and a
+    * round needs no join back to the survivor set. */
   def ktruss(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     require(rounds >= 1, s"need at least one peel round, got $rounds")
-    // pinHot: every peel round's support join reads the current edge
-    // set three times (two wedge arms + the closing join) — the r15
+    // pinHot: every peel round reads the current edge set three times
+    // (the degree census's two arms and the orientation join) — the r15
     // paired runs measured the per-re-read SER deserialization at
     // +0.6s for this gate at sf0.1
-    var cur = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .pinHot
+    var cur = undirected(edges).pinHot
     var out: DataFrame = null
     for (_ <- 1 to rounds) {
       out = supportOn(cur).filter(col("support") >= lit(k.toLong - 2L))
@@ -889,19 +792,13 @@ object Centrality {
     * cap hub neighborhoods upstream on power-law graphs.
     * Output: (u, v, common_neighbors, rectangles) with u < v, w ≥ 2. */
   def rectangleCensus(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = undirected(edges)
     val adj = und.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
     val centers = adj.groupBy(col("node"))
       .agg(array_sort(collect_set(col("nbr"))).as("nbrs"))
     val wedges = centers.select(
-      explode(flatten(transform(col("nbrs"), (x, i) =>
-        transform(slice(col("nbrs"), i + lit(2), size(col("nbrs"))),
-          y => struct(x.as("u"), y.as("v")))))).as("p"))
+      explode(orderedPairs(col("nbrs"), "u", "v")).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
     wedges.groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("common_neighbors"))
@@ -1105,11 +1002,7 @@ object Centrality {
     * the current best node set stays materialized. Output: the best
     * round's nodes with that round's (sub_v, sub_e) stats on each row. */
   def densestSubgraph(edges: DataFrame, maxRounds: Int = 40): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct().pin
+    val und = undirected(edges).pin
     var nodes = und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node")))
       .distinct().pin
@@ -1159,11 +1052,7 @@ object Centrality {
     * empties, so the budget only caps pathological chains).
     * Output: one row (far_node, ecc_seed, diameter_lb). */
   def doubleSweepDiameter(edges: DataFrame, maxDepth: Int): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct().pin
+    val und = undirected(edges).pin
     val sym = und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
     val seed = sym.agg(min(col("src")).as("node"))
@@ -1173,6 +1062,59 @@ object Centrality {
     val d2 = Fixpoint.bfsDistances(sym, far.select(col("node")), maxDepth)
     far.select(col("node").as("far_node"), col("dist").as("ecc_seed"))
       .crossJoin(broadcast(d2.agg(max(col("dist")).as("diameter_lb"))))
+  }
+
+  /** The canonical undirected simple edge set of a (src, dst) frame:
+    * (a = least, b = greatest) with a ≠ b, duplicates merged. */
+  private[graft] def undirected(edges: DataFrame): DataFrame =
+    edges
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+
+  /** Every pair (arr[i], arr[j]) with i < j of an array column, as
+    * structs with fields (`first`, `second`) — the in-row k² pair
+    * expansion of a group's or a node's sorted array; exploded, the
+    * pairs of a sorted array come out with first < second. */
+  private[graft] def orderedPairs(arr: Column, first: String, second: String): Column =
+    flatten(transform(arr, (x, i) =>
+      transform(slice(arr, i + lit(2), size(arr)), y => struct(x.as(first), y.as(second)))))
+
+  /** Compact-forward out-adjacency of a canonical edge set: (u, ns) with
+    * ns = N⁺(u) under [[orientByDegree]], one row per node with an
+    * out-edge, pinned. The oriented set is shuffled once, by
+    * [[widenByKey]] on u, and the aggregation runs in the stage right
+    * after that exchange. */
+  private def outAdjacency(und: DataFrame): DataFrame =
+    widenByKey(orientByDegree(und), col("u"))
+      .groupBy(col("u")).agg(collect_list(col("v")).as("ns"))
+      .pin
+
+  /** Wedge closure over [[outAdjacency]]: (u, v, ws) for every oriented
+    * edge u ≺ v with ws = N⁺(u) ∩ N⁺(v), so each triangle u ≺ v ≺ w
+    * appears exactly once, at its base edge (u, v), as w ∈ ws; ws is
+    * null when v has no out-edge (such an edge closes no triangle). The
+    * oriented edges are the adjacency's own rows exploded in-row, with
+    * no exchange; N⁺(v) and then N⁺(u) are attached by key, and the
+    * intersect is an in-row codegen'd array_intersect bounded by
+    * d⁺ = O(√E).
+    *
+    * Both attach joins read the same projection of the adjacency, so
+    * they share one exchange (a ReusedExchange). The arrays join the
+    * rows only after the first join: when the adjacency's inherited size
+    * estimate plans a sort-merge join, the one leaf exchange AQE runs
+    * before it turns the joins into broadcasts carries the (u, v) pairs,
+    * not Σ d⁺² array payload. The joins are left outer so that only the
+    * adjacency can become the broadcast side: with inner joins AQE
+    * broadcast whichever small leaf stage finished first, and a warm
+    * run could plan (and compile) a different join. */
+  private def closeWedges(adj: DataFrame): DataFrame = {
+    def nbrs(k: String, n: String) = adj.select(col("u").as(k), col("ns").as(n))
+    adj.select(col("u"), explode(col("ns")).as("v"))
+      .join(nbrs("v", "nv"), Seq("v"), "left")
+      .join(nbrs("w", "nu"), col("u") === col("w"), "left")
+      .select(col("u"), col("v"), array_intersect(col("nu"), col("nv")).as("ws"))
   }
 
   /** Hash-repartition a NARROW frame whose downstream per-row work is
@@ -1185,16 +1127,18 @@ object Centrality {
     * scale it is the same width every other exchange gets, never a
     * local constant.
     *
-    * What the executed `graph_triangles` plan shows: the explicit
+    * What the executed triangle-operator plans show: the explicit
     * numPartitions makes a REPARTITION_BY_NUM exchange, which AQE never
-    * coalesces, and an aggregation on the same key runs in the stage
-    * right after it with no further exchange. Width holds only within
-    * that stage: the intersect stays there because both adjacency
-    * joins broadcast, while a sort-merge join would re-shuffle on its
-    * own key (ENSURE_REQUIREMENTS, coalescable again). Every query
-    * execution that reads the widened frame repeats the exchange — the
-    * pinned adjacency aggregation and the intersect's probe side are
-    * two shuffles, not one reused one. */
+    * coalesces, and [[outAdjacency]]'s aggregation on the same key runs
+    * in the stage right after it with no further exchange; the pinned
+    * adjacency keeps that partition count. [[closeWedges]] explodes the
+    * pinned rows in place, so the intersect runs at the exchange's
+    * width whenever its adjacency joins broadcast — the oriented set is
+    * shuffled exactly once. When the first join is planned sort-merge (a
+    * large inherited size estimate, as in `graph_ktruss` round 2) the
+    * (u, v) pairs re-shuffle on v (ENSURE_REQUIREMENTS, coalescable
+    * again). [[outAdjacency]] is the one caller: every triangle-shaped
+    * operator widens there. */
   private def widenByKey(df: DataFrame, keys: Column*): DataFrame =
     df.repartition(
       df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
@@ -1202,23 +1146,22 @@ object Centrality {
   /** A typed null matching `df`'s column `c`, for union arms that lack it. */
   private def nullOf(df: DataFrame, c: String): Column = lit(null).cast(df.schema(c).dataType)
 
-  /** Degree-ordered orientation of an undirected simple graph: each
-    * distinct edge appears once as (u, v) with
-    * (deg(u), u) < (deg(v), v). Library-private so the spec can assert
-    * the compact-forward guarantee directly (a hub's out-degree is 0 —
-    * all its lower-degree neighbors point AT it). */
-  private[graft] def orientByDegree(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+  /** Degree-ordered orientation of a canonical edge set ([[undirected]]):
+    * each edge appears once as (u, v) with (deg(u), u) < (deg(v), v).
+    * Library-private so the spec can assert the compact-forward
+    * guarantee directly (a hub's out-degree is 0 — all its lower-degree
+    * neighbors point AT it). */
+  private[graft] def orientByDegree(und: DataFrame): DataFrame = {
     val deg = und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    // left joins: every endpoint has a degree row, so the rows are the
+    // inner join's, but only the degree side can become the broadcast
+    // (see [[closeWedges]] on AQE's build-side race); both sides are
+    // one projection of `deg`, so they share one exchange
     und
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
+      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"), "left")
+      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"), "left")
       .select(
         // a < b already, so the id tie-break on equal degrees keeps a first
         when(col("da") < col("db") ||

@@ -981,11 +981,7 @@ object Fixpoint {
     * Output: one row per matched edge (edge_u, edge_v), edge_u <
     * edge_v. Throws past `maxRounds`. */
   def maximalMatching(edges: DataFrame, maxRounds: Int = 24): DataFrame = {
-    val canon = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val canon = Centrality.undirected(edges)
       .withColumn("ep", struct(
         graft.functions.HashFunctions.md5_prefix64(
           concat(col("a").cast("string"), lit(":"), col("b").cast("string")))
@@ -1040,19 +1036,16 @@ object Fixpoint {
     * ≥ 2 distinct clusters — the bridges curation wants kept) and
     * OUTLIERs.
     *
-    * Cost: one [[Centrality.edgeSupport]] wedge pass (O(E^1.5) via
-    * degree orientation), one degree agg, the ε filter, a CC fixpoint
+    * Cost: one [[Centrality.edgeSupport]] adjacency intersect (O(E^1.5)
+    * via degree orientation), one degree agg, the ε filter, a CC fixpoint
     * over the (sparse) core ε-edges, two attachment joins. Cluster id =
     * smallest member core id. Output: (node, role, cluster), cluster
     * null for hub/outlier. */
   def scanClusters(edges: DataFrame, epsX1e3: Long, mu: Int): DataFrame = {
     require(epsX1e3 >= 1 && epsX1e3 <= 1000, "eps is (0, 1] scaled by 1e3")
     require(mu >= 2, "mu must be >= 2 (mu = 1 makes every node a core)")
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct().pinHot // read 4x: degree union, support, undSym, rest
+    val und = Centrality.undirected(edges)
+      .pinHot // read 4x: degree union, support, undSym, rest
     val deg = und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Lineage._
+import graft.graph.Centrality
 
 /** Product/ops analytics over event and fact tables — the read-side
   * battery a sync'd asset graph or training-data lake feeds (reference
@@ -343,9 +344,7 @@ object Analytics {
     val baskets = ti.groupBy(col("_t"))
       .agg(array_sort(collect_set(col("_i"))).as("items"))
     val pairs = baskets.select(
-        explode(flatten(transform(col("items"), (x, i) =>
-          transform(slice(col("items"), i + lit(2), size(col("items"))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
+        explode(Centrality.orderedPairs(col("items"), "a", "b")).as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("n_ab"))
       .filter(col("n_ab") >= minSupport)

@@ -125,8 +125,8 @@ object StreamQueries {
 
   /** Triangle counting over the part co-purchase graph (parts appearing
     * in the same order are linked) — the cohesion/link-farm signal of
-    * webgraph curation ([[graft.graph.Centrality.triangleCount]]: oriented
-    * wedge join, O(E^1.5) worst-case, never Σdeg²). */
+    * webgraph curation ([[graft.graph.Centrality.triangleCount]]: one
+    * oriented-adjacency intersect, O(E^1.5) worst-case, never Σdeg²). */
   def graphTriangles(spark: SparkSession, dir: String): DataFrame = {
     val edges = graft.graph.Centrality.coOccurrenceEdges(
       Tables.lineitem(spark, dir), "l_orderkey", "l_partkey")
@@ -137,7 +137,8 @@ object StreamQueries {
   /** Per-edge triangle support over the co-purchase graph restricted to
     * every second part — the k-truss building block and edge-level
     * cohesion signal ([[graft.graph.Centrality.edgeSupport]]: one
-    * oriented wedge join, edges with no triangles kept at support 0). */
+    * oriented-adjacency intersect, edges with no triangles kept at
+    * support 0). */
   def graphEdgeSupport(spark: SparkSession, dir: String): DataFrame = {
     val edges = graft.graph.Centrality.coOccurrenceEdges(
       Tables.lineitem(spark, dir).filter(col("l_partkey") % 2 === 0),

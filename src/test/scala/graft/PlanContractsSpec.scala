@@ -94,10 +94,12 @@ class PlanContractsSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"))
   }
 
-  test("k4 census: the two closing ties are semi-joins") {
+  test("k4 census: the closing ties are in-row adjacency intersects") {
     val p = plan("graph_k4_census")
-    assert(p.contains("LeftSemi"), "tie checks must stay semi-joins (no payload fan-out)")
+    assert(p.contains("array_intersect"),
+      "ties must close in-row over the adjacency arrays (no candidate join chain)")
     assert(!p.contains("BroadcastNestedLoopJoin"))
+    assert(!p.contains("CartesianProduct"))
   }
 
   test("fellegi-sunter classify: the pattern table broadcasts") {

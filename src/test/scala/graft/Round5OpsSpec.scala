@@ -213,7 +213,7 @@ class Round5OpsSpec extends AnyFunSuite {
     val star = (1L to 60L).map(s => (0L, s))
     val rim = Seq((1L, 2L), (3L, 4L)) // two triangles with the hub
     val edges = (star ++ rim).toDF("src", "dst")
-    val outdeg = Centrality.orientByDegree(edges)
+    val outdeg = Centrality.orientByDegree(Centrality.undirected(edges))
       .groupBy("u").agg(count(lit(1)).as("d"))
       .as[(Long, Long)].collect().toMap
     assert(!outdeg.contains(0L), s"hub must have out-degree 0, got ${outdeg.get(0L)}")

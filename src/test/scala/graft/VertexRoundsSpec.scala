@@ -12,9 +12,11 @@ import graft.graph.{Centrality, Fixpoint}
 
 /** The vertex-state fixpoints — [[Fixpoint.greedyColoring]],
   * [[Centrality.pagerank]] / [[Centrality.pagerankPersonalized]] and
-  * [[Fixpoint.connectedComponents]] / `incrementalComponents` — against
-  * plain-Scala references, across execution configs, and under a
-  * per-round job budget. */
+  * [[Fixpoint.connectedComponents]] / `incrementalComponents` — and the
+  * triangle-shaped operators over one adjacency intersect
+  * ([[Centrality.triangleCount]], `edgeSupport`, `ktruss`,
+  * `cliqueCensusK4`, `clusteringCoefficient`) against plain-Scala
+  * references, across execution configs, and under a job budget. */
 class VertexRoundsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -37,6 +39,23 @@ class VertexRoundsSpec extends AnyFunSuite {
   }
 
   private val star: Edges = (1L to 2000L).map(i => (0L, i))
+
+  /** Complete graph over `ids`. */
+  private def clique(ids: Seq[Long]): Edges =
+    for (a <- ids; b <- ids if a < b) yield (a, b)
+
+  /** K5 and K6 plus disjoint pieces (a triangle, a path, a small star),
+    * with a reversed duplicate and a self-loop. */
+  private val cliques: Edges =
+    clique(100L to 104L) ++ clique(200L to 205L) ++
+      Seq((300L, 301L), (301L, 302L), (302L, 300L), (400L, 401L), (401L, 402L),
+        (500L, 501L), (500L, 502L), (500L, 503L), (201L, 200L), (300L, 300L))
+
+  /** A 60-spoke hub with the LOWEST id and a rim path through the
+    * spokes (59 triangles with the hub) plus the chord (1, 3), which
+    * makes {0, 1, 2, 3} a K4. */
+  private val hubRim: Edges =
+    (1L to 60L).map(s => (0L, s)) ++ (1L until 60L).map(s => (s, s + 1)) :+ ((1L, 3L))
 
   // ---- plain-Scala references ------------------------------------------
 
@@ -208,14 +227,104 @@ class VertexRoundsSpec extends AnyFunSuite {
     intercept[IllegalStateException](Fixpoint.connectedComponents(d, maxRounds = rounds - 2))
   }
 
+  // ---- triangle-shaped operators -----------------------------------------
+
+  /** Canonical (least, greatest) simple edges. */
+  private def simple(e: Edges): Set[(Long, Long)] =
+    e.collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }.toSet
+
+  private def nbrs(es: Set[(Long, Long)]): Map[Long, Set[Long]] =
+    es.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+
+  /** Common neighbors of each edge's endpoints. */
+  private def supportRef(es: Set[(Long, Long)]): Map[(Long, Long), Long] = {
+    val n = nbrs(es)
+    es.map { case (a, b) => (a, b) -> (n(a) & n(b)).size.toLong }.toMap
+  }
+
+  /** Per node: edges among its neighbors. */
+  private def trianglesRef(e: Edges): Map[Long, Long] = {
+    val n = nbrs(simple(e))
+    n.map { case (v, ns) => v -> ns.toSeq.map(u => (n(u) & ns).size.toLong).sum / 2 }
+  }
+
+  private def ktrussRef(e: Edges, k: Int, rounds: Int): Map[(Long, Long), Long] = {
+    var cur = simple(e)
+    var out = Map.empty[(Long, Long), Long]
+    (1 to rounds).foreach { _ =>
+      out = supportRef(cur).filter(_._2 >= k - 2)
+      cur = out.keySet
+    }
+    out
+  }
+
+  /** 4-sets a < b < c < d with all six ties. */
+  private def k4Ref(e: Edges): Long = {
+    val es = simple(e)
+    val n = nbrs(es)
+    es.toSeq.map { case (a, b) =>
+      val cs = (n(a) & n(b)).filter(_ > b)
+      cs.toSeq.map(c => (cs & n(c)).count(_ > c).toLong).sum
+    }.sum
+  }
+
+  private def clusteringRef(e: Edges): Map[Long, (Long, Long, Long)] = {
+    val n = nbrs(simple(e))
+    trianglesRef(e).map { case (v, t) =>
+      val d = n(v).size.toLong
+      v -> ((d, t, if (d < 2) 0L else math.floor(2000000.0 * t / (d * (d - 1))).toLong))
+    }
+  }
+
+  /** The five operators' outputs on one edge set, each as sorted rows. */
+  private def triangleShaped(s: SparkSession, e: Edges): Seq[Seq[String]] = {
+    val d = df(s, e, "src", "dst")
+    def rows(out: DataFrame) = out.collect().map(_.mkString(",")).toSeq.sorted
+    Seq(
+      rows(Centrality.triangleCount(d)),
+      rows(Centrality.edgeSupport(d)),
+      rows(Centrality.ktruss(d, k = 4, rounds = 2)),
+      rows(Centrality.cliqueCensusK4(d)),
+      rows(Centrality.clusteringCoefficient(d).select("node", "degree", "n_triangles",
+        "clustering_x1e6")))
+  }
+
+  private def triangleShapedRef(e: Edges): Seq[Seq[String]] = {
+    def rows[K, V](m: Map[K, V])(f: (K, V) => String) = m.map(f.tupled).toSeq.sorted
+    val pair: ((Long, Long), Long) => String = { case ((a, b), c) => s"$a,$b,$c" }
+    Seq(
+      rows(trianglesRef(e))((v, t) => s"$v,$t"),
+      rows(supportRef(simple(e)))(pair),
+      rows(ktrussRef(e, 4, 2))(pair),
+      Seq(k4Ref(e).toString),
+      rows(clusteringRef(e)) { case (v, (d, t, c)) => s"$v,$d,$t,$c" })
+  }
+
+  test("triangle-shaped operators equal brute force: random, low-id hub, cliques, empty") {
+    val graphs = (1 to 3).map(seed => s"random $seed" -> randomGraph(seed, n = 30, m = 120)) ++
+      Seq("hub with rim" -> hubRim, "K5/K6 and pieces" -> cliques,
+        "empty" -> Seq.empty[(Long, Long)], "self-loop only" -> Seq((5L, 5L)))
+    graphs.foreach { case (name, e) =>
+      val want = triangleShapedRef(e)
+      assert(triangleShaped(spark, e) == want, name)
+      if (name.startsWith("random")) assert(want(3) != Seq("0"), s"$name has no K4")
+    }
+    // counts the fixtures are built to have
+    assert(triangleShapedRef(cliques)(3) == Seq("20")) // C(5,4) + C(6,4)
+    assert(triangleShapedRef(hubRim)(3) == Seq("1") &&
+      trianglesRef(hubRim)(0L) == 60L)
+  }
+
   // ---- execution-config invariance -------------------------------------
 
   test("rewritten operators give identical rows across partitions, AQE and lineage mode") {
     val e = randomGraph(7, n = 50, m = 90)
     val seeds = Seq(Tuple1(3L), Tuple1(17L))
-    def run(s: SparkSession): Seq[Seq[(Long, Long)]] = {
-      def rows(d: DataFrame) = d.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
-      Seq(
+    val dense = e ++ cliques ++ hubRim.map { case (a, b) => (a + 1000, b + 1000) }
+    def run(s: SparkSession): Seq[Seq[String]] = {
+      def rows(d: DataFrame) = d.collect().map(_.mkString(",")).toSeq.sorted
+      triangleShaped(s, dense) ++ Seq(
         rows(Fixpoint.greedyColoring(df(s, e, "src", "dst"))),
         rows(Centrality.pagerank(df(s, e, "src", "dst"), 3)),
         rows(Centrality.pagerank(df(s, e, "src", "dst"), 3, redistributeDangling = true)),
@@ -225,7 +334,8 @@ class VertexRoundsSpec extends AnyFunSuite {
     }
     val ckpt = Files.createTempDirectory("graft-vr-ckpt").toString
     val want = run(spark)
-    assert(want.head.toMap == jonesPlassmann(e)._1)
+    assert(want.take(5) == triangleShapedRef(dense))
+    assert(want(5) == jonesPlassmann(e)._1.map { case (v, c) => s"$v,$c" }.toSeq.sorted)
     for (parts <- Seq(1, 7); aqe <- Seq(true, false); mode <- Seq("local", "reliable")) {
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", parts.toString)
@@ -272,5 +382,22 @@ class VertexRoundsSpec extends AnyFunSuite {
     // pointer-jump exchanges plus the label sum, then the collect
     val ccJobs = jobsOf(s)(Fixpoint.connectedComponents(nullableDf(chain, "a", "b")).collect())
     assert(ccJobs <= 3 * ccRounds + 3, s"$ccJobs jobs for $ccRounds rounds")
+  }
+
+  test("job budget: triangleCount and edgeSupport shuffle the oriented set once") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    val d = s.createDataFrame((randomGraph(11, n = 80, m = 200) ++ cliques)
+      .map { case (x, y) => (Option(x), Option(y)) }).toDF("src", "dst")
+    // the adjacency build is one execution (degree census, orientation,
+    // the widening exchange and the aggregation behind it) and the
+    // intersect reads the pinned adjacency on both sides: an operator
+    // that shuffled the oriented set a second time for the probe side
+    // (or re-canonicalized an already-canonical set) exceeds these
+    val triJobs = jobsOf(s)(Centrality.triangleCount(d).collect())
+    assert(triJobs <= 9, s"triangleCount ran $triJobs jobs")
+    val supJobs = jobsOf(s)(Centrality.edgeSupport(d).collect())
+    assert(supJobs <= 9, s"edgeSupport ran $supJobs jobs")
   }
 }
