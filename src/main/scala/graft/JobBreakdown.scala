@@ -1,12 +1,18 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Diagnostic main: run one named SparkEntry query and print every Spark
   * job's wall time with its call site, so a micro-batch-heavy gate's
   * fixed overhead can be attributed job by job (guide §1.5/§7.1 — the
   * UI is disabled in this harness, so this is the stage/job census).
+  * A job without a description of its own (none set, or only Structured
+  * Streaming's per-batch default) is shown by its SQL execution id and
+  * the first line of that execution's physical plan, so unlabeled jobs
+  * — a parquet footer-inference read outside any execution, a
+  * broadcast build — are attributable from this census alone.
   * Usage: runmain graft.JobBreakdown <queryName> [passes]
   */
 object JobBreakdown {
@@ -28,11 +34,29 @@ object JobBreakdown {
     final case class J(id: Int, t0: Long, site: String, var wall: Double = 0)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[J]()
+    // execution id -> first line of its physical plan; the bus posts an
+    // execution's start before any of its jobs
+    val planHeads = new java.util.concurrent.ConcurrentHashMap[String, String]()
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          val head = s.physicalPlanDescription.linesIterator.map(_.trim)
+            .find(l => l.nonEmpty && !l.startsWith("==")).getOrElse("?")
+          planHeads.put(s.executionId.toString, head); ()
+        case _ => ()
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))
-            .orElse(Option(p.getProperty("callSite.short")))).getOrElse("?")
+        val props = Option(e.properties)
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        val site = prop("spark.job.description")
+          .filterNot(d => d.isEmpty || d.contains("\nrunId = ")) // streaming's default
+          .getOrElse {
+            val sql = prop("spark.sql.execution.id")
+              .map(x => s"sql#$x ${Option(planHeads.get(x)).getOrElse("?")}")
+              .getOrElse("no sql execution")
+            val site = prop("callSite.short").orElse(e.stageInfos.headOption.map(_.name))
+            s"[unlabeled] $sql @ ${site.getOrElse("?")}"
+          }
         val j = J(e.jobId, System.nanoTime(), site)
         jobs.put(e.jobId, j); order.add(j); ()
       }

@@ -724,8 +724,9 @@ object StreamQueries {
     * whole corpus streamed through
     * [[graft.streaming.Streaming.growingComponentsSink]] from empty
     * state — per micro-batch: complete match (growing index probe ∪
-    * within-batch self-LSH), index fold, THEN a star-contraction fold
-    * of the new pairs into the evolving component labeling. The final
+    * within-batch self-LSH), then, side by side and joined before the
+    * batch returns, the index fold and a star-contraction fold of the
+    * new pairs into the evolving component labeling. The final
     * labels, left-joined onto the doc table with singleton fallback,
     * must equal the one-shot [[LlmQueries.dedupComponents]] pipeline —
     * this gate shares that gate's oracle VERBATIM, so end-to-end

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** On-disk, append-only per-micro-batch state for the self-growing
   * streaming dedup sinks — the persisted-artifact form of what r15 kept
@@ -22,11 +23,15 @@ import org.apache.spark.sql.functions._
   *  - '''Replay idempotence by construction.''' A replayed batchId
   *    lands on the SAME partition dir and overwrites it byte-identically
   *    (staged write + step-aside + atomic rename), so at-least-once
-  *    delivery needs no transactional sink. A crash between the pair
-  *    write and the signature write is also safe: the replay either
-  *    probes an index without the batch (normal shape) or one that
-  *    already holds it (the overlap shape
-  *    [[graft.dedup.Dedup.incrementalMinhashComplete]] dedups).
+  *    delivery needs no transactional sink. A growing sink's batch
+  *    writes its stores in two chains that run side by side (pairs,
+  *    then labels, on the stream thread; payload, then bands, on a
+  *    second thread — [[GrowingDedupState.appendSignaturesBeside]]) and
+  *    joins both before it returns, so a crash can leave any prefix of
+  *    either chain published. Every such mix is safe: the replay's
+  *    probe leaves the batch's own partitions out, so it sees the index
+  *    the first attempt saw, re-derives the same pairs and overwrites
+  *    every partition of the batch in place.
   *  - '''Cross-session resume.''' State outlives the streaming query: a
   *    new session points a state handle at the same root with a FRESH
   *    epoch (its batchIds restart at 0, so the epoch keys them apart)
@@ -155,10 +160,16 @@ object BatchStore {
     * as data columns). Duplicate rows across epochs (a resumed session
     * replaying a crashed batch under a fresh epoch) are the CALLER's
     * contract to tolerate — the LSH probe and pair readers here all
-    * dedup on their natural keys. None when the store is empty. */
-  def read(spark: SparkSession, dir: String): Option[DataFrame] =
+    * dedup on their natural keys. None when the store is empty. A
+    * declared `schema` (data columns only; partition columns are still
+    * read off the paths) skips the parquet footer-inference job. */
+  def read(spark: SparkSession, dir: String,
+           schema: Option[StructType] = None): Option[DataFrame] =
     if (!nonEmpty(spark, dir)) None
-    else Some(spark.read.parquet(dir).drop("epoch", "batch"))
+    else {
+      val r = schema.fold(spark.read)(spark.read.schema)
+      Some(r.parquet(dir).drop("epoch", "batch"))
+    }
 
   /** Deterministic key-dedup for store read-back: one survivor per key,
     * chosen as the MAX of the non-key payload struct (column order
@@ -197,11 +208,15 @@ object BatchStore {
     * already holds — permanent duplicates where the protocol promises
     * overwrite-idempotence (inflating the hot-bucket occupancy census,
     * which counts rows). The sinks spare their live epoch's partitions
-    * at or above the replay frontier ([[GrowingDedupState.compact]]). */
+    * at or above the replay frontier ([[GrowingDedupState.compact]]).
+    *
+    * A declared `schema` reads the batches without footer inference, as
+    * in [[read]]. */
   def compact(spark: SparkSession, dir: String, keyCols: Seq[String],
               partitionBy: Seq[String] = Nil,
               epoch: String = s"compact-${java.util.UUID.randomUUID()}",
-              spareBatch: Path => Boolean = _ => false): Unit = {
+              spareBatch: Path => Boolean = _ => false,
+              schema: Option[StructType] = None): Unit = {
     val f = fs(spark, dir)
     require(Option(f.globStatus(new Path(dir, s"epoch=$epoch/batch=*")))
         .forall(_.isEmpty),
@@ -212,7 +227,7 @@ object BatchStore {
     if (batches.nonEmpty) {
       if (!batches.exists(hasDataFiles(f, _))) deleteBatches(f, batches)
       else {
-        val df = spark.read.option("basePath", dir)
+        val df = schema.fold(spark.read)(spark.read.schema).option("basePath", dir)
           .parquet(batches.map(_.toString): _*).drop("epoch", "batch")
         val deduped =
           if (keyCols.isEmpty) df else dedupByMaxStruct(df, keyCols)
@@ -325,9 +340,13 @@ object BatchStore {
   private def manifestTarget(spark: SparkSession, dir: String): Option[String] =
     manifestLines(spark, dir).headOption
 
-  /** The manifest's current snapshot, or None before the first publish. */
-  def readSnapshot(spark: SparkSession, dir: String): Option[DataFrame] =
-    manifestTarget(spark, dir).map(rel => spark.read.parquet(s"$dir/$rel"))
+  /** The manifest's current snapshot read with the store's declared
+    * `schema` (no footer-inference job), or None before the first
+    * publish. */
+  def readSnapshot(spark: SparkSession, dir: String,
+                   schema: StructType): Option[DataFrame] =
+    manifestTarget(spark, dir)
+      .map(rel => spark.read.schema(schema).parquet(s"$dir/$rel"))
 
   /** The WAL partitions the current snapshot declares itself to cover
     * (see [[publishSnapshot]]); empty before the first publish or for
@@ -374,7 +393,19 @@ final case class ProbeIo(bandFiles: Long, bandBytes: Long,
   * at 0, takes a new epoch so nothing clobbers). `autoCompactAfter` > 0
   * lets the sinks compact automatically at session start once any store
   * holds more than that many batch dirs (bounds the per-batch listing
-  * cost of a long-lived feed); 0 disables. */
+  * cost of a long-lived feed); 0 disables.
+  *
+  * Write order inside one micro-batch of the growing sinks: the stream
+  * thread appends the pair partition (and, for the components sink,
+  * folds it and publishes the label snapshot) while a second driver
+  * thread appends the payload, then the band partition
+  * ([[appendSignaturesBeside]]); the batch joins both chains before it
+  * returns. No order holds BETWEEN the chains — pairs may publish
+  * before or after signatures — and none is needed (see
+  * [[BatchStore]]'s replay-idempotence note). Each store is read with
+  * its declared schema ([[GrowingDedupState.PayloadSchema]] and
+  * siblings), never by footer inference, except the legacy-layout
+  * reads in [[compact]]. */
 final case class GrowingDedupState(root: String, epoch: String = "0",
                                    bandBuckets: Int = 16,
                                    payloadBuckets: Int = 16,
@@ -439,24 +470,87 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
     * rows bucketed by band hash — in that order, so a band row never
     * exists without the payload its verification join needs (a crash
     * between the writes leaves the batch invisible to probes; its
-    * replay overwrites both). Both writes are O(batch). */
+    * replay overwrites both). Both writes are O(batch). The growing
+    * sinks run this chain on its own thread, beside the batch's pair
+    * append ([[appendSignaturesBeside]]). */
   def appendSignatures(sigs: DataFrame, batchId: Long): Unit = {
+    import GrowingDedupState._
     val spark = sigs.sparkSession
     val (bB, pB) = effectiveBuckets(spark)
     // one minhash projection for BOTH writes: the payload write
     // materializes the lazy pin, the band write re-reads the pinned
     // blocks instead of recomputing the 8-hash projection from scratch
-    val s = graft.Lineage.pinned(sigs, eager = false)
+    val s = graft.Lineage.pinned(conform(sigs, PayloadSchema), eager = false)
     val payload = s.withColumn("pb", payloadBucketExpr(pB, col("doc_id")))
     graft.Jobs.described(spark, "grow: payload append") {
       BatchStore.append(payload.repartition(col("pb")), sigDir, epoch, batchId,
         partitionBy = Seq("pb"))
     }
-    val bands = graft.dedup.Dedup.bandsOf(s)
+    val bands = conform(graft.dedup.Dedup.bandsOf(s), BandSchema)
       .withColumn("bk", bandBucketExpr(bB))
     graft.Jobs.described(spark, "grow: band append") {
       BatchStore.append(bands.repartition(col("bk")), bandDir, epoch, batchId,
         partitionBy = Seq("bk"))
+    }
+  }
+
+  /** Run [[appendSignatures]] (the signature chain: payload, then bands)
+    * on a second driver thread while `main` runs on the calling stream
+    * thread, and return `main`'s result once both are done. Run in
+    * line, the chain's write jobs keep the pair append, fold and
+    * snapshot waiting while the other cores sit idle.
+    *
+    *  - '''Fork after the probe's listings.''' Call this only after the
+    *    batch's [[probeComplete]] returned: it has listed both pruned
+    *    reads (or returned the no-history shape), so the probe never
+    *    lists a partition this chain creates, and the hot-bucket
+    *    occupancy census stays exact.
+    *  - '''Payload before bands.''' The chain is [[appendSignatures]]
+    *    unchanged, so its payload still publishes before its bands.
+    *  - '''No lazy first use on the new thread.''' The pinned bucket
+    *    counts are resolved here, on the calling thread, so `_BUCKETS`
+    *    is never created first on the chain's thread.
+    *  - '''Carry the thread state.''' The chain starts through
+    *    `SQLExecution.withThreadLocalCaptured` (reached through
+    *    [[org.apache.spark.sql.graftbridge.Bridge]]), so it carries the
+    *    stream thread's local properties: the job group (stopping the
+    *    query cancels its jobs), `streaming.sql.batchId` and the
+    *    [[graft.Jobs.described]] labels.
+    *  - '''Join before return, always.''' The chain is joined in a
+    *    `finally`, through interrupts: even when `main` throws, the
+    *    batch does not return — so the query neither commits nor
+    *    retries — while the chain is still writing into the store. A
+    *    replay racing a live writer would break the single-writer
+    *    contract.
+    *  - '''Failures surface.''' A failure in either chain fails the
+    *    batch with that exception; when both fail, the stream thread's
+    *    propagates with the chain's attached as suppressed. */
+  private[streaming] def appendSignaturesBeside[T](sigs: DataFrame,
+                                                   batchId: Long)(main: => T): T = {
+    val spark = sigs.sparkSession
+    effectiveBuckets(spark)
+    val exec = java.util.concurrent.Executors.newSingleThreadExecutor { r =>
+      val t = new Thread(r, s"graft-signature-chain-$epoch-$batchId")
+      t.setDaemon(true)
+      t
+    }
+    // the one task is queued before shutdown: the thread runs it, then exits
+    val chain =
+      try org.apache.spark.sql.graftbridge.Bridge
+        .withThreadLocalCaptured(spark, exec)(appendSignatures(sigs, batchId))
+      finally exec.shutdown()
+    var thrown: Throwable = null
+    try main
+    catch { case t: Throwable => thrown = t; throw t }
+    finally {
+      // join() waits through interrupts and re-asserts the flag after
+      val failed =
+        try { chain.join(); None }
+        catch { case e: java.util.concurrent.CompletionException => Some(e.getCause) }
+      failed.foreach { e =>
+        if (thrown == null) throw e
+        else if (e ne thrown) thrown.addSuppressed(e)
+      }
     }
   }
 
@@ -474,11 +568,18 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
         .filter(_.isDirectory).map(_.getPath.toString)
     }
 
+  /** [[prunedPaths]] read with the store's declared `schema`, leaving
+    * out `ownBatch`'s partition of this handle's epoch. */
   private def prunedRead(spark: SparkSession, dir: String, pcol: String,
-                         vals: Seq[Int]): Option[DataFrame] = {
-    val paths = prunedPaths(spark, dir, pcol, vals)
+                         vals: Seq[Int], schema: StructType,
+                         ownBatch: Option[Long]): Option[DataFrame] = {
+    val own = ownBatch.map(b => (s"epoch=$epoch", s"batch=$b"))
+    val paths = prunedPaths(spark, dir, pcol, vals).filterNot { p =>
+      val batch = new Path(p).getParent
+      own.contains((batch.getParent.getName, batch.getName))
+    }
     if (paths.isEmpty) None
-    else Some(spark.read.option("basePath", dir).parquet(paths: _*))
+    else Some(spark.read.schema(schema).option("basePath", dir).parquet(paths: _*))
   }
 
   /** The COMPLETE per-batch near-dup pair set against the accumulated
@@ -499,16 +600,26 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
     * the band join key), so unread partitions cannot hold matching
     * bands, and unread payload buckets cannot hold candidate old ids.
     * An empty or untouched store degrades to the guarded self-LSH (the
-    * first-batch shape). */
+    * first-batch shape).
+    *
+    * `ownBatch` is the micro-batch id this probe serves: the probe
+    * leaves out that batch's partitions of this handle's epoch. They
+    * exist only when a crashed attempt of the same batch published
+    * them, and the batch's signature chain overwrites them while the
+    * probe's lazy payload read may still run
+    * ([[appendSignaturesBeside]]). Left out, a replay probes exactly
+    * the index its first attempt probed — same pairs, same hot-bucket
+    * census. */
   def probeComplete(newShingled: DataFrame, minJaccX1e6: Long,
                     maxBucketOccupancy: Long = Long.MaxValue,
-                    failOnHotBucket: Boolean = false): DataFrame = {
+                    failOnHotBucket: Boolean = false,
+                    ownBatch: Option[Long] = None): DataFrame = {
     import graft.dedup.Dedup
     val newMat = Dedup.pinned(newShingled)
     val within = Dedup.minhashLshGuarded(newMat, minJaccX1e6,
       maxBucketOccupancy, failOnHotBucket)
     prunedCross(newMat, minJaccX1e6, maxBucketOccupancy,
-        failOnHotBucket) match {
+        failOnHotBucket, ownBatch) match {
       case None        => within
       case Some(cross) => Dedup.completeFrom(cross, within)
     }
@@ -527,7 +638,8 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
                    maxBucketOccupancy: Long = Long.MaxValue,
                    failOnHotBucket: Boolean = false): DataFrame = {
     val newMat = graft.dedup.Dedup.pinned(newShingled)
-    prunedCross(newMat, minJaccX1e6, maxBucketOccupancy, failOnHotBucket)
+    prunedCross(newMat, minJaccX1e6, maxBucketOccupancy, failOnHotBucket,
+        ownBatch = None)
       .getOrElse(newMat.select(col("doc_id").as("new_id"),
         col("doc_id").as("old_id"), lit(0L).as("jacc_x1e6")).limit(0))
   }
@@ -538,9 +650,10 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
     * bucket the batch hashes into. `newMat` must already be
     * materialized. */
   private def prunedCross(newMat: DataFrame, minJaccX1e6: Long,
-      maxBucketOccupancy: Long,
-      failOnHotBucket: Boolean): Option[DataFrame] = {
+      maxBucketOccupancy: Long, failOnHotBucket: Boolean,
+      ownBatch: Option[Long]): Option[DataFrame] = {
     import graft.dedup.Dedup
+    import GrowingDedupState.{BandSchema, PayloadSchema}
     val spark = newMat.sparkSession
     probeIoMemo = None // never report a previous probe's IO as this one's
     if (!BatchStore.nonEmpty(spark, bandDir)) {
@@ -566,14 +679,18 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
         newBands.select(bandBucketExpr(bB).as("bk"))
           .distinct().collect().map(_.getInt(0)).toSeq
       }
-      prunedRead(spark, bandDir, "bk", bks) match {
+      prunedRead(spark, bandDir, "bk", bks, BandSchema, ownBatch) match {
         case None => None
         case Some(hist) =>
-          val cand = graft.Lineage.pinned(
-            Dedup.probeCandidates(
-              hist.select(col("doc_id"), col("band"), col("h1"), col("h2")),
-              newBands, maxBucketOccupancy, failOnHotBucket),
-            eager = false)
+          // building the lazy pin plans the candidate join, whose
+          // broadcast runs as a job of its own right here
+          val cand = graft.Jobs.described(spark, "probe: candidates") {
+            graft.Lineage.pinned(
+              Dedup.probeCandidates(
+                hist.select(col("doc_id"), col("band"), col("h1"), col("h2")),
+                newBands, maxBucketOccupancy, failOnHotBucket),
+              eager = false)
+          }
           val pbs = graft.Jobs.described(spark, "probe: pb collect") {
             cand.select(payloadBucketExpr(pB, col("old_id")).as("pb"))
               .distinct().collect().map(_.getInt(0)).toSeq
@@ -592,7 +709,7 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
             val (psf, psb) = sum(Seq(sigDir))
             probeIoMemo = Some(ProbeIo(bf, bb, bsf, bsb, pf, pbb, psf, psb))
           }
-          prunedRead(spark, sigDir, "pb", pbs) match {
+          prunedRead(spark, sigDir, "pb", pbs, PayloadSchema, ownBatch) match {
             case None if pbs.isEmpty => None // no candidates at all
             case None => throw new IllegalStateException(
               s"GrowingDedupState: payload partitions missing under $sigDir " +
@@ -609,7 +726,8 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
   /** The raw signature store — may hold duplicate doc ids after a
     * cross-epoch replay; the probe's pair-level dedups tolerate them. */
   private[streaming] def indexRaw(spark: SparkSession): Option[DataFrame] =
-    BatchStore.read(spark, sigDir).map(_.drop("pb"))
+    BatchStore.read(spark, sigDir, Some(GrowingDedupState.PayloadSchema))
+      .map(_.drop("pb"))
 
   /** One signature row per doc. Read-time id dedup is DETERMINISTIC
     * (max payload struct per id — [[BatchStore.dedupByMaxStruct]]): for
@@ -627,7 +745,7 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
     * stores are disjoint; duplicates only survive a cross-epoch resume
     * replay). */
   def matches(spark: SparkSession): DataFrame =
-    BatchStore.read(spark, pairDir)
+    BatchStore.read(spark, pairDir, Some(GrowingDedupState.PairSchema))
       .map(BatchStore.dedupByMaxStruct(_, Seq("doc_a", "doc_b")))
       .getOrElse(throw new IllegalStateException(
         s"GrowingDedupState: no matches published under $pairDir yet"))
@@ -635,7 +753,7 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
   /** The current component labeling snapshot, None before the first
     * fold ([[graft.streaming.Streaming.growingComponentsSink]]). */
   def labels(spark: SparkSession): Option[DataFrame] =
-    BatchStore.readSnapshot(spark, labelDir)
+    BatchStore.readSnapshot(spark, labelDir, GrowingDedupState.LabelSchema)
 
   /** The pair store's published partition names (`epoch=E/batch=N`) —
     * what a label snapshot publishing NOW can declare covered. */
@@ -656,8 +774,8 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
     val uncovered = pairPartitions(spark).filterNot(covered)
       .map(rel => s"$pairDir/$rel")
     if (uncovered.isEmpty) None
-    else Some(spark.read.option("basePath", pairDir)
-      .parquet(uncovered: _*).drop("epoch", "batch"))
+    else Some(spark.read.schema(GrowingDedupState.PairSchema)
+      .option("basePath", pairDir).parquet(uncovered: _*).drop("epoch", "batch"))
   }
 
   /** Compact the signature, band, and pair stores into one partition
@@ -733,7 +851,13 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
           readGroup(flat).map(
             _.withColumn("pb", payloadBucketExpr(pB, col("doc_id")))))
         .reduce(_.unionByName(_))
-      val survivors = BatchStore.dedupByMaxStruct(withPb, Seq("doc_id"))
+      // conformed like every payload write, so the band rebuild below
+      // can read the compact partition with the declared schema: a
+      // legacy batch missing a column fails here, not as null hashes
+      val survivors = GrowingDedupState.conform(
+          BatchStore.dedupByMaxStruct(withPb, Seq("doc_id")),
+          GrowingDedupState.PayloadSchema)
+        .withColumn("pb", payloadBucketExpr(pB, col("doc_id")))
       BatchStore.append(survivors.repartition(col("pb")), sigDir, ce, 0L,
         partitionBy = Seq("pb"))
       val bandOld = batchDirs(bandDir).filterNot(replayable)
@@ -741,8 +865,9 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
       // zero survivors publish nothing (empty partitioned writes are
       // fileless by contract) — then there is nothing to band either
       if (f.exists(ceDir)) {
-        val bands = graft.dedup.Dedup.bandsOf(
-            spark.read.parquet(ceDir.toString))
+        val bands = GrowingDedupState.conform(graft.dedup.Dedup.bandsOf(
+            spark.read.schema(GrowingDedupState.PayloadSchema)
+              .parquet(ceDir.toString)), GrowingDedupState.BandSchema)
           .withColumn("bk", bandBucketExpr(bB))
         BatchStore.append(bands.repartition(col("bk")), bandDir, ce, 0L,
           partitionBy = Seq("bk"))
@@ -763,11 +888,12 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
     val covered = BatchStore.snapshotCovered(spark, labelDir).toSet
     if (covered.isEmpty)
       BatchStore.compact(spark, pairDir, Seq("doc_a", "doc_b"), epoch = ce,
-        spareBatch = replayable)
+        spareBatch = replayable, schema = Some(GrowingDedupState.PairSchema))
     else {
       def relOf(p: Path) = s"${p.getParent.getName}/${p.getName}"
       BatchStore.compact(spark, pairDir, Seq("doc_a", "doc_b"), epoch = ce,
-        spareBatch = p => replayable(p) || !covered.contains(relOf(p)))
+        spareBatch = p => replayable(p) || !covered.contains(relOf(p)),
+        schema = Some(GrowingDedupState.PairSchema))
       val stillThere = covered.toSeq.sorted
         .filter(rel => f.exists(new Path(s"$pairDir/$rel")))
       BatchStore.rewriteCovered(spark, labelDir,
@@ -826,4 +952,30 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
     }
     (legacy || over) && { compact(spark, liveEpochSafeBelow); true }
   }
+}
+
+object GrowingDedupState {
+  /** Row schemas of the growing stores, shared by each store's writer
+    * (which [[conform]]s its frame to it) and its readers (which declare
+    * it instead of inferring it: inference runs a one-task parquet
+    * footer job per read). Partition columns (`epoch`, `batch`, `bk`,
+    * `pb`) are not part of them; readers still take those off the
+    * paths. The legacy-layout migration reads in
+    * [[GrowingDedupState.compact]] keep inference — a declared schema
+    * would read a missing column as nulls there instead of failing. */
+  val PayloadSchema: StructType = StructType.fromDDL(
+    ("doc_id BIGINT, shingles ARRAY<BIGINT>" +:
+      (0 until 8).map(j => s"h$j BIGINT")).mkString(", "))
+  val BandSchema: StructType =
+    StructType.fromDDL("doc_id BIGINT, band INT, h1 BIGINT, h2 BIGINT")
+  val PairSchema: StructType =
+    StructType.fromDDL("doc_a BIGINT, doc_b BIGINT, jacc_x1e6 BIGINT")
+  val LabelSchema: StructType =
+    StructType.fromDDL("node BIGINT, component BIGINT")
+
+  /** `df`'s columns in `schema`'s order, cast to its types — what a
+    * store's writer publishes, so the files always match what the
+    * store's readers declare. */
+  private[streaming] def conform(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
 }

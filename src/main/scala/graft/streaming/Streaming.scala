@@ -512,34 +512,46 @@ object Streaming {
       if (compacted.compareAndSet(false, true))
         state.maybeAutoCompact(batch.sparkSession,
           liveEpochSafeBelow = batchId)
+      // nothing follows the pair append: the join comes right after it
       growDedupStep(batch, batchId, state, minJaccX1e6, idCol, textCol,
-        maxBucketOccupancy)
-      ()
+        maxBucketOccupancy)(_ => ())
     }
   }
 
-  /** One micro-batch of the growing-index dedup: match completely
-    * through the PARTITION-PRUNED store probe
+  /** One micro-batch of the growing-index dedup, in two chains joined
+    * before it returns. First, on the stream thread, the batch is
+    * matched completely through the PARTITION-PRUNED store probe
     * ([[GrowingDedupState.probeComplete]] — an empty store degrades to
-    * the guarded self-LSH, and a boilerplate flood inside the first
-    * batch still hits the occupancy cap), append the batch's pairs,
-    * then its signatures into the bucketed payload + band stores.
-    * Returns the batch's own match frame AS THE STORE READ-BACK (a
-    * parquet leaf — already materialized, lineage-free) so composing
-    * sinks ([[growingComponentsSink]]) can fold it without recompute. */
-  private def growDedupStep(batch: DataFrame, batchId: Long,
+    * the guarded self-LSH, a boilerplate flood inside the first batch
+    * still hits the occupancy cap, and the partitions a crashed earlier
+    * attempt of this batch published are left out). Then the chains
+    * fork ([[GrowingDedupState.appendSignaturesBeside]]): a second
+    * thread appends the batch's signatures (payload, then bands) while
+    * the stream thread appends its pairs and hands them to `andThen` AS
+    * THE STORE READ-BACK (a parquet leaf read with the declared pair
+    * schema — already materialized, lineage-free) so composing sinks
+    * ([[growingComponentsSink]]) fold it without recompute. Nothing on
+    * the stream thread reads this batch's signatures. `andThen`'s result
+    * is returned once both chains are done; a failure in either fails
+    * the batch. */
+  private def growDedupStep[T](batch: DataFrame, batchId: Long,
       state: GrowingDedupState,
       minJaccX1e6: Long, idCol: String, textCol: String,
-      maxBucketOccupancy: Long): DataFrame = {
+      maxBucketOccupancy: Long)(andThen: DataFrame => T): T = {
+    import GrowingDedupState.{PairSchema, conform}
     val spark = batch.sparkSession
     val sh = graft.Lineage.pinned(
       graft.dedup.Dedup.shingleTable(batch, idCol, textCol), eager = false)
-    val hits = state.probeComplete(sh, minJaccX1e6, maxBucketOccupancy)
-    graft.Jobs.described(spark, "grow: pair append") {
-      BatchStore.append(hits, state.pairDir, state.epoch, batchId)
+    val hits = state.probeComplete(sh, minJaccX1e6, maxBucketOccupancy,
+      ownBatch = Some(batchId))
+    state.appendSignaturesBeside(graft.dedup.Dedup.signatures(sh), batchId) {
+      graft.Jobs.described(spark, "grow: pair append") {
+        BatchStore.append(conform(hits, PairSchema), state.pairDir,
+          state.epoch, batchId)
+      }
+      andThen(spark.read.schema(PairSchema)
+        .parquet(BatchStore.batchDir(state.pairDir, state.epoch, batchId)))
     }
-    state.appendSignatures(graft.dedup.Dedup.signatures(sh), batchId)
-    spark.read.parquet(BatchStore.batchDir(state.pairDir, state.epoch, batchId))
   }
 
   /** [[growingDedupSink]] composed with live cluster upkeep: each
@@ -578,7 +590,19 @@ object Streaming {
     * NO in-memory state at all (the cache is the just-published parquet
     * leaf); raise it on high-frequency feeds to amortize the
     * O(|labels|) snapshot write, trading read staleness (readers see
-    * the last snapshot) for write cadence. */
+    * the last snapshot) for write cadence.
+    *
+    * Write order and crash safety: a batch runs two chains side by side
+    * ([[growDedupStep]]) — pair append → pair read-back → fold → label
+    * snapshot on the stream thread, payload → band append on a second
+    * thread — and joins them after the snapshot, before the batch
+    * returns; the cache moves only when both succeeded. None of the
+    * stream-thread steps reads this batch's signatures. A crash can
+    * publish any prefix of either chain: labels may name pairs whose
+    * signatures never landed, or signatures may land without their
+    * pairs. The replay overwrites both in place (its probe leaves the
+    * batch's own partitions out, so it re-derives the same pairs), and
+    * the fold's idempotence absorbs pairs a snapshot already holds. */
   def growingComponentsSink(newDocs: DataFrame,
       state: GrowingDedupState,
       minJaccX1e6: Long,
@@ -623,31 +647,32 @@ object Streaming {
           recovered.map(graft.Lineage.pinned(_, eager = true))
         }
       }
-      val hits = growDedupStep(batch, batchId, state, minJaccX1e6, idCol,
-        textCol, maxBucketOccupancy)
-      val pairs = hits.select(col("doc_a").as("a"), col("doc_b").as("b"))
-      val next = graft.Jobs.described(spark, "components: fold") {
-        prev match {
-          case None => graft.graph.Fixpoint.connectedComponents(pairs)
-          case Some(cur) => graft.graph.Fixpoint.incrementalComponents(cur, pairs)
+      // the fold and the snapshot run on the stream thread beside the
+      // signature chain; growDedupStep joins it after the snapshot, and
+      // only a batch whose chains both succeeded replaces the cache
+      cache.set(growDedupStep(batch, batchId, state, minJaccX1e6, idCol,
+          textCol, maxBucketOccupancy) { hits =>
+        val pairs = hits.select(col("doc_a").as("a"), col("doc_b").as("b"))
+        val next = graft.Jobs.described(spark, "components: fold") {
+          prev match {
+            case None => graft.graph.Fixpoint.connectedComponents(pairs)
+            case Some(cur) => graft.graph.Fixpoint.incrementalComponents(cur, pairs)
+          }
         }
-      }
-      val mat = next.select(col("node"), col("component"))
-      if (batchId % snapshotEvery == 0) {
-        // the snapshot declares every pair partition published so far
-        // covered (this batch's own included — its pairs just folded):
-        // the next session replays only the WAL tail after this point
-        graft.Jobs.described(spark, "components: snapshot") {
-          BatchStore.publishSnapshot(mat, state.labelDir, state.epoch, batchId,
-            covered = state.pairPartitions(spark))
-        }
-        // the cache becomes the published parquet leaf: zero in-memory
-        // state while snapshots are current
-        cache.set(state.labels(spark).orNull)
-      } else {
-        cache.set(graft.Lineage.pinned(mat, eager = true))
-      }
-      ()
+        val mat = GrowingDedupState.conform(next, GrowingDedupState.LabelSchema)
+        if (batchId % snapshotEvery == 0) {
+          // the snapshot declares every pair partition published so far
+          // covered (this batch's own included — its pairs just folded):
+          // the next session replays only the WAL tail after this point
+          graft.Jobs.described(spark, "components: snapshot") {
+            BatchStore.publishSnapshot(mat, state.labelDir, state.epoch, batchId,
+              covered = state.pairPartitions(spark))
+          }
+          // the cache becomes the published parquet leaf: zero in-memory
+          // state while snapshots are current
+          state.labels(spark).orNull
+        } else graft.Lineage.pinned(mat, eager = true)
+      })
     }
   }
 

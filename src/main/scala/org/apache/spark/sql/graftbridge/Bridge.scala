@@ -190,6 +190,19 @@ object Bridge {
     }
   }
 
+  /** Run `body` on `exec` the way Spark runs its own driver-side side
+    * work (broadcast builds, subquery prefetches): the new thread carries
+    * the caller's active session and SparkContext local properties — job
+    * group (so cancelling the caller's group cancels its jobs too), SQL
+    * execution id, streaming batch id and job description. The classic
+    * session type the helper takes is private to spark-sql, hence this
+    * bridge. */
+  def withThreadLocalCaptured[T](spark: org.apache.spark.sql.SparkSession,
+                                 exec: java.util.concurrent.ExecutorService)
+                                (body: => T): java.util.concurrent.CompletableFuture[T] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], exec)(body)
+
   /** Drain the async listener bus (private[spark]) — snapshotting
     * listener-accumulated task metrics right after an action otherwise
     * races the bus and attributes late task-end events to the NEXT

@@ -1049,4 +1049,125 @@ class StreamingSpec extends AnyFunSuite {
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs2 == Set((0L, 1L)))
   }
+
+  test("a failed signature chain fails its batch, leaves nothing running, replays exactly") {
+    import scala.jdk.CollectionConverters._
+    import graft.dedup.Dedup
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    implicit val sqlCtx = spark.sqlContext
+    val fox = "the quick brown fox jumps over the lazy dog again and again"
+    val pipe = "training data pipelines need deduplication at scale every day"
+    val corpus = Seq(
+      (0L, fox), (1L, fox + " extra"),   // split across sessions
+      (2L, "completely different text about spark catalyst optimizer rules"),
+      (5L, pipe), (6L, pipe + " more"),
+      (7L, "another unrelated document mentioning shuffles joins and scans"))
+    val root = java.nio.file.Files.createTempDirectory("grow-chain-crash").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("grow-chain-ckpt").toString
+    val s1 = MemoryStream[(Long, String)]
+    val q1 = Streaming.growingComponentsSink(s1.toDF().toDF("doc_id", "text"),
+      GrowingDedupState(root, epoch = "0"), 500000L).start()
+    try {
+      s1.addData(corpus.filter(d => Set(0L, 2L)(d._1)): _*)
+      q1.processAllAvailable()
+    } finally q1.stop()
+    // no test hook: a plain file where session 2's band partitions must
+    // go, so only the second thread's band append can fail
+    val blocker = new java.io.File(s"$root/bands/epoch=1")
+    java.nio.file.Files.write(blocker.toPath, "not a dir".getBytes("UTF-8"))
+    val s2 = MemoryStream[(Long, String)]
+    val state2 = GrowingDedupState(root, epoch = "1")
+    def start() = Streaming.growingComponentsSink(s2.toDF().toDF("doc_id", "text"),
+      state2, 500000L).option("checkpointLocation", ckpt).start()
+    val q2 = start()
+    s2.addData(corpus.filter(d => Set(1L, 5L, 6L)(d._1)): _*)
+    val err = intercept[StreamingQueryException](q2.processAllAvailable())
+    q2.stop()
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(c => String.valueOf(c.getMessage)).toSeq
+    assert(causes.exists(_.contains("bands/epoch=1")),
+      s"the batch must fail with the band append's error: $causes")
+    // joined before the batch returned: no chain thread, no running job
+    def chainThreads() = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-signature-chain"))
+    val deadline = System.nanoTime() + 10000000000L
+    while (chainThreads().nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(chainThreads().isEmpty, s"chain thread still alive: ${chainThreads()}")
+    org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    // payload before bands: the chain published its payload, then failed
+    assert(new java.io.File(s"$root/sigs/epoch=1/batch=0").isDirectory)
+    // restart from the checkpoint: batch 0 replays and overwrites in place
+    blocker.delete()
+    val q3 = start()
+    try {
+      q3.processAllAvailable()
+      s2.addData(corpus.filter(d => d._1 == 7L): _*)
+      q3.processAllAvailable()
+    } finally q3.stop()
+    val oneShotLabels = graft.graph.Fixpoint.connectedComponents(
+      Dedup.minhashLsh(Dedup.shingleTable(
+        corpus.toDF("doc_id", "text"), "doc_id", "text"), 500000L)
+        .select(col("doc_a").as("a"), col("doc_b").as("b")))
+      .as[(Long, Long)].collect().toSet
+    assert(state2.labels(spark).get.as[(Long, Long)].collect().toSet == oneShotLabels)
+    assert(oneShotLabels.map(_._1) == Set(0L, 1L, 5L, 6L))
+    // every doc exactly once in the raw stores (the replay overwrote its
+    // partitions), and in the index after compaction
+    def perDoc(dir: String) = spark.read.parquet(dir).groupBy("doc_id").count()
+      .as[(Long, Long)].collect().toMap
+    val ids = corpus.map(_._1).toSet
+    assert(perDoc(state2.sigDir) == ids.map(_ -> 1L).toMap)
+    assert(perDoc(state2.bandDir) == ids.map(_ -> 4L).toMap)
+    state2.withEpoch("offline").compact(spark)
+    assert(state2.index(spark).groupBy("doc_id").count().as[(Long, Long)]
+      .collect().toMap == ids.map(_ -> 1L).toMap)
+  }
+
+  test("a steady growing-components batch runs at most 15 jobs, none a footer read") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // the streaming gates' session: one shuffle partition, no AQE
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "1")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    implicit val sqlCtx = s.sqlContext
+    val fox = "the quick brown fox jumps over the lazy dog again and again"
+    val pipe = "training data pipelines need deduplication at scale every day"
+    val batches = Seq(
+      Seq((0L, fox), (2L, "completely different text about spark catalyst optimizer rules"),
+        (3L, pipe)),
+      Seq((1L, fox + " extra"), (4L, "another unrelated document mentioning shuffles joins")),
+      Seq((5L, pipe + " more"), (6L, fox + " extra again"),
+        (7L, "a last unrelated document about broadcast hash joins")))
+    // (batch id, job id, footer-only): a footer-inference job is the one
+    // whose every RDD is the bare parallelize -> mapPartitions pair
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Boolean)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach { b =>
+            val scopes = e.stageInfos.flatMap(_.rddInfos).map(_.scope.map(_.name).getOrElse(""))
+            jobs.add((b, e.jobId, scopes.forall(Set("parallelize", "mapPartitions"))))
+          }
+    }
+    val src = MemoryStream[(Long, String)]
+    val q = Streaming.growingComponentsSink(src.toDF().toDF("doc_id", "text"),
+      GrowingDedupState(java.nio.file.Files.createTempDirectory("grow-budget").toString),
+      500000L).start()
+    spark.sparkContext.addSparkListener(listener)
+    try batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
+    finally {
+      q.stop()
+      // deliver every queued job start before the listener goes
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val byBatch = jobs.asScala.toSeq.groupBy(_._1)
+    Seq("1", "2").foreach { b =>
+      val js = byBatch.getOrElse(b, Nil)
+      assert(js.nonEmpty && js.size <= 15, s"batch $b ran ${js.size} jobs")
+      assert(!js.exists(_._3), s"batch $b ran footer-read jobs ${js.filter(_._3).map(_._2)}")
+    }
+  }
 }
