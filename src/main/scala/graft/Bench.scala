@@ -1,37 +1,24 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, prints one JSON line (driver contract).
-  * local[32] with shuffle.partitions=32 and AQE — the local stand-in for
-  * the multi-executor layout every operator is designed for.
+  * Session from [[GraftSession]], 32 cores by default — the local
+  * stand-in for the multi-executor layout every operator is designed for.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
+    // Spark is stopped BEFORE printing: nothing (shutdown logs included)
+    // may print after the parsed line.
+    println(GraftSession.run(defaultCpus = 32)(battery(_, args)))
+    System.out.flush()
+  }
+
+  /** Runs the battery and returns the driver-contract JSON line. */
+  private def battery(spark: SparkSession, args: Array[String]): String = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Janino's generated-class cache is JVM-static and capped at 100
-      // entries by default (StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES) — a
-      // 260-query battery holds far more than 100 distinct codegen'd plans,
-      // so BOTH min-of-2 passes kept paying recompilation on whichever
-      // queries the LRU evicted (measured: graph_triangles 3.25s ↔ 9.87s on
-      // identical code). Entries are per-FRAGMENT, not per-query: the
-      // 290-query battery compiles ~4.2k distinct fragments, so the round-8
-      // value of 4096 thrashed pathologically (LRU + cyclic access ≈ every
-      // fragment a miss: measured 3.8k recompiles per pass, graph_triangles
-      // 7.6s in-battery vs 3.3s isolated — each recompile is a fresh class
-      // whose C2 profile restarts, which costs far more than the Janino
-      // time). Sized past the fragment count with headroom, passes 2+ are
-      // pure cache hits and the kernels stay JIT-hot.
-      .config("spark.sql.codegen.cache.maxEntries", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm the JVM/codegen/parquet paths so the first timed query doesn't
@@ -223,7 +210,7 @@ object Bench {
 
     val timed: Seq[Seq[(String, (Double, Diag))]] = (1 to passes).map { _ =>
       val pass = ordered.map { case (name, fn) =>
-        org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+        Bridge.waitListenerBus(spark)
         val (gc0, tr0, tg0, tn0, sn0, jit0, tc0, cc0) =
           (jvmGcMs(), taskRunMs.get, taskGcMs.get, taskN.get, stageN.get,
             jitMsNow(), taskCpuNs.get, compileCount())
@@ -231,7 +218,7 @@ object Bench {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
         val dt = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+        Bridge.waitListenerBus(spark)
         // per-query Janino compile delta: on a warm pass this must be ~0 —
         // any query still compiling fragments in pass 2+ owns part of the
         // warm-pass compile floor (micro-batch watermark literals etc.)
@@ -321,7 +308,7 @@ object Bench {
       .map { case (k, (lo, hi)) => s""""$k":[$lo,$hi]""" }
       .mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"pass_totals":${passTotals.mkString("[", ",", "]")},"codegen_compiles_per_pass":${compilesPerPass.mkString("[", ",", "]")},"code_cache_max_kb":$codeMaxKb,"jvm_flags":$jvmFlags,"pin_storage":"${sys.props.getOrElse("graft.lineage.pinStorage", "ser")}","host_ms_user_hz":100,"known_bands":$knownBands,"per_pass":$perPass,"per_pass_diag":$perPassDiag,"diag_fields":["gc_ms","task_ms","task_gc_ms","tasks","stages","jit_ms","task_cpu_ms","alu_us","mem_us","code_kb","meta_kb","compiles","host_ms","proc_ms"],"queries":$fullQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"pass_totals":${passTotals.mkString("[", ",", "]")},"codegen_compiles_per_pass":${compilesPerPass.mkString("[", ",", "]")},"code_cache_max_kb":$codeMaxKb,"jvm_flags":$jvmFlags,"pin_storage":"${Bridge.pinStorageSetting(spark).getOrElse("ser")}","host_ms_user_hz":100,"known_bands":$knownBands,"per_pass":$perPass,"per_pass_diag":$perPassDiag,"diag_fields":["gc_ms","task_ms","task_gc_ms","tasks","stages","jit_ms","task_cpu_ms","alu_us","mem_us","code_kb","meta_kb","compiles","host_ms","proc_ms"],"queries":$fullQs,"sf":"$sfDir"}"""
     val detailPath = java.nio.file.Paths.get("bench")
     java.nio.file.Files.createDirectories(detailPath)
     java.nio.file.Files.writeString(detailPath.resolve("BENCH_FULL_latest.json"),
@@ -331,12 +318,7 @@ object Bench {
     val slowest = results.sortBy(-_._2).take(TailBudgetQueries).sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + math.round(v * 1000) / 1000.0 }
       .mkString("{", ",", "}")
-    // Stop Spark BEFORE printing: nothing (shutdown logs included) may
-    // print after the parsed line.
     spark.sparkContext.setLogLevel("ERROR")
-    spark.stop()
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"queries":$slowest,"detail":"bench/BENCH_FULL_latest.json","sf":"$sfDir"}""")
-    System.out.flush()
+    s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"queries":$slowest,"detail":"bench/BENCH_FULL_latest.json","sf":"$sfDir"}"""
   }
 }

@@ -16,19 +16,13 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * Usage: runmain graft.JobBreakdown <queryName> [passes]
   */
 object JobBreakdown {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    GraftSession.run(defaultCpus = 32)(breakdown(_, args))
+
+  private def breakdown(spark: SparkSession, args: Array[String]): Unit = {
     val name = args(0)
     val passes = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class J(id: Int, t0: Long, site: String, var wall: Double = 0)
@@ -86,6 +80,5 @@ object JobBreakdown {
       }
       DriverHygiene.releasePersisted(spark)
     }
-    spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-audit utility: prints the physical plan of named SparkEntry
@@ -12,26 +11,22 @@ import org.apache.spark.sql.execution.FormattedMode
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names =
-      if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { q =>
-      println(s"===== $q =====")
-      SparkEntry.queries.get(q) match {
-        case None => println(s"(no such query: $q)")
-        case Some(fn) =>
-          // one bad plan must not abort the remaining audits
-          try println(fn(spark, sfDir).queryExecution.explainString(FormattedMode))
-          catch { case scala.util.control.NonFatal(e) =>
-            println(s"(failed: ${e.getMessage})") }
+    GraftSession.run(defaultCpus = 32) { spark =>
+      spark.sparkContext.setLogLevel("ERROR")
+      val names =
+        if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+      names.foreach { q =>
+        println(s"===== $q =====")
+        SparkEntry.queries.get(q) match {
+          case None => println(s"(no such query: $q)")
+          case Some(fn) =>
+            // one bad plan must not abort the remaining audits
+            try println(fn(spark, sfDir).queryExecution.explainString(FormattedMode))
+            catch { case scala.util.control.NonFatal(e) =>
+              println(s"(failed: ${e.getMessage})") }
+        }
+        DriverHygiene.releasePersisted(spark, gc = false)
       }
-      DriverHygiene.releasePersisted(spark, gc = false)
     }
-    spark.stop()
   }
 }

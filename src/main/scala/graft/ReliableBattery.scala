@@ -24,16 +24,13 @@ import org.apache.spark.sql.functions._
   * nonzero on any hash mismatch. */
 object ReliableBattery {
   def main(args: Array[String]): Unit = {
+    val mismatches = GraftSession.run(defaultCpus = 32)(battery(_, args))
+    if (mismatches.nonEmpty) sys.exit(1)
+  }
+
+  /** Runs both modes and returns the gates whose hashes differ. */
+  private def battery(spark: SparkSession, args: Array[String]): Seq[String] = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val only = args.drop(1).toSet
@@ -92,38 +89,33 @@ object ReliableBattery {
 
     val ckptDir = java.nio.file.Files
       .createTempDirectory("graft-reliable-battery").toString
-    val mismatches =
-      try {
-        // pass 1 (local) doubles as warm-up for codegen/JIT; run local
-        // twice and keep the second so the curve compares warm vs warm
-        runAll("local")
-        val local = runAll("local")
-        spark.sparkContext.setCheckpointDir(ckptDir)
-        // SPARK_GRAFT_RELIABLE_EVERY=1 measures the worst case (EVERY cut
-        // durable); the default 3 is the recommended production cadence
-        val every = sys.env.getOrElse("SPARK_GRAFT_RELIABLE_EVERY", "3")
-        spark.conf.set("graft.lineage.reliableEvery", every)
-        val reliable = runAll("reliable")
+    try {
+      // pass 1 (local) doubles as warm-up for codegen/JIT; run local
+      // twice and keep the second so the curve compares warm vs warm
+      runAll("local")
+      val local = runAll("local")
+      spark.sparkContext.setCheckpointDir(ckptDir)
+      // SPARK_GRAFT_RELIABLE_EVERY=1 measures the worst case (EVERY cut
+      // durable); the default 3 is the recommended production cadence
+      val every = sys.env.getOrElse("SPARK_GRAFT_RELIABLE_EVERY", "3")
+      spark.conf.set("graft.lineage.reliableEvery", every)
+      val reliable = runAll("reliable")
 
-        val bad = names.filter(n => local(n).hash != reliable(n).hash)
-        val localTotal = names.map(local(_).sec).sum
-        val relTotal = names.map(reliable(_).sec).sum
-        val worst = names.maxBy(n => reliable(n).sec - local(n).sec)
-        println(
-          s"""{"metric":"reliable_battery","n_queries":${names.size},""" +
-          s""""local_sec":${math.round(localTotal * 100) / 100.0},""" +
-          s""""reliable_every":$every,""" +
-          s""""reliable_sec":${math.round(relTotal * 100) / 100.0},""" +
-          f""""overhead_x":${relTotal / localTotal}%.3f,""" +
-          s""""worst_delta_query":"$worst",""" +
-          f""""worst_delta_sec":${reliable(worst).sec - local(worst).sec}%.2f,""" +
-          s""""hash_mismatches":${bad.size},""" +
-          s""""mismatched":${bad.map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
-        bad
-      } finally {
-        spark.stop()
-        rmTree(java.nio.file.Paths.get(ckptDir))
-      }
-    if (mismatches.nonEmpty) sys.exit(1)
+      val bad = names.filter(n => local(n).hash != reliable(n).hash)
+      val localTotal = names.map(local(_).sec).sum
+      val relTotal = names.map(reliable(_).sec).sum
+      val worst = names.maxBy(n => reliable(n).sec - local(n).sec)
+      println(
+        s"""{"metric":"reliable_battery","n_queries":${names.size},""" +
+        s""""local_sec":${math.round(localTotal * 100) / 100.0},""" +
+        s""""reliable_every":$every,""" +
+        s""""reliable_sec":${math.round(relTotal * 100) / 100.0},""" +
+        f""""overhead_x":${relTotal / localTotal}%.3f,""" +
+        s""""worst_delta_query":"$worst",""" +
+        f""""worst_delta_sec":${reliable(worst).sec - local(worst).sec}%.2f,""" +
+        s""""hash_mismatches":${bad.size},""" +
+        s""""mismatched":${bad.map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
+      bad
+    } finally rmTree(java.nio.file.Paths.get(ckptDir))
   }
 }

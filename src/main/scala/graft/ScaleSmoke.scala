@@ -10,25 +10,22 @@ import org.apache.spark.sql.functions._
   * line per (operator, multiplier) with rows and seconds.
   */
 object ScaleSmoke {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    GraftSession.run(defaultCpus = 32)(smoke(_, args))
+
+  /** `m` copies of `df` unioned, copy i with `idCol` offset by i·10⁷ —
+    * the id-offset self-union both scale smokes grow their inputs by. */
+  private[graft] def multiply(df: DataFrame, idCol: String, m: Int): DataFrame = {
+    val n = 10000000L
+    (0 until m).map(i => df.withColumn(idCol, col(idCol) + lit(i * n)))
+      .reduce(_ unionByName _)
+  }
+
+  private def smoke(spark: SparkSession, args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 4, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-
-    def multiply(df: DataFrame, idCol: String, m: Int): DataFrame = {
-      val n = 10000000L
-      (0 until m).map(i => df.withColumn(idCol, col(idCol) + lit(i * n)))
-        .reduce(_ unionByName _)
-    }
 
     // optional comma-separated op filter for targeted headroom runs;
     // a blank value means "unset", and a filter matching nothing warns
@@ -1454,6 +1451,5 @@ object ScaleSmoke {
     if (ran == 0)
       System.err.println(
         s"[scalesmoke] WARNING: op filter ${onlyOps.getOrElse(Set())} matched no operators")
-    spark.stop()
   }
 }

@@ -265,29 +265,19 @@ object SyncCli {
     if (cfg.driftDiff.isDefined || cfg.driftShortcut.isDefined) {
       // pure read/registry path: no sync runs, like the reference's
       // standalone cartography-detectdrift entry point
-      val preEx = SparkSession.getDefaultSession.isDefined
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      if (cfg.driftShortcut.isDefined) driftAddShortcut(spark, cfg)
-      if (cfg.driftDiff.isDefined) driftDiffRows(spark, cfg).foreach(println)
-      if (!preEx) spark.stop()
+      withSession { spark =>
+        if (cfg.driftShortcut.isDefined) driftAddShortcut(spark, cfg)
+        if (cfg.driftDiff.isDefined) driftDiffRows(spark, cfg).foreach(println)
+      }
       return
     }
     if (cfg.rulesRun.isDefined) {
       // pure read path like the drift legs: `cartography rules run`
       // never syncs, it reads the graph and prints findings
-      val preEx = SparkSession.getDefaultSession.isDefined
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      println(rulesReport(spark, cfg))
-      if (!preEx) spark.stop()
+      withSession { spark =>
+        spark.sparkContext.setLogLevel("WARN")
+        println(rulesReport(spark, cfg))
+      }
       return
     }
     require(cfg.select.nonEmpty, "--select is required (or use --list-modules)")
@@ -297,35 +287,34 @@ object SyncCli {
       plan.stageNames.foreach(println)
       return
     }
-    // getOrCreate joins a live session when embedded (tests, notebooks);
-    // only a session this main itself created gets stopped at the end
-    val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val g =
-      if (cfg.bestEffort) {
-        val (graph, failures) = plan.runBestEffort(Graph(), spark, cfg.tag)
-        failures.foreach { case (stage, e) =>
-          System.err.println(s"[sync-cli] stage $stage failed: ${e.getMessage}")
+    withSession { spark =>
+      spark.sparkContext.setLogLevel("WARN")
+      val g =
+        if (cfg.bestEffort) {
+          val (graph, failures) = plan.runBestEffort(Graph(), spark, cfg.tag)
+          failures.foreach { case (stage, e) =>
+            System.err.println(s"[sync-cli] stage $stage failed: ${e.getMessage}")
+          }
+          graph
+        } else plan.run(Graph(), spark, cfg.tag)
+      g.nodes.toSeq.sortBy(_._1).foreach { case (label, df) =>
+        println(s"$label ${df.count()}")
+      }
+      recordDriftStates(g, cfg)
+      cfg.out.foreach { dir =>
+        g.nodes.foreach { case (label, df) =>
+          df.write.mode("overwrite").parquet(s"$dir/nodes_$label")
         }
-        graph
-      } else plan.run(Graph(), spark, cfg.tag)
-    g.nodes.toSeq.sortBy(_._1).foreach { case (label, df) =>
-      println(s"$label ${df.count()}")
-    }
-    recordDriftStates(g, cfg)
-    cfg.out.foreach { dir =>
-      g.nodes.foreach { case (label, df) =>
-        df.write.mode("overwrite").parquet(s"$dir/nodes_$label")
-      }
-      g.edges.foreach { case ((s, r, d), df) =>
-        df.write.mode("overwrite").parquet(s"$dir/edges_${s}_${r}_$d")
+        g.edges.foreach { case ((s, r, d), df) =>
+          df.write.mode("overwrite").parquet(s"$dir/edges_${s}_${r}_$d")
+        }
       }
     }
-    if (!preExisting) spark.stop()
   }
+
+  /** Every subcommand's session, via [[GraftSession]]: embedded (tests,
+    * notebooks) it joins the live session as is; standalone it runs on
+    * `SPARK_MASTER` when set, else locally. */
+  private def withSession(body: SparkSession => Unit): Unit =
+    GraftSession.run(defaultCpus = 4, sys.env.get("SPARK_MASTER"))(body)
 }

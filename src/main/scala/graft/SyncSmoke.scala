@@ -23,24 +23,15 @@ import graft.graph.{Graph, GraphStore}
   * Usage: `runMain graft.SyncSmoke [mult ...]` (default 1 4 10); prints
   * one JSON line per (mult, stage) and a per-mult total. */
 object SyncSmoke {
-  def main(args: Array[String]): Unit = {
+  import ScaleSmoke.multiply
+
+  def main(args: Array[String]): Unit =
+    GraftSession.run(defaultCpus = 32)(smoke(_, args))
+
+  private def smoke(spark: SparkSession, args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 4, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    def multiply(df: DataFrame, idCol: String, m: Int): DataFrame = {
-      val n = 10000000L
-      (0 until m).map(i => df.withColumn(idCol, col(idCol) + lit(i * n)))
-        .reduce(_ unionByName _)
-    }
 
     val T1 = 9000L; val T2 = 9001L
 
@@ -143,6 +134,5 @@ object SyncSmoke {
       spark.sharedState.cacheManager.clearCache()
       spark.catalog.clearCache()
     }
-    spark.stop()
   }
 }

@@ -482,8 +482,11 @@ object Centrality {
     * Σ deg². Only actual triangles are exploded (3 corners each); the
     * oriented set is shuffled once, into the adjacency
     * ([[outAdjacency]]). */
-  def triangleCount(edges: DataFrame): DataFrame = {
-    val adj = outAdjacency(undirected(edges))
+  def triangleCount(edges: DataFrame): DataFrame = trianglesOn(undirected(edges))
+
+  /** [[triangleCount]] of an already-canonical (a < b, distinct) edge set. */
+  private def trianglesOn(und: DataFrame): DataFrame = {
+    val adj = outAdjacency(und)
     // the third corners ride the intersect result; u and v each count
     // once per triangle on their base edge
     val corners = closeWedges(adj)
@@ -531,7 +534,7 @@ object Centrality {
     val und = undirected(edges).pin
     val deg = und.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-    triangleCount(und.select(col("a").as("src"), col("b").as("dst")))
+    trianglesOn(und)
       .join(deg, Seq("node"))
       .select(col("node"), col("degree"), col("n_triangles"),
         when(col("degree") < 2, lit(0L))
@@ -718,11 +721,14 @@ object Centrality {
     * map-side-combinable count. Edges in no triangle are kept with
     * support 0 via one left join against the canonical edge set.
     * Output: (a, b, support) with a < b. */
-  def edgeSupport(edges: DataFrame): DataFrame = {
-    val und = undirected(edges).pin
+  def edgeSupport(edges: DataFrame): DataFrame = edgeSupportOn(undirected(edges).pin)
+
+  /** [[edgeSupport]] of an already-canonical (a < b, distinct) edge set,
+    * pinned by the caller: it is read twice, by the census and the left
+    * join. */
+  private[graft] def edgeSupportOn(und: DataFrame): DataFrame =
     und.join(supportOn(und), Seq("a", "b"), "left")
       .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
-  }
 
   /** (a, b, support) for the edges of an already-canonical (a < b,
     * distinct) edge set that lie in at least one triangle. */

@@ -1049,8 +1049,7 @@ object Fixpoint {
     val deg = und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val simEdges = graft.graph.Centrality.edgeSupport(
-        und.select(col("a").as("src"), col("b").as("dst")))
+    val simEdges = Centrality.edgeSupportOn(und)
       .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
       .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
       .filter((col("support") + 2) * (col("support") + 2) * 1000000L >=

@@ -43,16 +43,25 @@ object Bridge {
     * mains) flips the whole engine back to deserialized blocks for
     * storm-free environments where re-read latency dominates. */
   def pinStorageLevel(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.storage.StorageLevel = {
-    val v = spark.conf.getOption("graft.lineage.pinStorage")
-      .orElse(sys.props.get("graft.lineage.pinStorage")).getOrElse("ser")
-    v match {
-      case "ser"   => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      case "deser" => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      case other => throw new IllegalArgumentException(
-        s"graft.lineage.pinStorage must be 'ser' or 'deser', got '$other'")
+      : org.apache.spark.storage.StorageLevel =
+    storageLevelOf(pinStorageSetting(spark).getOrElse("ser"))
+
+  /** `graft.lineage.pinStorage` as set — the session conf first, then the
+    * same-named JVM system property — checked to be 'ser' or 'deser';
+    * None when neither is set. The one reading of the knob: both pin
+    * levels and Bench's `pin_storage` stamp resolve through it. */
+  def pinStorageSetting(spark: org.apache.spark.sql.SparkSession): Option[String] = {
+    val key = "graft.lineage.pinStorage"
+    val v = spark.conf.getOption(key).orElse(sys.props.get(key))
+    v.filterNot(Set("ser", "deser")).foreach { other =>
+      throw new IllegalArgumentException(s"$key must be 'ser' or 'deser', got '$other'")
     }
+    v
   }
+
+  private def storageLevelOf(setting: String): org.apache.spark.storage.StorageLevel =
+    if (setting == "ser") org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   /** Local checkpoint that does NOT inherit the parent plan's statistics.
     *
@@ -116,17 +125,8 @@ object Bridge {
     * can force the whole engine storm-safe ('ser') or fast ('deser')
     * for artifact comparability. */
   def hotPinStorageLevel(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.storage.StorageLevel = {
-    val explicit = spark.conf.getOption("graft.lineage.pinStorage")
-      .orElse(sys.props.get("graft.lineage.pinStorage"))
-    explicit match {
-      case Some("ser")   => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      case Some("deser") => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      case Some(other) => throw new IllegalArgumentException(
-        s"graft.lineage.pinStorage must be 'ser' or 'deser', got '$other'")
-      case None => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    }
-  }
+      : org.apache.spark.storage.StorageLevel =
+    storageLevelOf(pinStorageSetting(spark).getOrElse("deser"))
 
   /** True when the frame is already a materialized leaf — a
     * checkpoint/pin scan (`LogicalRDD`), possibly under trivial

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis._
 import graft.graph.{Graph, GraphLoader, GraphStore}
@@ -11,12 +10,7 @@ import graft.schema._
 /** Round-2 surface: edge-property analysis effects, incremental/scoped
   * jobs, matchlink sub-resource stamping, and the size-picked broadcast
   * side of the FuzzyContains theta join. */
-class AnalysisEffectsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AnalysisEffectsSpec extends SparkSuite {
   import spark.implicits._
 
   private def edgeGraph(): Graph = {

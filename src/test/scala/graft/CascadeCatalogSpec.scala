@@ -2,21 +2,14 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Graph, GraphStore}
 import graft.schema._
 import graft.streaming.Streaming
 
-class CascadeCatalogSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CascadeCatalogSpec extends SparkSuite {
   import spark.implicits._
 
   test("cascade cleanup deletes stale children of stale parents, spares fresh ones") {

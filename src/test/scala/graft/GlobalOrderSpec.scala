@@ -2,24 +2,18 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GlobalOrder
 
 /** [[GlobalOrder]] must be a drop-in for the single-partition global
   * window: identical ranks and running sums under a total order, with
   * zero partition-less Window nodes anywhere in its plan. */
-class GlobalOrderSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "7")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GlobalOrderSpec extends SparkSuite {
+  override protected def shufflePartitions: Int = 7
   import spark.implicits._
 
   private def partitionlessWindows(df: DataFrame): Seq[logical.Window] =
@@ -272,10 +266,10 @@ class GlobalOrderSpec extends AnyFunSuite {
     // near-unique keys → probe routes to the uniform path
     check((1 to 800).map(i => (i * 3L, i.toLong, rnd.nextInt(25).toLong)))
     // threshold is config-driven: force the uniform path on skewed data
-    spark.conf.set("graft.globalorder.skewThresholdPpm", "999999")
-    try check((1 to 400).map(i =>
-      (if (i <= 350) 9L else 2000L + i, i.toLong, rnd.nextInt(9).toLong)))
-    finally spark.conf.unset("graft.globalorder.skewThresholdPpm")
+    withConf("graft.globalorder.skewThresholdPpm" -> "999999") {
+      check((1 to 400).map(i =>
+        (if (i <= 350) 9L else 2000L + i, i.toLong, rnd.nextInt(9).toLong)))
+    }
     // empty input survives the probe
     assert(GlobalOrder.withRunningAggsAuto(
       Seq.empty[(Long, Long, Long)].toDF("k", "id", "x"),
@@ -290,8 +284,7 @@ class GlobalOrderSpec extends AnyFunSuite {
     // groupBy(spark_partition_id()) is NOT a valid probe: the pid is
     // nondeterministic, so Catalyst evaluates it after the
     // aggregation's own shuffle and reports the agg stage's layout.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val rows = (1 to 2000).map(i => (if (i <= 1800) 7L else i.toLong, i.toLong))
       val df = rows.toDF("k", "id")
       val out = GlobalOrder.withRunningAggsSkew(df, col("k"), col("id"),
@@ -301,6 +294,6 @@ class GlobalOrderSpec extends AnyFunSuite {
         .collect().map(_._2).filter(_ > 0)
       assert(sizes.max <= 1200, s"hot bucket still dominates: ${sizes.toSeq}")
       assert(sizes.length > 1, "all rows still land in one task")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 }

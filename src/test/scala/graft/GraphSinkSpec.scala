@@ -4,8 +4,7 @@ import java.nio.file.Files
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{Row, SparkSession}
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Row
 
 import graft.graph.{Graph, GraphStore}
 import graft.sink.{GraphSink, SyncMetadata}
@@ -55,12 +54,7 @@ object FakeBoltServer {
   }
 }
 
-class GraphSinkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphSinkSpec extends SparkSuite {
   import spark.implicits._
 
   test("foreachBatched bounds batch sizes and writes every row") {

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Graph, GraphLoader, GraphStore}
 import graft.schema._
@@ -14,13 +12,7 @@ import graft.schema._
   * observable merge behavior the Cypher encodes — firstseen-on-create,
   * lastupdated stamping, null overwrite, scoped cleanup, detach cascade.
   */
-class GraphStoreSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class GraphStoreSpec extends SparkSuite {
   import spark.implicits._
 
   private def nodes(rows: (Long, String)*): org.apache.spark.sql.DataFrame =

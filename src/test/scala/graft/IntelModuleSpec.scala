@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Graph, GraphStore}
 import graft.intel.ComputeInstances
@@ -14,13 +13,7 @@ import graft.intel.ComputeInstances
   * pattern: tests/integration/.../test_ec2_instances.py + check_nodes /
   * check_rels set assertions, tests/integration/util.py:11-72). Fixture
   * values are original. */
-class IntelModuleSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class IntelModuleSpec extends SparkSuite {
   import spark.implicits._
 
   private def writeFixture(lines: String*): String = {

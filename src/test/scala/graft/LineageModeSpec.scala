@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The `graft.lineage.mode` strategy switch must be output-invisible:
   * a fixpoint produces byte-identical results under `local` (default,
@@ -12,13 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `reliable` with an interval (plan-only cuts between durable writes).
   * Reliable mode must actually WRITE to the checkpoint dir — that is
   * the executor-loss-recovery evidence. */
-class LineageModeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "7")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LineageModeSpec extends SparkSuite {
+  override protected def shufflePartitions: Int = 7
   import spark.implicits._
 
   // Chain + ring + isolated pairs: needs several pointer-jump rounds so
@@ -30,16 +23,6 @@ class LineageModeSpec extends AnyFunSuite {
     graph.Fixpoint.connectedComponents(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  private def withMode[A](mode: String, every: Option[Int] = None)(body: => A): A = {
-    spark.conf.set("graft.lineage.mode", mode)
-    every.foreach(n => spark.conf.set("graft.lineage.reliableEvery", n.toString))
-    try body
-    finally {
-      spark.conf.set("graft.lineage.mode", "local")
-      spark.conf.unset("graft.lineage.reliableEvery")
-    }
-  }
-
   private lazy val ckptDir: java.io.File = {
     val dir = Files.createTempDirectory("graft-ckpt").toFile
     spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
@@ -49,7 +32,7 @@ class LineageModeSpec extends AnyFunSuite {
   test("reliable mode matches local mode and writes durable checkpoint files") {
     val want = components() // default local mode
     val dir = ckptDir
-    val got = withMode("reliable") { components() }
+    val got = withConf("graft.lineage.mode" -> "reliable") { components() }
     assert(got == want)
     // the durable evidence: RDD checkpoint files landed under the dir
     def filesUnder(f: java.io.File): Int =
@@ -60,7 +43,8 @@ class LineageModeSpec extends AnyFunSuite {
   test("reliable interval mode (plan-only cuts between durable writes) matches") {
     ckptDir
     val want = components()
-    val got = withMode("reliable", every = Some(3)) { components() }
+    val got = withConf("graft.lineage.mode" -> "reliable",
+      "graft.lineage.reliableEvery" -> "3") { components() }
     assert(got == want)
   }
 
@@ -86,7 +70,8 @@ class LineageModeSpec extends AnyFunSuite {
     val before = rddDirsUnder(dir)
     // any 6 consecutive shared-counter increments hit %3==0 exactly twice,
     // regardless of the counter's phase from earlier tests
-    withMode("reliable", every = Some(3)) {
+    withConf("graft.lineage.mode" -> "reliable",
+        "graft.lineage.reliableEvery" -> "3") {
       (1 to 6).foreach { i =>
         val p = spark.range(10L * i).toDF("id").pinEager
         assert(p.count() == 10L * i) // pinned frame stays correct either path
@@ -135,20 +120,24 @@ class LineageModeSpec extends AnyFunSuite {
     assert(Bridge.hotPinStorageLevel(spark) == StorageLevel.MEMORY_AND_DISK)
     assert(Bridge.pinStorageLevel(spark) == StorageLevel.MEMORY_AND_DISK_SER)
     // explicit global wins over the per-site hint, both directions
-    spark.conf.set("graft.lineage.pinStorage", "ser")
-    try assert(Bridge.hotPinStorageLevel(spark) == StorageLevel.MEMORY_AND_DISK_SER)
-    finally spark.conf.unset("graft.lineage.pinStorage")
-    spark.conf.set("graft.lineage.pinStorage", "deser")
-    try {
+    withConf("graft.lineage.pinStorage" -> "ser") {
+      assert(Bridge.hotPinStorageLevel(spark) == StorageLevel.MEMORY_AND_DISK_SER)
+    }
+    withConf("graft.lineage.pinStorage" -> "deser") {
       assert(Bridge.hotPinStorageLevel(spark) == StorageLevel.MEMORY_AND_DISK)
       assert(Bridge.pinStorageLevel(spark) == StorageLevel.MEMORY_AND_DISK)
-    } finally spark.conf.unset("graft.lineage.pinStorage")
+      assert(Bridge.pinStorageSetting(spark).contains("deser")) // Bench's stamp
+    }
+    assert(Bridge.pinStorageSetting(spark).isEmpty)
+    withConf("graft.lineage.pinStorage" -> "bogus") {
+      intercept[IllegalArgumentException] { Bridge.pinStorageLevel(spark) }
+    }
     // output-invisible: a hot pin is still the same frame
     import graft.Lineage.CutOps
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
     assert(df.pinHot.collect().toSet == df.collect().toSet)
     // reliable mode routes pinHot through the durable pin path
-    withMode("reliable") {
+    withConf("graft.lineage.mode" -> "reliable") {
       assert(df.pinHot.collect().toSet == df.collect().toSet)
     }
   }
@@ -156,7 +145,7 @@ class LineageModeSpec extends AnyFunSuite {
   test("unknown mode fails fast") {
     import Lineage.CutOps
     val df = spark.range(10).toDF("id")
-    withMode("bogus") {
+    withConf("graft.lineage.mode" -> "bogus") {
       intercept[IllegalArgumentException] { df.cut }
     }
   }

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
@@ -11,12 +9,7 @@ import graft.similarity.Similarity
 /** Behavior tests for the LLM-pipeline operators on tiny planted corpora
   * (the oracle battery covers the full determinism contract; these pin the
   * semantics: near-dups found, non-dups not, plumbing shapes right). */
-class LlmOpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LlmOpsSpec extends SparkSuite {
   import spark.implicits._
 
   private lazy val corpus = Seq(

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.ontology.{MappingData, Mappings}
 import graft.ontology.Mappings.{FieldMapping => F, NodeMapping => N}
 
 /** The declarative mapping interpreter (specs.py dataclass semantics →
   * [[Mappings.project]]) and the ported roles/groups corpora. */
-class MappingsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MappingsSpec extends SparkSuite {
   import spark.implicits._
 
   test("project renames, stamps _ont_source, applies static/mapping") {

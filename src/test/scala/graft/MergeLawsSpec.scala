@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.GraphStore
 
@@ -14,12 +13,7 @@ import graft.graph.GraphStore
   * Laws: key uniqueness, same-tag idempotency, untouched-row preservation,
   * and cleanup∘merge = merge for fully-fresh batches.
   */
-class MergeLawsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MergeLawsSpec extends SparkSuite {
   import spark.implicits._
 
   private val genBatch: Gen[List[(Long, Option[String])]] = for {

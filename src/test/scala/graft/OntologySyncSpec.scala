@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ontology.{CanonicalSync, Packages}
 import graft.ontology.Mappings.{FieldMapping => F, ModuleMapping => M, NodeMapping => N}
@@ -12,12 +10,7 @@ import graft.ontology.Mappings.{FieldMapping => F, ModuleMapping => M, NodeMappi
   * intel/ontology/packages.py:55-102) and the source-merge /
   * mutual-unique-link primitives (intel/ontology/utils.py:85-153,
   * analysis/ontology/analysis.py:398-460). */
-class OntologySyncSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OntologySyncSpec extends SparkSuite {
   import spark.implicits._
 
   private def parse(purl: String): Option[(String, String, String, String)] = {

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.permissions.Permissions
 import graft.permissions.Permissions.PolicyStatement
 
 /** Chunked bitmask IAM evaluation: >62 statements span mask blocks;
   * allow in one block must compose with deny in another; condition
   * annotation follows the reference's collect_edge_conditions. */
-class PermissionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PermissionsSpec extends SparkSuite {
   import spark.implicits._
 
   private val principals = Seq((1L, "alice"), (2L, "bob")).toDF("id", "name")

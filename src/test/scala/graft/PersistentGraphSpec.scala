@@ -2,17 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.graph.{PersistentGraph, Skew}
 
-class PersistentGraphSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PersistentGraphSpec extends SparkSuite {
   import spark.implicits._
 
   test("tenant sync merges, cleans stale rows, and rewrites only the touched partition") {

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions.col
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan contract tests: the properties the 100 TB design
   * review checks by hand — filters reaching the parquet scan, small
@@ -12,15 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pinned as assertions so a refactor that silently degrades a plan
   * fails CI instead of a benchmark much later. Markers are stable
   * physical-operator names, not fragile plan text. */
-class PlanContractsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PlanContractsSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(name: String): String = {

@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.JobRegistry
 import graft.client.Readers
@@ -15,12 +13,7 @@ import graft.schema.{ExtraLabel, Field, NodeSchema}
 
 /** Round-2 registry/lifecycle surface: job-directory runner, drift state
   * registry, image header decode, compatibility labels, reader caps. */
-class RegistryMultimodalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RegistryMultimodalSpec extends SparkSuite {
   import spark.implicits._
 
   test("image header decode: PNG/GIF/BMP/JPEG dims, fallback for junk") {

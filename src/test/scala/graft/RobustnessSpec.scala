@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis._
 import graft.graph.{Fixpoint, Graph, GraphStore}
@@ -12,12 +10,7 @@ import graft.permissions.Permissions.{PolicyStatement, RelationshipMapping}
 /** Round-3 hardening: convergence guarantees, deterministic conflict
   * resolution, and graceful handling of legitimate-but-empty or malformed
   * configuration states. */
-class RobustnessSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RobustnessSpec extends SparkSuite {
   import spark.implicits._
 
   test("connectedComponents closes a chain far longer than the round budget") {

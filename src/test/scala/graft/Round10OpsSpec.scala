@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.graph.Fixpoint
@@ -11,12 +8,7 @@ import graft.operators.Changelog
 
 /** Round-10 operators: CDC changelog compaction, semantic dedup,
   * strongly connected components. */
-class Round10OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round10OpsSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- Changelog.apply ----

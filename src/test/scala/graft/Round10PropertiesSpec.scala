@@ -2,19 +2,12 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-10-session property batch: weighted conductance degenerates to
   * the unweighted pass at weight 1 (the same law the weighted/unweighted
   * modularity pair obeys). */
-class Round10PropertiesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round10PropertiesSpec extends SparkSuite {
   import spark.implicits._
 
   test("conductanceWeighted with unit weights equals conductance") {

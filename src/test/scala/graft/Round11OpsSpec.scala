@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Fixpoint
 
@@ -11,12 +10,7 @@ import graft.graph.Fixpoint
   * past 60 hops; adversarial id order extracted one cycle per outer
   * round). Both are fixed by salted-hash priorities + adaptive pointer
   * jumping in maxPropagate; these specs pin the DEFAULT budgets. */
-class Round11OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round11OpsSpec extends SparkSuite {
   import spark.implicits._
 
   /** k 3-cycles (nodes 3i, 3i+1, 3i+2) linked in a condensation chain.

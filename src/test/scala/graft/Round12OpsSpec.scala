@@ -1,20 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Centrality
 
 /** Round-12 additions: edge support + bounded k-truss peel. Hand-sized
   * graphs where the support census and the peel cascade are computable
   * by eye; the convergence case the fixed-rounds gate can't show. */
-class Round12OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round12OpsSpec extends SparkSuite {
   import spark.implicits._
 
   /** K4 on {1,2,3,4} plus a pendant edge 4–5 and a triangle {6,7,8}

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Analytics
 import graft.text.Sketches
@@ -10,12 +9,7 @@ import graft.text.Sketches
 /** Round-13 additions: Misra–Gries heavy hitters and the Analytics gate
   * battery edge cases — hand-sized inputs where counters and cohort
   * cells are checkable by eye. */
-class Round13OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round13OpsSpec extends SparkSuite {
   import spark.implicits._
 
   test("mgSummaries keeps at most k counters per partition") {

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Centrality, Fixpoint}
 import graft.operators.Analytics
@@ -10,12 +9,7 @@ import graft.operators.Analytics
 /** Round-14 additions: transition census, linear attribution, column
   * profile, association rules, WL refinement, Borůvka MSF, densest
   * subgraph — hand-sized inputs with answers checkable by eye. */
-class Round14OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round14OpsSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- transitionCensus ----

@@ -2,9 +2,7 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Centrality, Fixpoint}
 import graft.operators.Analytics
@@ -13,12 +11,7 @@ import graft.operators.Analytics
   * algorithm checked against an independent sequential reference
   * implementation over seeded random inputs — the strongest guard a
   * fixpoint can carry besides its oracle gate. */
-class Round14PropertiesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round14PropertiesSpec extends SparkSuite {
   import spark.implicits._
 
   private def randomGraph(seed: Int, n: Int, m: Int): Seq[(Long, Long)] = {

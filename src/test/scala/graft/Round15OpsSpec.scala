@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Paths
 import graft.operators.{Analytics, Spatial}
@@ -11,12 +9,7 @@ import graft.text.{Sketches, TextFunctions}
 /** Round-15 additions: s–t betweenness counts, DAG layering, bipartite
   * projection, chi², Gini, KMV set ops, postings cosine, vocab growth,
   * grid nearest — hand-sized inputs with answers checkable by eye. */
-class Round15OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round15OpsSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- stBetweenness ----

@@ -2,9 +2,7 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Paths
 import graft.operators.{Changelog, Spatial, Temporal}
@@ -12,12 +10,7 @@ import graft.operators.{Changelog, Spatial, Temporal}
 /** Property tests for the round-15 operator batch: each distributed
   * algorithm checked against an independent sequential reference
   * implementation over seeded random inputs. */
-class Round15PropertiesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round15PropertiesSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- stBetweenness vs sequential BFS path counting ----

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Fixpoint
 
 /** Round-16 additions: SCC artifact reuse and the condensation-from-
   * labels quotient overload. */
-class Round16OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round16OpsSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- condensationEdges(labels, edges) ----

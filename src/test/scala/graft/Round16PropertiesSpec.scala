@@ -2,21 +2,14 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Changelog, Network, Temporal}
 
 /** Property tests for the round-16 batch: incremental join maintenance,
   * bitemporal reads, and CIDR containment checked against independent
   * sequential references over seeded random inputs. */
-class Round16PropertiesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round16PropertiesSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- maintainJoin vs full recompute ----

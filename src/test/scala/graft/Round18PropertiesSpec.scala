@@ -2,9 +2,7 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Attribution, Changelog, EntityResolution}
 
@@ -12,12 +10,7 @@ import graft.operators.{Attribution, Changelog, EntityResolution}
   * cascade peel, and the round-8 analytics (multi-touch attribution,
   * Fellegi–Sunter classification, CDC sequence audit) against
   * independent sequential references over seeded random inputs. */
-class Round18PropertiesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round18PropertiesSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- corenessHIndex vs the cascade peel ----

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Fixpoint
 
 /** Round-14-wave operators: incremental connected components. */
-class Round19OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round19OpsSpec extends SparkSuite {
   import spark.implicits._
 
   private def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =

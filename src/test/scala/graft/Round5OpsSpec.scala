@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Centrality, Layout}
 import graft.operators.{BloomJoin, Temporal}
@@ -10,12 +8,7 @@ import graft.text.{Sampling, TextFunctions}
 
 /** Round-5 operators: SCD2 history, line-level dedup, weighted sampling,
   * URL census, z-order layout, triangle counting, Bloom join pruning. */
-class Round5OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round5OpsSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- scd2 ----

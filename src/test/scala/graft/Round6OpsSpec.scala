@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Fixpoint
 import graft.operators.StringJoin
@@ -10,12 +8,7 @@ import graft.text.{Sampling, Sketches, TextFunctions}
 
 /** Round-6 operators: inverted index, collocations, group outliers,
   * hash split, KMV/Count-Min/HLL sketches, edit-distance join, BFS. */
-class Round6OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round6OpsSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- inverted index ----

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Fixpoint
 import graft.text.TextFunctions
 
 /** Round-7 operators: cross-doc repeated-span census, weighted SSSP. */
-class Round7OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round7OpsSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- repeatedSpans ----

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.graph.{Centrality, Fixpoint}
@@ -10,12 +8,7 @@ import graft.text.{Sketches, TextFunctions}
 
 /** Round-8 operators: composite quality filter, near-dup cluster
   * representative selection. */
-class Round8OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round8OpsSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- qualityFilter ----

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.graph.Centrality
@@ -12,12 +9,7 @@ import graft.stats.DataQuality
 
 /** Round-9 operators: interval coalescing, single-pass data quality,
   * HITS, link prediction, Bloom decontamination. */
-class Round9OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round9OpsSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- coalesceIntervals ----

@@ -2,21 +2,14 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.{AddRelationship, AnalysisJob, AnalysisRunner}
 import graft.drift.Drift
 import graft.graph.{Graph, GraphStore}
 import graft.rules.{Fact, Framework, Rule, RulesRunner}
 
-class RulesDriftSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RulesDriftSpec extends SparkSuite {
   import spark.implicits._
 
   test("SQL-text facts run over registered graph views") {

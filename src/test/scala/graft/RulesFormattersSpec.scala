@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.rules._
 
 /** Findings formatters must mirror the reference's rendering
@@ -11,13 +8,7 @@ import graft.rules._
   * deterministic framework, plus the reference's own CLI assertion
   * ("Rule execution completed" present) for the full library leg
   * (tests/integration/rules/test_cli.py:15-17). */
-class RulesFormattersSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RulesFormattersSpec extends SparkSuite {
   private def tinyFramework: Framework = {
     import spark.implicits._
     val open = Fact(

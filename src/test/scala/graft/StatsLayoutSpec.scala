@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Graph, GraphStore, Layout, Migrations}
 import graft.rules.{Fact, Framework, Rule, RulesRunner}
@@ -16,12 +14,7 @@ object FlakyFetch {
   def clear(): Unit = attempts.clear()
 }
 
-class StatsLayoutSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StatsLayoutSpec extends SparkSuite {
   import spark.implicits._
 
   test("merge delta splits created vs updated") {

@@ -2,24 +2,16 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{GrowingDedupState, Streaming}
 import graft.streaming.Streaming.{FirstSeen, KeyedEvent}
 
 /** Structured Streaming behavior tests via MemoryStream (the synchronous
   * local-smoke pattern: feed batches, processAllAvailable, assert sink). */
-class StreamingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class StreamingSpec extends SparkSuite {
   import spark.implicits._
 
   test("windowed event counts aggregate a replayed stream like a batch") {
@@ -1126,11 +1118,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("a steady growing-components batch runs at most 15 jobs, none a footer read") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    // the streaming gates' session: one shuffle partition, no AQE
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "1")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    implicit val sqlCtx = s.sqlContext
+    implicit val sqlCtx = spark.sqlContext
     val fox = "the quick brown fox jumps over the lazy dog again and again"
     val pipe = "training data pipelines need deduplication at scale every day"
     val batches = Seq(
@@ -1150,17 +1138,20 @@ class StreamingSpec extends AnyFunSuite {
             jobs.add((b, e.jobId, scopes.forall(Set("parallelize", "mapPartitions"))))
           }
     }
-    val src = MemoryStream[(Long, String)]
-    val q = Streaming.growingComponentsSink(src.toDF().toDF("doc_id", "text"),
-      GrowingDedupState(java.nio.file.Files.createTempDirectory("grow-budget").toString),
-      500000L).start()
-    spark.sparkContext.addSparkListener(listener)
-    try batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
-    finally {
-      q.stop()
-      // deliver every queued job start before the listener goes
-      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
-      spark.sparkContext.removeSparkListener(listener)
+    // the streaming gates' session: one shuffle partition, no AQE
+    withConf("spark.sql.shuffle.partitions" -> "1", "spark.sql.adaptive.enabled" -> "false") {
+      val src = MemoryStream[(Long, String)]
+      val q = Streaming.growingComponentsSink(src.toDF().toDF("doc_id", "text"),
+        GrowingDedupState(java.nio.file.Files.createTempDirectory("grow-budget").toString),
+        500000L).start()
+      spark.sparkContext.addSparkListener(listener)
+      try batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
+      finally {
+        q.stop()
+        // deliver every queued job start before the listener goes
+        org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
     }
     import scala.jdk.CollectionConverters._
     val byBatch = jobs.asScala.toSeq.groupBy(_._1)

@@ -2,20 +2,11 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.intel.SyncAssembly
 
 /** CLI front end: flag parsing, conditional module registry, pinned
   * ordering through buildSync, and a full runMain-equivalent sync run. */
-class SyncCliSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SyncCliSpec extends SparkSuite {
   test("parseArgs: full flag surface, defaults, and abort-with-guidance") {
     val c = SyncCli.parseArgs(Seq("--select", "accounts, compute-instances",
       "--sf-dir", "/x", "--update-tag", "42", "--best-effort", "--dry-run",
@@ -54,7 +45,7 @@ class SyncCliSpec extends AnyFunSuite {
   }
 
   test("main: full sync run over fixtures writes every loaded label") {
-    spark // force the shared session so main's getOrCreate joins it
+    spark // force the shared session so main joins it (GraftSession)
     val fx = Files.createTempFile("cli_compute", ".json")
     Files.writeString(fx,
       """{"ReservationId":"r-1","OwnerId":"acct-9","Instances":[{"InstanceId":"i-1","Type":"m1.small","State":"running","LaunchTime":"2026-01-05T10:00:00Z","MetadataOptions":{"HttpTokens":"optional"},"Tags":[{"Key":"team","Value":"core"}],"Nics":[{"NicId":"eni-1","SubnetId":"sub-1"}]}]}""")
@@ -73,6 +64,20 @@ class SyncCliSpec extends AnyFunSuite {
     assert(instances == Set(("i-1", 7L)))
     val meta = spark.read.parquet(s"$out/nodes_ModuleSyncMetadata").count()
     assert(meta == 1L)
+  }
+
+  test("main inside a live session leaves that session's conf as it was") {
+    import spark.implicits._
+    val reg = Files.createTempDirectory("cli_live").toString
+    Seq(100L -> Seq(1L), 200L -> Seq(1L, 2L)).foreach { case (tag, ids) =>
+      SyncCli.recordDriftStates(graft.graph.Graph().withNodes("Asset", ids.toDF("id")),
+        SyncCli.Config(driftRegistry = Some(reg), driftAdd = Seq("Asset"), tag = tag))
+    }
+    withConf("spark.sql.shuffle.partitions" -> "7") {
+      SyncCli.main(Array("--drift-registry", reg, "--drift-diff", "Asset"))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "7")
+    }
+    assert(!spark.sparkContext.isStopped, "main stopped a session it did not build")
   }
 
   test("parseArgs: drift flags parse and bad combos abort") {

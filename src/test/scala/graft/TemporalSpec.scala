@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.operators.Temporal
 
 /** Semantics of the temporal join operators: inclusive/strict as-of
   * boundaries, deterministic tie resolution, and range-join interval
   * boundary handling across bucket edges. */
-class TemporalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TemporalSpec extends SparkSuite {
   import spark.implicits._
 
   test("asofJoin picks the latest prior row, inclusive at equal timestamps") {

@@ -4,9 +4,8 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.Bridge
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Centrality, Fixpoint}
 
@@ -17,17 +16,11 @@ import graft.graph.{Centrality, Fixpoint}
   * ([[Centrality.triangleCount]], `edgeSupport`, `ktruss`,
   * `cliqueCensusK4`, `clusteringCoefficient`) against plain-Scala
   * references, across execution configs, and under a job budget. */
-class VertexRoundsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class VertexRoundsSpec extends SparkSuite {
   type Edges = Seq[(Long, Long)]
 
-  private def df(s: SparkSession, e: Edges, a: String, b: String): DataFrame =
-    s.createDataFrame(e).toDF(a, b)
+  private def df(e: Edges, a: String, b: String): DataFrame =
+    spark.createDataFrame(e).toDF(a, b)
 
   /** Seeded random multigraph over ids spread by 7: duplicates, reversed
     * duplicates and a few self-loops included. */
@@ -143,11 +136,11 @@ class VertexRoundsSpec extends AnyFunSuite {
     for (seed <- 1 to 3) {
       val e = randomGraph(seed, n = 60, m = 150)
       val (want, rounds) = jonesPlassmann(e)
-      val got = pairs(Fixpoint.greedyColoring(df(spark, e, "src", "dst"), maxRounds = rounds))
+      val got = pairs(Fixpoint.greedyColoring(df(e, "src", "dst"), maxRounds = rounds))
       assert(got == want, s"seed $seed")
       // the round budget is exact: one round fewer must throw
       intercept[IllegalArgumentException](
-        Fixpoint.greedyColoring(df(spark, e, "src", "dst"), maxRounds = rounds - 1))
+        Fixpoint.greedyColoring(df(e, "src", "dst"), maxRounds = rounds - 1))
     }
   }
 
@@ -155,17 +148,17 @@ class VertexRoundsSpec extends AnyFunSuite {
     // leaves that outrank the center, the center, the leaves below it
     val (want, rounds) = jonesPlassmann(star)
     assert(rounds == 3)
-    assert(pairs(Fixpoint.greedyColoring(df(spark, star, "src", "dst"))) == want)
+    assert(pairs(Fixpoint.greedyColoring(df(star, "src", "dst"))) == want)
     // self-loops never constrain a color; a node with ONLY a self-loop
     // has no proper edge and is not in the output
     val loops = Seq((1L, 1L), (1L, 2L), (2L, 2L), (9L, 9L), (2L, 3L), (3L, 1L))
-    val got = pairs(Fixpoint.greedyColoring(df(spark, loops, "src", "dst")))
+    val got = pairs(Fixpoint.greedyColoring(df(loops, "src", "dst")))
     assert(got == jonesPlassmann(loops)._1)
     assert(got.keySet == Set(1L, 2L, 3L) && got.values.toSet == Set(0L, 1L, 2L))
   }
 
   test("greedyColoring of an empty edge set is empty") {
-    val got = Fixpoint.greedyColoring(df(spark, Seq((5L, 5L)), "src", "dst"))
+    val got = Fixpoint.greedyColoring(df(Seq((5L, 5L)), "src", "dst"))
     assert(got.columns.toSeq == Seq("node", "color") && got.collect().isEmpty)
   }
 
@@ -174,15 +167,15 @@ class VertexRoundsSpec extends AnyFunSuite {
   test("pagerank with and without dangling redistribution equals the integer reference") {
     for (seed <- 1 to 2; dangling <- Seq(false, true)) {
       val e = randomGraph(seed, n = 40, m = 70)
-      val got = pairs(Centrality.pagerank(df(spark, e, "src", "dst"), iterations = 4,
+      val got = pairs(Centrality.pagerank(df(e, "src", "dst"), iterations = 4,
         redistributeDangling = dangling))
       assert(got == pagerankRef(e, None, 4, dangling), s"seed $seed dangling $dangling")
     }
     // a pure chain leaks mass to its sink unless redistributed
     val chain = Seq((1L, 2L), (2L, 3L))
-    assert(pairs(Centrality.pagerank(df(spark, chain, "src", "dst"), 2)) ==
+    assert(pairs(Centrality.pagerank(df(chain, "src", "dst"), 2)) ==
       Map(1L -> 150000L, 2L -> 277500L, 3L -> 1000000L))
-    assert(pairs(Centrality.pagerank(df(spark, chain, "src", "dst"), 2, true)) ==
+    assert(pairs(Centrality.pagerank(df(chain, "src", "dst"), 2, true)) ==
       pagerankRef(chain, None, 2, dangling = true))
   }
 
@@ -191,7 +184,7 @@ class VertexRoundsSpec extends AnyFunSuite {
     for (seed <- 1 to 2) {
       val e = randomGraph(seed, n = 40, m = 70)
       val seeds = Set(3L, 10L, 7L * 40 + 3) // the last one has no edges
-      val got = pairs(Centrality.pagerankPersonalized(df(spark, e, "src", "dst"),
+      val got = pairs(Centrality.pagerankPersonalized(df(e, "src", "dst"),
         spark.createDataFrame(seeds.toSeq.map(Tuple1(_))).toDF("node"), iterations = 3)
         .select(col("node"), col("rank_x1e6")))
       assert(got == pagerankRef(e, Some(seeds), 3, dangling = false), s"seed $seed")
@@ -204,22 +197,22 @@ class VertexRoundsSpec extends AnyFunSuite {
     for (seed <- 1 to 3) {
       val e = randomGraph(seed, n = 120, m = 90)
       val want = unionFind(e)
-      assert(pairs(Fixpoint.connectedComponents(df(spark, e, "a", "b"))) == want)
+      assert(pairs(Fixpoint.connectedComponents(df(e, "a", "b"))) == want)
       val (oldE, newE) = e.splitAt(e.size / 2)
-      val prev = Fixpoint.connectedComponents(df(spark, oldE, "a", "b"))
-      assert(pairs(Fixpoint.incrementalComponents(prev, df(spark, newE, "a", "b"),
+      val prev = Fixpoint.connectedComponents(df(oldE, "a", "b"))
+      assert(pairs(Fixpoint.incrementalComponents(prev, df(newE, "a", "b"),
         maxRounds = 20)) == want, s"seed $seed, contracted-star form")
-      assert(pairs(Fixpoint.incrementalComponents(prev, df(spark, newE, "a", "b"))) == want,
+      assert(pairs(Fixpoint.incrementalComponents(prev, df(newE, "a", "b"))) == want,
         s"seed $seed, quotient form")
     }
-    assert(Fixpoint.connectedComponents(df(spark, Seq.empty[(Long, Long)], "a", "b"))
+    assert(Fixpoint.connectedComponents(df(Seq.empty[(Long, Long)], "a", "b"))
       .collect().isEmpty)
   }
 
   test("connectedComponents round count matches the reference, budget exact") {
     val chain = (0L until 64L).map(i => (i, i + 1)) ++ Seq((200L, 201L))
     val rounds = componentRounds(chain)
-    val d = df(spark, chain, "a", "b")
+    val d = df(chain, "a", "b")
     assert(pairs(Fixpoint.connectedComponents(d, maxRounds = rounds)) == unionFind(chain))
     // one round fewer still lands on the fixpoint (the last round only
     // confirms it) — two fewer must throw
@@ -278,8 +271,8 @@ class VertexRoundsSpec extends AnyFunSuite {
   }
 
   /** The five operators' outputs on one edge set, each as sorted rows. */
-  private def triangleShaped(s: SparkSession, e: Edges): Seq[Seq[String]] = {
-    val d = df(s, e, "src", "dst")
+  private def triangleShaped(e: Edges): Seq[Seq[String]] = {
+    val d = df(e, "src", "dst")
     def rows(out: DataFrame) = out.collect().map(_.mkString(",")).toSeq.sorted
     Seq(
       rows(Centrality.triangleCount(d)),
@@ -307,7 +300,7 @@ class VertexRoundsSpec extends AnyFunSuite {
         "empty" -> Seq.empty[(Long, Long)], "self-loop only" -> Seq((5L, 5L)))
     graphs.foreach { case (name, e) =>
       val want = triangleShapedRef(e)
-      assert(triangleShaped(spark, e) == want, name)
+      assert(triangleShaped(e) == want, name)
       if (name.startsWith("random")) assert(want(3) != Seq("0"), s"$name has no K4")
     }
     // counts the fixtures are built to have
@@ -322,82 +315,80 @@ class VertexRoundsSpec extends AnyFunSuite {
     val e = randomGraph(7, n = 50, m = 90)
     val seeds = Seq(Tuple1(3L), Tuple1(17L))
     val dense = e ++ cliques ++ hubRim.map { case (a, b) => (a + 1000, b + 1000) }
-    def run(s: SparkSession): Seq[Seq[String]] = {
+    def run(): Seq[Seq[String]] = {
       def rows(d: DataFrame) = d.collect().map(_.mkString(",")).toSeq.sorted
-      triangleShaped(s, dense) ++ Seq(
-        rows(Fixpoint.greedyColoring(df(s, e, "src", "dst"))),
-        rows(Centrality.pagerank(df(s, e, "src", "dst"), 3)),
-        rows(Centrality.pagerank(df(s, e, "src", "dst"), 3, redistributeDangling = true)),
-        rows(Centrality.pagerankPersonalized(df(s, e, "src", "dst"),
-          s.createDataFrame(seeds).toDF("node"), 3)),
-        rows(Fixpoint.connectedComponents(df(s, e, "a", "b"))))
+      triangleShaped(dense) ++ Seq(
+        rows(Fixpoint.greedyColoring(df(e, "src", "dst"))),
+        rows(Centrality.pagerank(df(e, "src", "dst"), 3)),
+        rows(Centrality.pagerank(df(e, "src", "dst"), 3, redistributeDangling = true)),
+        rows(Centrality.pagerankPersonalized(df(e, "src", "dst"),
+          spark.createDataFrame(seeds).toDF("node"), 3)),
+        rows(Fixpoint.connectedComponents(df(e, "a", "b"))))
     }
     val ckpt = Files.createTempDirectory("graft-vr-ckpt").toString
-    val want = run(spark)
+    val want = run()
     assert(want.take(5) == triangleShapedRef(dense))
     assert(want(5) == jonesPlassmann(e)._1.map { case (v, c) => s"$v,$c" }.toSeq.sorted)
     for (parts <- Seq(1, 7); aqe <- Seq(true, false); mode <- Seq("local", "reliable")) {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      s.conf.set("spark.sql.adaptive.enabled", aqe.toString)
-      s.conf.set("graft.lineage.mode", mode)
-      s.conf.set("graft.lineage.dir", ckpt)
-      assert(run(s) == want, s"partitions=$parts aqe=$aqe mode=$mode")
+      withConf("spark.sql.shuffle.partitions" -> parts.toString,
+          "spark.sql.adaptive.enabled" -> aqe.toString,
+          "graft.lineage.mode" -> mode, "graft.lineage.dir" -> ckpt) {
+        assert(run() == want, s"partitions=$parts aqe=$aqe mode=$mode")
+      }
     }
   }
 
   // ---- job budget --------------------------------------------------------
 
   /** Spark jobs `body` runs, counted by a listener. */
-  private def jobsOf(s: SparkSession)(body: => Unit): Int = {
+  private def jobsOf(body: => Unit): Int = {
     val n = new AtomicInteger(0)
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
     }
-    Bridge.waitListenerBus(s)
-    s.sparkContext.addSparkListener(l)
-    try { body; Bridge.waitListenerBus(s); n.get }
-    finally s.sparkContext.removeSparkListener(l)
+    Bridge.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { body; Bridge.waitListenerBus(spark); n.get }
+    finally spark.sparkContext.removeSparkListener(l)
   }
 
+  // both budgets at the suite's own 4 partitions with AQE on
   test("job budget: coloring runs two jobs per round, components three") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.adaptive.enabled", "true")
     // nullable id columns, as read from files: the plans must not split
     // an exchange over inferred null filters
     def nullableDf(e: Edges, a: String, b: String) =
-      s.createDataFrame(e.map { case (x, y) => (Option(x), Option(y)) }).toDF(a, b)
+      spark.createDataFrame(e.map { case (x, y) => (Option(x), Option(y)) }).toDF(a, b)
     val e = randomGraph(11, n = 80, m = 200)
     val colorRounds = jonesPlassmann(e)._2
     assert(colorRounds >= 4)
     // round 1 is the state build (one shuffle + one live count), every
     // further round one shuffle + one live count, then the collect
-    val colorJobs = jobsOf(s)(Fixpoint.greedyColoring(nullableDf(e, "src", "dst")).collect())
+    val colorJobs = jobsOf(Fixpoint.greedyColoring(nullableDf(e, "src", "dst")).collect())
     assert(colorJobs <= 2 * colorRounds + 1, s"$colorJobs jobs for $colorRounds rounds")
     val chain = (0L until 64L).map(i => (i, i + 1))
     val ccRounds = componentRounds(chain)
     assert(ccRounds >= 4)
     // state build (shuffle + label sum), per round the aggregation and
     // pointer-jump exchanges plus the label sum, then the collect
-    val ccJobs = jobsOf(s)(Fixpoint.connectedComponents(nullableDf(chain, "a", "b")).collect())
+    val ccJobs = jobsOf(Fixpoint.connectedComponents(nullableDf(chain, "a", "b")).collect())
     assert(ccJobs <= 3 * ccRounds + 3, s"$ccJobs jobs for $ccRounds rounds")
   }
 
   test("job budget: triangleCount and edgeSupport shuffle the oriented set once") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    val d = s.createDataFrame((randomGraph(11, n = 80, m = 200) ++ cliques)
+    val d = spark.createDataFrame((randomGraph(11, n = 80, m = 200) ++ cliques)
       .map { case (x, y) => (Option(x), Option(y)) }).toDF("src", "dst")
     // the adjacency build is one execution (degree census, orientation,
     // the widening exchange and the aggregation behind it) and the
     // intersect reads the pinned adjacency on both sides: an operator
     // that shuffled the oriented set a second time for the probe side
     // (or re-canonicalized an already-canonical set) exceeds these
-    val triJobs = jobsOf(s)(Centrality.triangleCount(d).collect())
+    val triJobs = jobsOf(Centrality.triangleCount(d).collect())
     assert(triJobs <= 9, s"triangleCount ran $triJobs jobs")
-    val supJobs = jobsOf(s)(Centrality.edgeSupport(d).collect())
+    val supJobs = jobsOf(Centrality.edgeSupport(d).collect())
     assert(supJobs <= 9, s"edgeSupport ran $supJobs jobs")
+    // clustering feeds its pinned canonical set straight into the
+    // adjacency; re-canonicalizing it (one more distinct) exceeds this
+    val ccJobs = jobsOf(Centrality.clusteringCoefficient(d).collect())
+    assert(ccJobs <= 11, s"clusteringCoefficient ran $ccJobs jobs")
   }
 }
