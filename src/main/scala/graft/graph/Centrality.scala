@@ -441,26 +441,6 @@ object Centrality {
       .filter(col("n_groups") >= minCount)
   }
 
-  /** Closeness centrality of a SEED set (landmark closeness): for each
-    * seed, the count of nodes reached within `maxDepth` hops and the sum
-    * of their hop distances; closeness = reached·1e6 div Σdist (floor
-    * ppm — exact integers). The complement of [[harmonicCentrality]]:
-    * that scores every node from sampled seeds, this scores the seeds
-    * themselves — the "how central are these K candidate hubs" question.
-    * Built on [[Fixpoint.seedDistances]]; K seeds cost K parallel BFS
-    * frontiers in the same synchronized rounds, so seed count is the
-    * memory knob and maxDepth the round knob. Isolated seeds (nothing
-    * reached) emit zero closeness via the greatest(Σ,1) guard rather
-    * than a null or a division error. */
-  def closenessFromSeeds(edges: DataFrame, seeds: DataFrame,
-                         maxDepth: Int): DataFrame =
-    Fixpoint.seedDistances(edges, seeds, maxDepth)
-      .filter(col("dist") > 0)
-      .groupBy(col("seed"))
-      .agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("sum_dist"))
-      .withColumn("closeness_x1e6",
-        expr("n_reached * 1000000 div greatest(sum_dist, 1)"))
-
   /** Per-node triangle participation count over an undirected simple
     * graph — the clustering/cohesion signal of community detection and
     * spam-farm flagging (link farms are triangle-dense; legitimate

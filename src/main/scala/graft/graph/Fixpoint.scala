@@ -25,6 +25,24 @@ import graft.Lineage._
   * aggregate once by node (the Pregel superstep), and read their loop
   * test off the round's own materialization ([[loopSums]]) instead of a
   * global aggregate: coloring runs two jobs per round, components three.
+  *
+  * The frontier fixpoints share two loops. [[levelLoop]] is
+  * level-synchronous BFS — expand the frontier one hop, anti-join the
+  * visited keys, stamp the level — behind [[bfsDistances]],
+  * [[seedDistances]], [[bfsPathCounts]], [[nearestSeed]],
+  * [[regularPathQuery]], [[reachWithin]] and the SCC extraction.
+  * [[relaxLoop]] is monotone relaxation of a per-node best value — only
+  * improved nodes re-propagate — behind [[sssp]], [[widestPath]],
+  * [[temporalReach]] and [[Paths.topoLevels]]. Both read the loop test
+  * off the round's own cut ([[loopSums]]), so a round costs its
+  * exchanges and broadcasts plus ONE job. In the executed plans at
+  * sf0.01 (4 partitions, adaptive execution) a BFS round of
+  * `graph_bfs_distances` is five jobs: the edge broadcast, the
+  * distinct's shuffle, shuffle and broadcast of the visited keys, the
+  * loop test. A relaxation round of `graph_sssp` is seven: the edge
+  * broadcast, the min-aggregation's shuffle, shuffle and broadcast of
+  * the current values, the loop test, and the two shuffles of the
+  * full-outer update.
   */
 object Fixpoint {
 
@@ -189,35 +207,20 @@ object Fixpoint {
   }
 
   /** PER-SEED hop distances — [[bfsDistances]] keyed by (seed, node), the
-    * primitive behind sampled-landmark centralities (harmonic, closeness)
-    * and landmark-distance embeddings: each seed's BFS runs in the same
-    * synchronized rounds, frontier rows keyed (seed, node). State is
-    * O(k·|V_reached|) — sample seeds at 100 TB; rounds = maxDepth. */
+    * primitive behind sampled-landmark centralities
+    * ([[Centrality.harmonicCentrality]]) and landmark-distance
+    * embeddings: each seed's BFS runs in the same synchronized rounds,
+    * frontier rows keyed (seed, node). State is O(k·|V_reached|) —
+    * sample seeds at 100 TB; rounds = maxDepth. */
   def seedDistances(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be non-negative")
     val e = edges.select(col("src"), col("dst"))
-    var visited = seeds.select(col("node").as("seed")).distinct()
+    val start = seeds.select(col("node").as("seed")).distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
       .pin
-    visited.count() // materialize the checkpoint before reuse
-    var frontier = visited.select(col("seed"), col("node"))
-    var d = 1L
-    var done = maxDepth == 0
-    while (!done) {
-      val next = frontier.join(e, frontier("node") === e("src"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-        .join(visited.select(col("seed"), col("node")), Seq("seed", "node"),
-          "left_anti")
-        .cut
-      val grew = next.count() > 0
-      if (grew) {
-        visited = visited.unionByName(next.withColumn("dist", lit(d))).cut
-        frontier = next
-      }
-      d += 1
-      done = !grew || d > maxDepth
-    }
-    visited
+    levelLoop(start, Seq("seed", "node"), Some("dist"), maxDepth) { f =>
+      f.join(e, f("node") === e("src")).select(col("seed"), col("dst").as("node")).distinct()
+    }._1
   }
 
   /** Single-source (or multi-seed) shortest paths over positively
@@ -226,52 +229,25 @@ object Fixpoint {
     * keeps the min distance per node. Rounds needed = the hop count of
     * the longest shortest path, so this is the right tool for shallow
     * weighted graphs (dependency DAGs, containment hierarchies with
-    * costs); convergence = an empty improvement frontier. Per round:
-    * one equi-join of the frontier against the edge set + one min
-    * aggregation + one full-outer distance update — work proportional
-    * to the relaxations that actually happen, lineage truncated by lazy
-    * localCheckpoints exactly like the other fixpoints here. Weights
+    * costs); convergence = an empty improvement frontier. One
+    * [[relaxLoop]] round: the frontier ⋈ edges equi-join, one min
+    * aggregation, a left join against the current distances, the loop
+    * test and a full-outer distance update — seven jobs per round in
+    * the executed `graph_sssp` plans (the pinned edges are re-broadcast
+    * every round; see the object header). Work is proportional to the
+    * relaxations that actually happen, lineage cut per round. Weights
     * must be non-negative (Bellman-Ford with a round budget would
     * silently miss longer negative-cost paths). Throws on
     * non-convergence after a confirmation round. */
   def sssp(edges: DataFrame, seeds: DataFrame, maxRounds: Int = 30): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w")).pin
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).pin
-    var frontier = dist
-    // frontier-based relaxation (the SPFA/delta-stepping shape): only
-    // edges leaving nodes IMPROVED last round are re-examined, so total
-    // work is proportional to the relaxations that actually happen, not
-    // rounds × O(E + V) — the difference between a settled 100 TB graph
-    // coasting through late rounds and re-shuffling every edge each round.
-    def improvements(front: DataFrame): DataFrame =
-      e.join(front.select(col("node").as("src"), col("dist").as("_sd")), Seq("src"))
-        .groupBy(col("dst").as("node")).agg(min(col("_sd") + col("w")).as("_cand"))
-        .join(dist.withColumnRenamed("dist", "_old"), Seq("node"), "left")
-        .filter(col("_old").isNull || col("_cand") < col("_old"))
-        .select(col("node"), col("_cand").as("dist"))
-    var round = 0
-    var settled = false
-    while (!settled && round < maxRounds) {
-      val improved = improvements(frontier).cut
-      if (improved.isEmpty) settled = true
-      else {
-        dist = dist
-          .join(improved.withColumnRenamed("dist", "_new"), Seq("node"), "full")
-          .select(col("node"), coalesce(col("_new"), col("dist")).as("dist"))
-          .cut
-        frontier = improved
-      }
-      round += 1
-    }
-    // budget exhausted with a live frontier: one confirmation pass
-    // distinguishes "last round landed exactly on the fixpoint" (its
-    // improvements are empty) from genuinely truncated paths
-    if (!settled && !improvements(frontier).isEmpty)
-      throw new IllegalStateException(
+    val init = seeds.select(col("node")).distinct().withColumn("dist", lit(0L)).pin
+    relaxLoop(init, "dist", _ < _, maxRounds,
         s"sssp did not converge in $maxRounds rounds; raise maxRounds " +
-          "(distances would be silently non-minimal otherwise)")
-    dist
+          "(distances would be silently non-minimal otherwise)") { f =>
+      e.join(f.select(col("node").as("src"), col("dist").as("_sd")), Seq("src"))
+        .groupBy(col("dst").as("node")).agg(min(col("_sd") + col("w")).as("dist"))
+    }
   }
 
   /** Incremental connected-components maintenance: fold NEW edges into
@@ -331,35 +307,13 @@ object Fixpoint {
   def widestPath(edges: DataFrame, seeds: DataFrame, sourceWidth: Long,
                  maxRounds: Int = 30): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("cap")).pin
-    var width = seeds.select(col("node")).distinct()
-      .withColumn("width", lit(sourceWidth)).pin
-    var frontier = width
-    def improvements(front: DataFrame): DataFrame =
-      e.join(front.select(col("node").as("src"), col("width").as("_w")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(max(least(col("_w"), col("cap"))).as("_cand"))
-        .join(width.withColumnRenamed("width", "_old"), Seq("node"), "left")
-        .filter(col("_old").isNull || col("_cand") > col("_old"))
-        .select(col("node"), col("_cand").as("width"))
-    var round = 0
-    var settled = false
-    while (!settled && round < maxRounds) {
-      val improved = improvements(frontier).cut
-      if (improved.isEmpty) settled = true
-      else {
-        width = width
-          .join(improved.withColumnRenamed("width", "_new"), Seq("node"), "full")
-          .select(col("node"), coalesce(col("_new"), col("width")).as("width"))
-          .cut
-        frontier = improved
-      }
-      round += 1
-    }
-    if (!settled && !improvements(frontier).isEmpty)
-      throw new IllegalStateException(
+    val init = seeds.select(col("node")).distinct().withColumn("width", lit(sourceWidth)).pin
+    relaxLoop(init, "width", _ > _, maxRounds,
         s"widestPath did not converge in $maxRounds rounds; raise maxRounds " +
-          "(widths would be silently non-maximal otherwise)")
-    width
+          "(widths would be silently non-maximal otherwise)") { f =>
+      e.join(f.select(col("node").as("src"), col("width").as("_w")), Seq("src"))
+        .groupBy(col("dst").as("node")).agg(max(least(col("_w"), col("cap"))).as("width"))
+    }
   }
 
   /** Regular path query evaluation: reachability over labeled edges
@@ -372,8 +326,9 @@ object Fixpoint {
     * State = (graph node, automaton state) pairs; one round expands the
     * frontier over edges joined with the (tiny, broadcast) transition
     * table on the label, anti-joins the visited set, repeats to
-    * fixpoint — O(V·|states|) visited entries, O(diameter·|states|)
-    * rounds, the budget-throw convention of the other fixpoints.
+    * fixpoint ([[levelLoop]] keyed (node, state)) — O(V·|states|)
+    * visited entries, O(diameter·|states|) rounds, the budget-throw
+    * convention of the other fixpoints.
     * `nfa` columns: (s_from, label, s_to); `starts` seeds every listed
     * node in automaton state 0. Returns ALL visited (node, state)
     * pairs — filter `state` to the accepting set for the answer, keep
@@ -383,31 +338,18 @@ object Fixpoint {
     val e = edges.select(col("src"), col("dst"), col("label"))
       .pinHot // loop-static: one read per NFA round
     val t = broadcast(nfa.select(col("s_from"), col("label"), col("s_to")))
-    var visited = starts.select(col("node")).distinct()
-      .withColumn("state", lit(0L)).pin
-    visited.count()
-    var frontier = visited
-    var round = 0
-    var done = false
-    while (!done) {
-      round += 1
-      val next = frontier
-        .join(e, frontier("node") === e("src"))
-        .join(t, frontier("state") === t("s_from") && e("label") === t("label"))
+    val start = starts.select(col("node")).distinct().withColumn("state", lit(0L)).pin
+    // the maxRounds-th expansion may only confirm the fixpoint
+    val (visited, dry) = levelLoop(start, Seq("node", "state"), None, math.max(maxRounds, 1)) { f =>
+      f.join(e, f("node") === e("src"))
+        .join(t, f("state") === t("s_from") && e("label") === t("label"))
         .select(e("dst").as("node"), t("s_to").as("state"))
         .distinct()
-        .join(visited, Seq("node", "state"), "left_anti")
-        .cut
-      if (next.isEmpty) done = true
-      else {
-        if (round >= maxRounds)
-          throw new IllegalStateException(
-            s"regularPathQuery did not converge in $maxRounds rounds; " +
-              "raise maxRounds (results would be silently incomplete)")
-        visited = visited.unionByName(next).cut
-        frontier = next
-      }
     }
+    if (!dry)
+      throw new IllegalStateException(
+        s"regularPathQuery did not converge in $maxRounds rounds; " +
+          "raise maxRounds (results would be silently incomplete)")
     visited
   }
 
@@ -427,35 +369,14 @@ object Fixpoint {
   def temporalReach(edges: DataFrame, seeds: DataFrame,
                     maxRounds: Int = 30): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("t")).pin
-    var arr = seeds.select(col("node")).distinct()
-      .withColumn("arrival", lit(0L)).pin
-    var frontier = arr
-    def improvements(front: DataFrame): DataFrame =
-      e.join(front.select(col("node").as("src"), col("arrival").as("_a")), Seq("src"))
-        .filter(col("t") >= col("_a"))
-        .groupBy(col("dst").as("node")).agg(min(col("t")).as("_cand"))
-        .join(arr.withColumnRenamed("arrival", "_old"), Seq("node"), "left")
-        .filter(col("_old").isNull || col("_cand") < col("_old"))
-        .select(col("node"), col("_cand").as("arrival"))
-    var round = 0
-    var settled = false
-    while (!settled && round < maxRounds) {
-      val improved = improvements(frontier).cut
-      if (improved.isEmpty) settled = true
-      else {
-        arr = arr
-          .join(improved.withColumnRenamed("arrival", "_new"), Seq("node"), "full")
-          .select(col("node"), coalesce(col("_new"), col("arrival")).as("arrival"))
-          .cut
-        frontier = improved
-      }
-      round += 1
-    }
-    if (!settled && !improvements(frontier).isEmpty)
-      throw new IllegalStateException(
+    val init = seeds.select(col("node")).distinct().withColumn("arrival", lit(0L)).pin
+    relaxLoop(init, "arrival", _ < _, maxRounds,
         s"temporalReach did not converge in $maxRounds rounds; raise maxRounds " +
-          "(arrivals would be silently non-minimal otherwise)")
-    arr
+          "(arrivals would be silently non-minimal otherwise)") { f =>
+      e.join(f.select(col("node").as("src"), col("arrival").as("_a")), Seq("src"))
+        .filter(col("t") >= col("_a"))
+        .groupBy(col("dst").as("node")).agg(min(col("t")).as("arrival"))
+    }
   }
 
   /** Hop-distance labeling from a seed set: level-synchronous BFS
@@ -465,38 +386,23 @@ object Fixpoint {
     * within `maxDepth` hops of a seed; distances are exact minima
     * because a node is labeled the FIRST round it appears.
     *
-    * Cost is O(E) per level with one join + one anti-join + one distinct
-    * — the right tool for small diameters / bounded neighborhoods
+    * One [[levelLoop]] round per level: the frontier ⋈ edges join, one
+    * distinct, the anti-join against the visited keys and the loop
+    * test — O(E) work and five jobs per level in the executed
+    * `graph_bfs_distances` plans (the edges, read afresh, are broadcast
+    * every level; the visited keys are shuffled and broadcast). The
+    * right tool for small diameters / bounded neighborhoods
     * (blast-radius queries, k-hop enrichment). For full reachability
     * over long chains use [[transitiveClosure]]'s path doubling instead:
-    * BFS pays a round per hop, doubling pays log₂. localCheckpoint per
-    * round truncates lineage exactly like the other fixpoints here. */
+    * BFS pays a round per hop, doubling pays log₂. Lineage is cut per
+    * level. */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be non-negative")
     val e = edges.select(col("src"), col("dst"))
-    var visited = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).pin
-    visited.count() // materialize the checkpoint before reuse
-    var frontier = visited.select(col("node"))
-    var d = 1L
-    var done = maxDepth == 0
-    while (!done) {
-      val next = frontier.join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .cut
-      val grew = next.count() > 0
-      if (grew) {
-        // lazy checkpoint: next round's anti-join (or the final read)
-        // materializes it — no separate per-level job needed
-        visited = visited.unionByName(next.withColumn("dist", lit(d)))
-          .cut
-        frontier = next.select(col("node"))
-      }
-      d += 1
-      done = !grew || d > maxDepth
-    }
-    visited
+    val start = seeds.select(col("node")).distinct().withColumn("dist", lit(0L)).pin
+    levelLoop(start, Seq("node"), Some("dist"), maxDepth) { f =>
+      f.join(e, f("node") === e("src")).select(col("dst").as("node")).distinct()
+    }._1
   }
 
   /** Shortest-path COUNTS from a seed set (the integer-exact forward
@@ -509,7 +415,7 @@ object Fixpoint {
     * itself is the useful redundancy signal (σ = 1 along a route means
     * a single point of failure, large σ means path diversity).
     *
-    * Same shape and cost as [[bfsDistances]] — one join + one
+    * Same [[levelLoop]] as [[bfsDistances]] — one join + one
     * map-side-combinable sum + one anti-join per level, lineage cut per
     * round. σ grows multiplicatively on braided DAGs; longs hold ~2^63
     * path multiplicity, assert upstream when levels × branching could
@@ -517,30 +423,13 @@ object Fixpoint {
   def bfsPathCounts(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be non-negative")
     val e = edges.select(col("src"), col("dst"))
-    var visited = seeds.select(col("node")).distinct()
+    val start = seeds.select(col("node")).distinct()
       .withColumn("dist", lit(0L)).withColumn("sigma", lit(1L))
       .pin
-    visited.count()
-    var frontier = visited.select(col("node"), col("sigma"))
-    var d = 1L
-    var done = maxDepth == 0
-    while (!done) {
-      val next = frontier
-        .join(e, frontier("node") === e("src"))
-        .select(col("dst"), col("sigma"))
+    levelLoop(start, Seq("node"), Some("dist"), maxDepth) { f =>
+      f.join(e, f("node") === e("src"))
         .groupBy(col("dst").as("node")).agg(sum(col("sigma")).as("sigma"))
-        .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .cut
-      val grew = next.count() > 0
-      if (grew) {
-        visited = visited.unionByName(
-          next.select(col("node"), lit(d).as("dist"), col("sigma"))).cut
-        frontier = next.select(col("node"), col("sigma"))
-      }
-      d += 1
-      done = !grew || d > maxDepth
-    }
-    visited
+    }._1
   }
 
   /** Nearest-seed labeling: multi-source BFS that assigns every node
@@ -553,35 +442,20 @@ object Fixpoint {
     * Level-synchronous like [[bfsDistances]] (distances are exact minima
     * because a node is labeled the first round it appears), with the
     * frontier carrying (node, label) and a per-round min(label) aggregate
-    * resolving same-distance ties deterministically. One join + one
-    * map-side-combinable min + one anti-join per level, lineage truncated
-    * by lazy localCheckpoints. Seeds listed twice keep their smallest
+    * resolving same-distance ties deterministically. One [[levelLoop]]
+    * round per level: one join + one map-side-combinable min + one
+    * anti-join, lineage cut per level. Seeds listed twice keep their smallest
     * label; a seed's own label always wins at distance 0. */
   def nearestSeed(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be non-negative")
     val e = edges.select(col("src"), col("dst"))
-    var visited = seeds.select(col("node"), col("label"))
+    val start = seeds.select(col("node"), col("label"))
       .groupBy(col("node")).agg(min(col("label")).as("label"))
       .withColumn("dist", lit(0L)).pin
-    visited.count() // materialize the checkpoint before reuse
-    var frontier = visited.select(col("node"), col("label"))
-    var d = 1L
-    var done = maxDepth == 0
-    while (!done) {
-      val next = frontier.join(e, frontier("node") === e("src"))
+    levelLoop(start, Seq("node"), Some("dist"), maxDepth) { f =>
+      f.join(e, f("node") === e("src"))
         .groupBy(col("dst").as("node")).agg(min(col("label")).as("label"))
-        .join(visited, Seq("node"), "left_anti")
-        .cut
-      val grew = next.count() > 0
-      if (grew) {
-        visited = visited.unionByName(next.withColumn("dist", lit(d)))
-          .cut
-        frontier = next.select(col("node"), col("label"))
-      }
-      d += 1
-      done = !grew || d > maxDepth
-    }
-    visited
+    }._1
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) for community
@@ -1106,16 +980,12 @@ object Fixpoint {
     * (color(v) := max(color(v), color(color(v).n)) — sound because
     * color(v).n reaches v and anything reaching it reaches v), so depth
     * D costs O(jumpAfter + log D) rounds, never O(D). Convergence test:
-    * colors only grow lexicographically, so the pair of decimal sums
-    * (Σh, Σn) is stationary exactly at the fixpoint. */
+    * colors only grow lexicographically, so the pair of exact sums
+    * (Σh, Σn) is stationary exactly at the fixpoint; it rides on each
+    * round's own materialization ([[loopSums]]). */
   private def maxPropagate(edges: DataFrame, nodes: DataFrame, pri: Column,
                            maxRounds: Int, jumpAfter: Int = 8): Option[DataFrame] = {
-    def sums(df: DataFrame): (java.math.BigDecimal, java.math.BigDecimal) = {
-      val r = df.agg(
-        sum(col("color.h").cast("decimal(38,0)")),
-        sum(col("color.n").cast("decimal(38,0)"))).head
-      (r.getDecimal(0), r.getDecimal(1))
-    }
+    def sums(df: DataFrame): IndexedSeq[BigInt] = loopSums(df, col("color.h"), col("color.n"))
     var colors = nodes.select(col("node"), pri.as("color")).cut
     var prev = sums(colors)
     var converged = false
@@ -1139,12 +1009,10 @@ object Fixpoint {
       }
       colors = cur
       val s = sums(colors)
-      converged = s._1.compareTo(prev._1) == 0 && s._2.compareTo(prev._2) == 0
+      converged = s == prev
       prev = s
       round += 1
     }
-    if (sys.env.contains("GRAFT_SCC_DEBUG"))
-      System.err.println(s"[scc] maxPropagate rounds=$round converged=$converged")
     if (converged) Some(colors.select(col("node"), col("color.n").as("croot")))
     else None
   }
@@ -1164,8 +1032,8 @@ object Fixpoint {
     *     class contains its root r, and pri(r) is the max priority in
     *     the class.
     *  3. EXTRACT: SCC(r) = {v in class : v →* r} — BFS backward closure
-    *     from the roots over class-internal edges (rounds = SCC
-    *     diameter, the cheap common case), falling back past the BFS
+    *     from the roots over class-internal edges ([[levelLoop]]; rounds
+    *     = SCC diameter, the cheap common case), falling back past the BFS
     *     budget to a second [[maxPropagate]] over the class edges
     *     REVERSED with the SAME priorities: backward croot == forward
     *     croot exactly on the root's SCC. Both directions are
@@ -1269,24 +1137,14 @@ object Fixpoint {
                 .filter(col("_cs") === col("_cd"))
                 .select(col("src"), col("dst"))
                 .cut
-              var bfsMarked = fwd.filter(col("node") === col("croot"))
+              val roots = fwd.filter(col("node") === col("croot"))
                 .select(col("node"), col("croot").as("component")).cut
-              var frontier = bfsMarked
-              var frontierCount = frontier.count()
-              var bfsRound = 0
-              val bfsBudget = math.min(15, maxInnerRounds)
-              while (frontierCount > 0 && bfsRound < bfsBudget) {
-                frontier = ce
-                  .join(frontier.select(col("node").as("dst"), col("component")), Seq("dst"))
-                  .select(col("src").as("node"), col("component")).distinct()
-                  .join(bfsMarked, Seq("node"), "left_anti")
-                  .cut
-                frontierCount = frontier.count()
-                if (frontierCount > 0)
-                  bfsMarked = bfsMarked.unionByName(frontier).cut
-                bfsRound += 1
-              }
-              if (frontierCount == 0) marked = bfsMarked
+              val (bfsMarked, dry) =
+                levelLoop(roots, Seq("node"), None, math.min(15, maxInnerRounds)) { f =>
+                  ce.join(f.select(col("node").as("dst"), col("component")), Seq("dst"))
+                    .select(col("src").as("node"), col("component")).distinct()
+                }
+              if (dry) marked = bfsMarked
               else if (mode == 0) mode = 1 // deep SCC: redo the round hashed
               else {
                 val bwd = maxPropagate(
@@ -1311,8 +1169,6 @@ object Fixpoint {
           .cut
         remainingCount = remaining.count()
       }
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        System.err.println(s"[scc] outer=$outer remaining=$remainingCount")
       outer += 1
     }
     if (remainingCount > 0) throw new IllegalStateException(
@@ -1325,20 +1181,89 @@ object Fixpoint {
       .select(col("node"), col("_cmax").as("component"))
   }
 
-  /** Bounded-depth reachability (the `*1..k` form): plain frontier
-    * expansion, k rounds, no closure materialization. */
+  /** Bounded-depth reachability (the `*1..k` form): a per-source BFS
+    * over (src, dst) pairs ([[levelLoop]]) — at most k − 1 expansions
+    * of the one-hop pairs, fewer when the frontier runs dry, no closure
+    * materialization. */
   def reachWithin(edges: DataFrame, depth: Int): DataFrame = {
-    val base = edges.select(col("src"), col("dst")).distinct()
-    var acc = base.pinEager
-    var frontier = base
-    (2 to depth).foreach { _ =>
-      frontier = frontier.alias("f")
-        .join(base.alias("e"), col("f.dst") === col("e.src"))
-        .select(col("f.src").as("src"), col("e.dst").as("dst"))
-        .distinct()
-      acc = acc.unionByName(frontier).distinct().cutEager
+    val base = edges.select(col("src"), col("dst")).distinct().pin
+    levelLoop(base, Seq("src", "dst"), None, depth - 1) { f =>
+      f.join(base.select(col("src").as("_m"), col("dst").as("_d")), col("dst") === col("_m"))
+        .select(col("src"), col("_d").as("dst")).distinct()
+    }._1
+  }
+
+  /** The level-synchronous frontier loop (BFS shape). Each round
+    * expands the frontier one hop (`expand`: keys plus payload, one row
+    * per key), anti-joins away every key already visited and cuts the
+    * result; the round's row count rides on that cut's own
+    * materialization ([[loopSums]]). A non-empty level joins the visited
+    * set, stamped with the round number in `level` when given, and
+    * becomes the next frontier. `start` holds the level-0 rows (keys,
+    * payload, `level` at 0); the first frontier is `start` without
+    * `level`. Runs at most `maxLevels` rounds; returns the visited frame
+    * and whether the frontier ran dry (a round came back empty) within
+    * them. */
+  private[graph] def levelLoop(start: DataFrame, keys: Seq[String], level: Option[String],
+                               maxLevels: Int)(expand: DataFrame => DataFrame)
+      : (DataFrame, Boolean) = {
+    var visited = start
+    var frontier = level.fold(start)(start.drop)
+    var d = 1L
+    var dry = false
+    while (!dry && d <= maxLevels) {
+      val next = expand(frontier)
+        .join(visited.select(keys.map(col): _*), keys, "left_anti")
+        .cut
+      dry = loopSums(next, lit(1L)).head == 0
+      if (!dry) {
+        // lazy: the next round's anti-join (or the caller) materializes it
+        visited = visited.unionByName(level.fold(next)(l => next.withColumn(l, lit(d)))).cut
+        frontier = next
+      }
+      d += 1
     }
-    acc
+    (visited, dry)
+  }
+
+  /** The monotone-relaxation frontier loop (SPFA shape) over a per-node
+    * best value: only nodes IMPROVED last round re-propagate, so total
+    * work follows the relaxations that actually happen, not rounds ×
+    * O(E + V). `candidates(frontier)` yields (node, `value`), one row per
+    * node; a candidate survives when the node has no value yet or
+    * `better(candidate, current)` holds, and the survivors, cut, are the
+    * next frontier and overwrite `best` (one full-outer join). The
+    * round's row count rides on the cut's own materialization
+    * ([[loopSums]]). After `maxRounds` non-empty rounds one confirmation
+    * round tells "the last round landed exactly on the fixpoint" from a
+    * truncated relaxation, which throws `failure`. Output: `init`'s
+    * (node, `value`) columns. */
+  private[graph] def relaxLoop(init: DataFrame, value: String, better: (Column, Column) => Column,
+                               maxRounds: Int, failure: String)
+                              (candidates: DataFrame => DataFrame): DataFrame = {
+    var best = init
+    def improvements(front: DataFrame): DataFrame =
+      candidates(front)
+        .join(best.select(col("node"), col(value).as("_old")), Seq("node"), "left")
+        .filter(col("_old").isNull || better(col(value), col("_old")))
+        .select(col("node"), col(value))
+    var frontier = init
+    var round = 0
+    var settled = false
+    while (!settled && round < maxRounds) {
+      val improved = improvements(frontier).cut
+      settled = loopSums(improved, lit(1L)).head == 0
+      if (!settled) {
+        best = best.join(improved.withColumnRenamed(value, "_new"), Seq("node"), "full")
+          .select(col("node"), coalesce(col("_new"), col(value)).as(value))
+          .cut
+        frontier = improved
+      }
+      round += 1
+    }
+    if (!settled && loopSums(improvements(frontier), lit(1L)).head > 0)
+      throw new IllegalStateException(failure)
+    best
   }
 
   /** Column sums (as longs, summed exactly) over `df` in ONE job that

@@ -11,10 +11,16 @@ import graft.Lineage._
   * shortest attack path between an exposed entry point and a crown
   * jewel" with per-pair Cypher path queries (e.g. the shortestPath
   * patterns its read surface encourages over synced AWS graphs); these
-  * are the same questions as whole-graph DataFrame programs — every
-  * round is one join + one combinable aggregation, so the plans scale
-  * with |E| per round, not with the number of paths (path COUNTS are
-  * aggregated, never enumerated).
+  * are the same questions as whole-graph DataFrame programs. The
+  * round-based ones run on [[Fixpoint]]'s two frontier loops: a round
+  * is one frontier ⋈ edges join + one combinable aggregation, plus the
+  * loop's bookkeeping (the anti-join against the visited keys for BFS;
+  * the left join against the current values and the full-outer update
+  * for relaxation). Under adaptive execution each exchange or
+  * broadcast of a round is one Spark job, plus one for the loop test —
+  * five jobs per BFS round and seven per relaxation round in the
+  * executed sf0.01 plans. The plans scale with |E| per round, not with
+  * the number of paths (path COUNTS are aggregated, never enumerated).
   */
 object Paths {
 
@@ -59,46 +65,30 @@ object Paths {
     * dependency). The classic build/dependency-graph question over the
     * condensation DAG [[Fixpoint.sccCondensation]] produces.
     *
-    * Frontier-relaxed fixpoint: a node re-propagates only in the round
-    * after its level grew, so each round is one (frontier ⋈ edges) join
-    * + one max-combine + one join against the current levels; total work
-    * is O(E · depth) worst case but proportional to actual level churn.
-    * Cycles never converge — the `maxRounds` budget throws rather than
-    * spinning (a DAG of depth ≤ maxRounds is the documented contract).
-    * Output: (node, level). */
+    * Frontier-relaxed fixpoint ([[Fixpoint.relaxLoop]] with a max
+    * comparison): a node re-propagates only in the round after its
+    * level grew, so a round is the (frontier ⋈ edges) join, one
+    * max-combine, a left join against the current levels, the loop
+    * test and the full-outer level update — the plan shape of
+    * [[Fixpoint.sssp]]'s round; total work is O(E · depth) worst case
+    * but proportional to actual level churn. Cycles never converge —
+    * the `maxRounds` budget throws rather than spinning (a DAG of depth
+    * < maxRounds is the documented contract: round `maxRounds` may only
+    * confirm the fixpoint). Output: (node, level). */
   def topoLevels(edges: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be positive")
     val e = edges.select(col("src"), col("dst"))
-    var levels = e.select(col("src").as("node"))
+    val init = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct().withColumn("level", lit(0L)).cut
-    levels.count()
-    var frontier = levels
-    var round = 0
-    var done = false
-    while (!done) {
-      round += 1
-      val cand = frontier.join(e, frontier("node") === e("src"))
-        .groupBy(e("dst").as("node"))
-        .agg(max(col("level") + 1L).as("cand"))
-      val grew = cand.join(levels, Seq("node"))
-        .filter(col("cand") > col("level"))
-        .select(col("node"), col("cand").as("level")).cut
-      val n = grew.count()
-      if (n == 0) done = true
-      else {
-        if (round >= maxRounds)
-          throw new IllegalStateException(
-            s"topoLevels did not converge in $maxRounds rounds - " +
-              "cycle in the input or depth past the budget; raise maxRounds")
-        levels = levels.join(grew.select(col("node").as("gn"), col("level").as("gl")),
-            col("node") === col("gn"), "left")
-          .select(col("node"),
-            coalesce(col("gl"), col("level")).as("level")).cut
-        frontier = grew
-      }
+    // round maxRounds may only confirm the fixpoint: that is the relax
+    // loop's confirmation round after maxRounds - 1 growing rounds
+    Fixpoint.relaxLoop(init, "level", _ > _, maxRounds - 1,
+        s"topoLevels did not converge in $maxRounds rounds - " +
+          "cycle in the input or depth past the budget; raise maxRounds") { f =>
+      f.join(e, f("node") === e("src"))
+        .groupBy(e("dst").as("node")).agg(max(col("level") + 1L).as("level"))
     }
-    levels
   }
 
   /** Longest-path layering in O(log depth) driver rounds via max-plus

@@ -7,14 +7,18 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.graph.{Centrality, Fixpoint}
+import graft.graph.{Centrality, Fixpoint, Paths}
 
 /** The vertex-state fixpoints — [[Fixpoint.greedyColoring]],
   * [[Centrality.pagerank]] / [[Centrality.pagerankPersonalized]] and
-  * [[Fixpoint.connectedComponents]] / `incrementalComponents` — and the
+  * [[Fixpoint.connectedComponents]] / `incrementalComponents` — the
   * triangle-shaped operators over one adjacency intersect
   * ([[Centrality.triangleCount]], `edgeSupport`, `ktruss`,
-  * `cliqueCensusK4`, `clusteringCoefficient`) against plain-Scala
+  * `cliqueCensusK4`, `clusteringCoefficient`) and the frontier loops
+  * (`Fixpoint.levelLoop`: [[Fixpoint.bfsDistances]], `seedDistances`,
+  * `bfsPathCounts`, `nearestSeed`, `regularPathQuery`;
+  * `Fixpoint.relaxLoop`: [[Fixpoint.sssp]], `widestPath`,
+  * `temporalReach`, [[Paths.topoLevels]]) against plain-Scala
   * references, across execution configs, and under a job budget. */
 class VertexRoundsSpec extends SparkSuite {
   type Edges = Seq[(Long, Long)]
@@ -309,7 +313,232 @@ class VertexRoundsSpec extends SparkSuite {
       trianglesRef(hubRim)(0L) == 60L)
   }
 
+  // ---- frontier operators ----------------------------------------------
+
+  type WEdges = Seq[(Long, Long, Long)]
+
+  /** `e` with a seeded weight in 1..9 per edge. */
+  private def weighted(seed: Int, e: Edges): WEdges = {
+    val rnd = new scala.util.Random(seed)
+    e.map { case (a, b) => (a, b, rnd.nextInt(9) + 1L) }
+  }
+
+  /** BFS levels from `seeds` within `maxDepth` hops. */
+  private def bfsRef(e: Edges, seeds: Set[Long], maxDepth: Int): Map[Long, Long] = {
+    val out = e.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    var dist = seeds.map(_ -> 0L).toMap
+    var front = seeds
+    var d = 0L
+    while (front.nonEmpty && d < maxDepth) {
+      d += 1
+      front = front.flatMap(out.getOrElse(_, Nil)).filterNot(dist.contains)
+      dist ++= front.map(_ -> d)
+    }
+    dist
+  }
+
+  /** (dist, shortest-path count) per node, parallel edges counted apart. */
+  private def pathCountsRef(e: Edges, seeds: Set[Long], maxDepth: Int): Map[Long, (Long, Long)] = {
+    val dist = bfsRef(e, seeds, maxDepth)
+    val sigma = scala.collection.mutable.Map(seeds.toSeq.map(_ -> 1L): _*)
+    (1L to dist.values.maxOption.getOrElse(0L)).foreach { d =>
+      e.foreach { case (a, b) =>
+        if (dist.get(a).contains(d - 1) && dist.get(b).contains(d))
+          sigma(b) = sigma.getOrElse(b, 0L) + sigma(a)
+      }
+    }
+    dist.map { case (v, d) => v -> ((d, sigma(v))) }
+  }
+
+  /** (dist, label) per node: the nearest seeds, then their smallest label. */
+  private def nearestRef(e: Edges, seeds: Seq[(Long, Long)],
+                         maxDepth: Int): Map[Long, (Long, Long)] =
+    seeds.flatMap { case (s, l) =>
+      bfsRef(e, Set(s), maxDepth).map { case (v, d) => v -> ((d, l)) }
+    }.groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).min }
+
+  /** Label-setting search (Dijkstra) from `init`: `extend(value, weight)`
+    * is what an edge carries on (None: the edge cannot be taken), never
+    * better than its input; `ord` puts better values first. */
+  private def labelSetting(e: WEdges, init: Map[Long, Long], ord: Ordering[Long])
+                          (extend: (Long, Long) => Option[Long]): Map[Long, Long] = {
+    val out = e.groupBy(_._1)
+    val best = scala.collection.mutable.Map(init.toSeq: _*)
+    val done = scala.collection.mutable.Set.empty[Long]
+    val queue = scala.collection.mutable.PriorityQueue(init.toSeq: _*)(
+      Ordering.by[(Long, Long), Long](_._2)(ord.reverse))
+    while (queue.nonEmpty) {
+      val (v, x) = queue.dequeue()
+      if (!done(v) && best(v) == x) {
+        done += v
+        out.getOrElse(v, Nil).foreach { case (_, u, w) =>
+          extend(x, w).foreach { y =>
+            if (best.get(u).forall(ord.lt(y, _))) { best(u) = y; queue.enqueue(u -> y) }
+          }
+        }
+      }
+    }
+    best.toMap
+  }
+
+  private def dijkstra(e: WEdges, seeds: Set[Long]): Map[Long, Long] =
+    labelSetting(e, seeds.map(_ -> 0L).toMap, Ordering.Long)((d, w) => Some(d + w))
+
+  private def widestRef(e: WEdges, seeds: Set[Long], sourceWidth: Long): Map[Long, Long] =
+    labelSetting(e, seeds.map(_ -> sourceWidth).toMap, Ordering.Long.reverse)(
+      (x, cap) => Some(math.min(x, cap)))
+
+  private def earliestArrival(e: WEdges, seeds: Set[Long]): Map[Long, Long] =
+    labelSetting(e, seeds.map(_ -> 0L).toMap, Ordering.Long)(
+      (a, t) => if (t >= a) Some(t) else None)
+
+  /** (node, state) pairs of the graph × NFA product reachable from
+    * (start, 0). */
+  private def rpqRef(e: Seq[(Long, Long, String)], nfa: Seq[(Long, String, Long)],
+                     starts: Set[Long]): Set[(Long, Long)] = {
+    var seen = starts.map(_ -> 0L)
+    var front = seen
+    while (front.nonEmpty) {
+      front = (for ((v, q) <- front; (a, b, l) <- e if a == v;
+                    (f, l2, t) <- nfa if f == q && l2 == l) yield (b, t)) -- seen
+      seen ++= front
+    }
+    seen
+  }
+
+  /** Longest-path level of every node of a DAG whose edges run from a
+    * lower to a higher id. */
+  private def topoRef(dag: Edges): Map[Long, Long] = {
+    val ins = dag.groupBy(_._2)
+    dag.flatMap { case (a, b) => Seq(a, b) }.distinct.sorted
+      .foldLeft(Map.empty[Long, Long]) { (lv, v) =>
+        lv + (v -> ins.getOrElse(v, Nil).map(p => lv(p._1) + 1).maxOption.getOrElse(0L))
+      }
+  }
+
+  private val nfa = Seq((0L, "a", 0L), (0L, "a", 1L), (1L, "b", 2L), (2L, "a", 2L), (2L, "b", 0L))
+  private def labeled(w: WEdges): Seq[(Long, Long, String)] =
+    w.map { case (a, b, x) => (a, b, if (x % 2 == 0) "a" else "b") }
+
+  /** The nine frontier operators on one graph, each as sorted rows:
+    * seeded at `seeds` (labels from `seedLabels` for nearestSeed), BFS
+    * depth `maxDepth`, topoLevels on the graph's low-to-high DAG. */
+  private def frontierOps(e: Edges, w: WEdges, seeds: Seq[Long],
+                          seedLabels: Seq[(Long, Long)], maxDepth: Int): Seq[Seq[String]] = {
+    def rows(d: DataFrame) = d.collect().map(_.mkString(",")).toSeq.sorted
+    val d = df(e, "src", "dst")
+    val s = spark.createDataFrame(seeds.map(Tuple1(_))).toDF("node")
+    def wdf(c: String) = spark.createDataFrame(w).toDF("src", "dst", c)
+    Seq(
+      rows(Fixpoint.bfsDistances(d, s, maxDepth)),
+      rows(Fixpoint.seedDistances(d, s, maxDepth)),
+      rows(Fixpoint.bfsPathCounts(d, s, maxDepth)),
+      rows(Fixpoint.nearestSeed(d, spark.createDataFrame(seedLabels).toDF("node", "label"),
+        maxDepth)),
+      rows(Fixpoint.sssp(wdf("w"), s, maxRounds = 100)),
+      rows(Fixpoint.widestPath(wdf("cap"), s, sourceWidth = 100L, maxRounds = 100)),
+      rows(Fixpoint.temporalReach(wdf("t"), s, maxRounds = 100)),
+      rows(Fixpoint.regularPathQuery(spark.createDataFrame(labeled(w)).toDF("src", "dst", "label"),
+        spark.createDataFrame(nfa).toDF("s_from", "label", "s_to"), s, maxRounds = 100)),
+      rows(Paths.topoLevels(df(dagOf(e), "src", "dst"), maxRounds = 100)))
+  }
+
+  private def dagOf(e: Edges): Edges =
+    e.collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }
+
+  private def frontierRef(e: Edges, w: WEdges, seeds: Seq[Long],
+                          seedLabels: Seq[(Long, Long)], maxDepth: Int): Seq[Seq[String]] = {
+    def rows[K, V](m: Map[K, V])(f: (K, V) => String) = m.map(f.tupled).toSeq.sorted
+    val ss = seeds.toSet
+    val single: (Long, Long) => String = (v, x) => s"$v,$x"
+    Seq(
+      rows(bfsRef(e, ss, maxDepth))(single),
+      ss.toSeq.flatMap(s => bfsRef(e, Set(s), maxDepth).map { case (v, d) => s"$s,$v,$d" }).sorted,
+      rows(pathCountsRef(e, ss, maxDepth)) { case (v, (d, n)) => s"$v,$d,$n" },
+      rows(nearestRef(e, seedLabels, maxDepth)) { case (v, (d, l)) => s"$v,$l,$d" },
+      rows(dijkstra(w, ss))(single),
+      rows(widestRef(w, ss, 100L))(single),
+      rows(earliestArrival(w, ss))(single),
+      rpqRef(labeled(w), nfa, ss).toSeq.map { case (v, q) => s"$v,$q" }.sorted,
+      rows(topoRef(dagOf(e)))(single))
+  }
+
+  /** A frontier fixture: (name, edges, weighted edges, seeds, seed labels). */
+  private type Frontier = (String, Edges, WEdges, Seq[Long], Seq[(Long, Long)])
+
+  /** A seeded random graph with three seeds labeled 10, 9, 8; the first
+    * is listed a second time with label 0. */
+  private def randomFrontier(seed: Int, n: Int, m: Int): Frontier = {
+    val e = randomGraph(seed, n, m)
+    val seeds = Seq(e.head._1, e(5)._2, e(9)._1).distinct
+    (s"random $seed", e, weighted(seed, e), seeds,
+      seeds.zipWithIndex.map { case (v, i) => (v, 10L - i) } :+ ((seeds.head, 0L)))
+  }
+
+  private val frontierGraphs: Seq[Frontier] = {
+    val chain = (0L until 12L).map(i => (i, i + 1))
+    (1 to 3).map(randomFrontier(_, n = 40, m = 70)) ++ Seq(
+      ("chain", chain, weighted(4, chain), Seq(0L, 5L), Seq((0L, 2L), (5L, 1L))),
+      ("empty seed set", chain, weighted(5, chain), Seq.empty[Long], Seq.empty[(Long, Long)]))
+  }
+
+  test("frontier operators equal plain-Scala references: random graphs, a chain, no seeds") {
+    frontierGraphs.foreach { case (name, e, w, seeds, labels) =>
+      val want = frontierRef(e, w, seeds, labels, maxDepth = 6)
+      assert(frontierOps(e, w, seeds, labels, maxDepth = 6) == want, name)
+      if (seeds.isEmpty) assert(want.init.forall(_.isEmpty), name)
+      else assert(want.forall(_.nonEmpty), name)
+    }
+  }
+
+  test("frontier budgets: each operator succeeds at its chain's round need and throws one below") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val L = 6
+    val chain = (0L until L.toLong).map(i => (i, i + 1, i + 1)) // (src, dst, weight = time)
+    val e = spark.createDataFrame(chain)
+    val seed = spark.createDataFrame(Seq(Tuple1(0L))).toDF("node")
+    val labeledChain = e.select(col("_1").as("src"), col("_2").as("dst"), lit("a").as("label"))
+    val loop = spark.createDataFrame(Seq((0L, "a", 0L))).toDF("s_from", "label", "s_to")
+    val ops: Seq[(String, Int, Int => DataFrame)] = Seq(
+      // L improving rounds, the confirmation round is extra
+      ("sssp", L, r => Fixpoint.sssp(e.toDF("src", "dst", "w"), seed, r)),
+      ("widestPath", L, r => Fixpoint.widestPath(e.toDF("src", "dst", "cap"), seed, 100L, r)),
+      ("temporalReach", L, r => Fixpoint.temporalReach(e.toDF("src", "dst", "t"), seed, r)),
+      // the last of the maxRounds rounds may only confirm the fixpoint
+      ("regularPathQuery", L + 1, r => Fixpoint.regularPathQuery(labeledChain, loop, seed, r)),
+      ("topoLevels", L + 1, r => Paths.topoLevels(e.select(col("_1").as("src"),
+        col("_2").as("dst")), r)))
+    ops.foreach { case (name, need, run) =>
+      val got = run(need).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.keySet == (0L to L.toLong).toSet, name)
+      val err = intercept[IllegalStateException](run(need - 1).collect())
+      assert(err.getMessage.startsWith(s"$name did not converge in ${need - 1} rounds"),
+        err.getMessage)
+    }
+  }
+
   // ---- execution-config invariance -------------------------------------
+
+  /** `run()` under shuffle partitions {1, 7} × AQE on/off × lineage
+    * local/reliable must give `want`. */
+  private def acrossConfigs(want: Seq[Seq[String]])(run: => Seq[Seq[String]]): Unit = {
+    val ckpt = Files.createTempDirectory("graft-vr-ckpt").toString
+    for (parts <- Seq(1, 7); aqe <- Seq(true, false); mode <- Seq("local", "reliable")) {
+      withConf("spark.sql.shuffle.partitions" -> parts.toString,
+          "spark.sql.adaptive.enabled" -> aqe.toString,
+          "graft.lineage.mode" -> mode, "graft.lineage.dir" -> ckpt) {
+        assert(run == want, s"partitions=$parts aqe=$aqe mode=$mode")
+      }
+    }
+  }
+
+  test("frontier operators give identical rows across partitions, AQE and lineage mode") {
+    val (_, e, w, seeds, labels) = randomFrontier(7, n = 16, m = 30)
+    val want = frontierRef(e, w, seeds, labels, maxDepth = 3)
+    assert(want.forall(_.nonEmpty))
+    assert(frontierOps(e, w, seeds, labels, maxDepth = 3) == want)
+    acrossConfigs(want)(frontierOps(e, w, seeds, labels, maxDepth = 3))
+  }
 
   test("rewritten operators give identical rows across partitions, AQE and lineage mode") {
     val e = randomGraph(7, n = 50, m = 90)
@@ -325,17 +554,10 @@ class VertexRoundsSpec extends SparkSuite {
           spark.createDataFrame(seeds).toDF("node"), 3)),
         rows(Fixpoint.connectedComponents(df(e, "a", "b"))))
     }
-    val ckpt = Files.createTempDirectory("graft-vr-ckpt").toString
     val want = run()
     assert(want.take(5) == triangleShapedRef(dense))
     assert(want(5) == jonesPlassmann(e)._1.map { case (v, c) => s"$v,$c" }.toSeq.sorted)
-    for (parts <- Seq(1, 7); aqe <- Seq(true, false); mode <- Seq("local", "reliable")) {
-      withConf("spark.sql.shuffle.partitions" -> parts.toString,
-          "spark.sql.adaptive.enabled" -> aqe.toString,
-          "graft.lineage.mode" -> mode, "graft.lineage.dir" -> ckpt) {
-        assert(run() == want, s"partitions=$parts aqe=$aqe mode=$mode")
-      }
-    }
+    acrossConfigs(want)(run())
   }
 
   // ---- job budget --------------------------------------------------------
@@ -390,5 +612,21 @@ class VertexRoundsSpec extends SparkSuite {
     // adjacency; re-canonicalizing it (one more distinct) exceeds this
     val ccJobs = jobsOf(Centrality.clusteringCoefficient(d).collect())
     assert(ccJobs <= 11, s"clusteringCoefficient ran $ccJobs jobs")
+  }
+
+  test("job budget: bfsDistances tests each level on its own materialization") {
+    val L = 8
+    val chain = spark.createDataFrame((0L until L.toLong).map(i => (Option(i), Option(i + 1))))
+      .toDF("src", "dst")
+    val seed = spark.createDataFrame(Seq(Tuple1(Option(0L)))).toDF("node")
+    var got: Array[org.apache.spark.sql.Row] = null
+    val jobs = jobsOf { got = Fixpoint.bfsDistances(chain, seed, maxDepth = L + 2).collect() }
+    assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (0L to L.toLong).map(i => i -> i).toMap)
+    // L + 1 rounds (the last comes back empty), each its exchanges and
+    // broadcasts plus ONE loop-test job, then the collect. A loop that
+    // counts the seeds up front and tests each level with count() (an
+    // aggregate: two jobs under AQE) runs 54 jobs here.
+    assert(jobs <= 44, s"bfsDistances ran $jobs jobs over ${L + 1} rounds")
   }
 }
