@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   *
   * A new session runs `local[cpus]` (or `master`, when the caller names
   * a cluster) with `cpus` shuffle partitions, AQE, UTC session time, the
-  * UI off and a 16384-entry codegen cache; `cpus` is `SPARK_GRAFT_CPUS`,
-  * else the caller's default.
+  * UI off, a 16384-entry codegen cache and no artifact isolation; `cpus`
+  * is `SPARK_GRAFT_CPUS`, else the caller's default.
   *
   * The codegen cache: Janino's generated-class cache is JVM-static and
   * capped at 100 entries by default (StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES)
@@ -25,6 +25,16 @@ import org.apache.spark.sql.SparkSession
   * whose C2 profile restarts, which costs far more than the Janino
   * time). Sized past the fragment count with headroom, passes 2+ are
   * pure cache hits and the kernels stay JIT-hot.
+  *
+  * Artifact isolation is off: the cache is keyed by (classloader,
+  * source), and with `spark.sql.artifact.isolation.enabled` (on by
+  * default) every session — each `newSession()` and each streaming
+  * query's clone — runs its tasks under its own executor classloader,
+  * so every class one session compiled is compiled again by the next
+  * (`graft.Bench` over the two growing-stream queries, sf0.1, 2 cores:
+  * 297 compiles in the second pass with isolation, none without).
+  * Isolation only scopes session-added jars and files, and graft adds
+  * none.
   *
   * A live default session (a test suite, a notebook) is joined as it
   * is: its conf is left untouched and it is not stopped when `body`
@@ -43,6 +53,7 @@ object GraftSession {
           .config("spark.sql.adaptive.enabled", "true")
           .config("spark.sql.session.timeZone", "UTC")
           .config("spark.sql.codegen.cache.maxEntries", "16384")
+          .config("spark.sql.artifact.isolation.enabled", "false")
           .config("spark.ui.enabled", "false")
           .getOrCreate()
         try body(spark) finally spark.stop()

@@ -91,7 +91,8 @@ object Lineage {
   def pinnedHot(df: DataFrame, eager: Boolean): DataFrame = {
     val spark = df.sparkSession
     spark.conf.get("graft.lineage.mode", "local") match {
-      case "local" => df.localCheckpoint(eager, Bridge.hotPinStorageLevel(spark))
+      case "local" =>
+        Bridge.keepSourceMetrics(df.localCheckpoint(eager, Bridge.hotPinStorageLevel(spark)), df)
       case _       => pinned(df, eager) // durable path: storage hint n/a
     }
   }
@@ -105,7 +106,8 @@ object Lineage {
       // Bridge.pinLevel note); graft.lineage.pinStorage=deser flips the
       // whole engine where re-read latency dominates (measured bounded:
       // PROGRESS round-14 pin-storage table)
-      case "local" => df.localCheckpoint(eager, Bridge.pinStorageLevel(spark))
+      case "local" =>
+        Bridge.keepSourceMetrics(df.localCheckpoint(eager, Bridge.pinStorageLevel(spark)), df)
       case "reliable" =>
         // `.pin` sites include PER-ROUND frames (coreness' removed/out,
         // Borůvka's cand/chosen/msf, MIS' winners/mis, …), so they must
@@ -120,7 +122,7 @@ object Lineage {
         ensureCheckpointDir(spark)
         val every = spark.conf.get("graft.lineage.reliableEvery", "1").toInt
         if (every <= 1 || cutCounter.incrementAndGet() % every == 0)
-          df.checkpoint(eager)
+          Bridge.keepSourceMetrics(df.checkpoint(eager), df)
         else Bridge.planCutNoStats(df, eager)
       case other =>
         throw new IllegalArgumentException(

@@ -10,8 +10,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pushdown + column pruning on every scan.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** A table read with the schema its footer declares, derived on the
+    * driver ([[org.apache.spark.sql.graftbridge.ParquetBridge.schemaOf]]):
+    * an inferring read runs a one-task Spark job per call to read that
+    * footer. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(org.apache.spark.sql.graftbridge.ParquetBridge.schemaOf(spark, path))
+      .parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

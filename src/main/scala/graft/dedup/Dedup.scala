@@ -280,11 +280,41 @@ object Dedup {
   private[graft] def verifyJaccard(cand: DataFrame, leftKey: String, rightKey: String,
                                    shLeft: DataFrame, shRight: DataFrame,
                                    minJaccX1e6: Long): DataFrame =
-    cand
+    scoredJaccard(cand
       .join(shLeft.select(col("doc_id").as(leftKey), col("shingles").as("sh_a")),
         Seq(leftKey))
       .join(shRight.select(col("doc_id").as(rightKey), col("shingles").as("sh_b")),
-        Seq(rightKey))
+        Seq(rightKey)), minJaccX1e6)
+      .select(col(leftKey), col(rightKey), col("jacc_x1e6"))
+
+  /** [[verifyJaccard]] for side-tagged candidates ([[sideCandidates]]
+    * plus a `new_hist` column that is false on every row): both lookups
+    * go to ONE shingle frame `sh` (doc_id, hist, shingles) — the batch's
+    * rows with `hist` false, the history's with `hist` true — keyed on
+    * (doc_id, hist), so a doc id present on both sides (a replay, a
+    * re-ingest) is scored against the right version. Both lookups plan
+    * the same build side, so a broadcast runs once and the second join
+    * reuses it; that holds only while `new_hist` reaches the join as an
+    * opaque column (a `cut` candidate frame), not as a literal the
+    * optimizer could push into one build side. Output (new_id, old_id,
+    * jacc_x1e6). */
+  private[graft] def verifySides(cand: DataFrame, sh: DataFrame,
+                                 minJaccX1e6: Long): DataFrame = {
+    val s = sh.select(col("doc_id"), col("hist"), col("shingles"))
+    val (l, r) = (s.alias("l"), s.alias("r"))
+    scoredJaccard(cand.alias("c")
+      .join(l, col("c.new_id") === col("l.doc_id") && col("c.new_hist") === col("l.hist"))
+      .join(r, col("c.old_id") === col("r.doc_id") && col("c.hist") === col("r.hist"))
+      .select(col("c.new_id").as("new_id"), col("c.old_id").as("old_id"),
+        col("l.shingles").as("sh_a"), col("r.shingles").as("sh_b")), minJaccX1e6)
+      .select(col("new_id"), col("old_id"), col("jacc_x1e6"))
+  }
+
+  /** The one body of the exact-Jaccard scaling: pairs carrying both
+    * shingle sets (`sh_a`, `sh_b`) gain `jacc_x1e6` = floor(1e6·|∩|/|∪|)
+    * and keep it when it reaches the threshold. */
+  private def scoredJaccard(pairs: DataFrame, minJaccX1e6: Long): DataFrame =
+    pairs
       .withColumn("inter",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
       .withColumn("uni",
@@ -292,7 +322,6 @@ object Dedup {
       .withColumn("jacc_x1e6",
         floor(lit(1000000.0) * col("inter") / col("uni")).cast("long"))
       .filter(col("jacc_x1e6") >= minJaccX1e6)
-      .select(col(leftKey), col(rightKey), col("jacc_x1e6"))
 
   /** One row per doc: (doc_id, shingles, h0..h7) — the minhash
     * signature table, which is the PERSISTABLE form of the LSH index
@@ -432,34 +461,41 @@ object Dedup {
   private[graft] def probeCandidates(histBandsRaw: DataFrame,
                                      newBands: DataFrame,
                                      maxBucketOccupancy: Long,
-                                     failOnHotBucket: Boolean): DataFrame = {
-    val guardOn = maxBucketOccupancy != Long.MaxValue
-    val histBands =
-      if (!guardOn) histBandsRaw
-      else {
-        val hot = histBandsRaw.groupBy(col("band"), col("h1"), col("h2"))
-          .agg(count(lit(1)).as("occupancy"))
-          .filter(col("occupancy") > maxBucketOccupancy)
-        if (failOnHotBucket)
-          // carry the hot occupancy onto the history rows; the abort
-          // itself happens AFTER the probe join (below), so only buckets
-          // a new doc actually hashes into can fail the sync
-          histBandsRaw.join(
-            broadcast(hot.select(col("band"), col("h1"), col("h2"),
-              col("occupancy").as("_hot_occ"))),
-            Seq("band", "h1", "h2"), "left")
-        else
-          histBandsRaw.join(
-            broadcast(hot.select(col("band"), col("h1"), col("h2"))),
-            Seq("band", "h1", "h2"), "left_anti")
-      }
+                                     failOnHotBucket: Boolean): DataFrame =
+    sideCandidates(Some(histBandsRaw), newBands, withinBatch = false,
+      maxBucketOccupancy, failOnHotBucket).select(col("new_id"), col("old_id"))
+
+  /** Candidate generation for BOTH legs of a complete probe in one band
+    * join: the batch's bands (`newBands`, the probe side) against the
+    * history's bands tagged `hist` true, and — with `withinBatch` — the
+    * batch's own bands tagged `hist` false, where a pair counts once
+    * (new_id < old_id). Returns distinct (new_id, old_id, hist).
+    *
+    * The hot-bucket guard runs per side, each with its own occupancy
+    * census (the history's for the probe, the batch's for the
+    * within-batch leg), and only on the tagged side: a within-batch
+    * candidate's two bands share their bucket, so the tagged side alone
+    * decides whether it is hot. Skip mode drops hot buckets before the
+    * join; fail mode aborts on the first candidate drawn from one. */
+  private[graft] def sideCandidates(histBands: Option[DataFrame],
+                                    newBands: DataFrame, withinBatch: Boolean,
+                                    maxBucketOccupancy: Long,
+                                    failOnHotBucket: Boolean): DataFrame = {
+    val failOn = maxBucketOccupancy != Long.MaxValue && failOnHotBucket
+    def side(bands: DataFrame, hist: Boolean) =
+      guardBands(bands.select(col("doc_id"), col("band"), col("h1"), col("h2")),
+        maxBucketOccupancy, failOnHotBucket).withColumn("hist", lit(hist))
+    val tagged = (histBands.map(side(_, hist = true)).toSeq ++
+        (if (withinBatch) Seq(side(newBands, hist = false)) else Nil))
+      .reduce(_.unionByName(_))
     val joined = newBands.alias("x")
-      .join(histBands.alias("y"),
+      .join(tagged.alias("y"),
         col("x.band") === col("y.band") && col("x.h1") === col("y.h1") &&
-          col("x.h2") === col("y.h2"))
+          col("x.h2") === col("y.h2") &&
+          (col("y.hist") || col("x.doc_id") < col("y.doc_id")))
     // the abort rides INSIDE the projected new_id (the assert_true
     // pattern) so it cannot be pruned away, and it mixes the probe-side
-    // doc_id with the history-side _hot_occ so it cannot sink below the
+    // doc_id with the tagged side's _hot_occ so it cannot sink below the
     // probe join either: a y-side-only guard gets rebuilt UNDER the join
     // by InferFiltersFromConstraints (the verification equi-join implies
     // isnotnull(old_id); an expression referencing only history columns
@@ -468,20 +504,45 @@ object Dedup {
     // evaluates per candidate row and raise_error fires on the first
     // probed-hot one, before the explosion completes.
     val newId =
-      if (guardOn && failOnHotBucket)
-        when(col("_hot_occ").isNotNull,
+      if (failOn)
+        when(col("y._hot_occ").isNotNull,
           raise_error(concat(
-            lit("incrementalMinhash: probed band bucket holds "),
-            col("_hot_occ").cast("string"),
-            lit(s" docs (cap $maxBucketOccupancy); raise the cap, or " +
-              "run exact dedup on the boilerplate first — " +
-              "Dedup.hotBuckets names the offending buckets"))))
+            when(col("y.hist"), lit("incrementalMinhash: probed band bucket holds "))
+              .otherwise(lit("incrementalMinhashComplete: within-batch band bucket holds ")),
+            col("y._hot_occ").cast("string"),
+            when(col("y.hist"), lit(s" docs (cap $maxBucketOccupancy); raise the cap, or " +
+                "run exact dedup on the boilerplate first — " +
+                "Dedup.hotBuckets names the offending buckets"))
+              .otherwise(lit(s" docs (cap $maxBucketOccupancy); raise the cap, shrink " +
+                "the batch, or run exact dedup on the boilerplate first — " +
+                "Dedup.hotBuckets names the offending buckets")))))
           .otherwise(col("x.doc_id"))
       else col("x.doc_id")
     joined
-      .select(newId.as("new_id"), col("y.doc_id").as("old_id"))
-      .dropDuplicates("new_id" :: "old_id" :: Nil)
+      .select(newId.as("new_id"), col("y.doc_id").as("old_id"), col("y.hist").as("hist"))
+      .dropDuplicates("new_id" :: "old_id" :: "hist" :: Nil)
   }
+
+  /** `bands` under the hot-bucket guard, its occupancy census taken over
+    * `bands` itself. Skip mode drops the buckets above the cap (a
+    * broadcast anti-join against the tiny hot set); fail mode keeps
+    * every row and carries a hot bucket's occupancy as `_hot_occ`, so
+    * the abort can happen AFTER the probe join and only a bucket a new
+    * doc actually hashes into fails the sync. Guard off = `bands`. */
+  private def guardBands(bands: DataFrame, maxBucketOccupancy: Long,
+                         failOnHotBucket: Boolean): DataFrame =
+    if (maxBucketOccupancy == Long.MaxValue) bands
+    else {
+      val hot = bands.groupBy(col("band"), col("h1"), col("h2"))
+        .agg(count(lit(1)).as("occupancy"))
+        .filter(col("occupancy") > maxBucketOccupancy)
+      if (failOnHotBucket)
+        bands.join(broadcast(hot.select(col("band"), col("h1"), col("h2"),
+          col("occupancy").as("_hot_occ"))), Seq("band", "h1", "h2"), "left")
+      else
+        bands.join(broadcast(hot.select(col("band"), col("h1"), col("h2"))),
+          Seq("band", "h1", "h2"), "left_anti")
+    }
 
   /** [[incrementalMinhashIndexed]] with the index's band table PREBUILT
     * by the caller — the FIXED-index serving shape: a streaming sink
@@ -549,31 +610,26 @@ object Dedup {
     * fold a (new_id, old_id, jacc_x1e6) cross-probe result and the
     * within-batch self-LSH pairs into one pair-distinct (doc_a, doc_b,
     * jacc_x1e6) set, doc_a < doc_b, deterministic MAX across re-ingested
-    * versions. Package-private so the partition-pruned store probe
-    * ([[graft.streaming.GrowingDedupState.probeComplete]]) shares the
-    * one body of that contract. */
+    * versions ([[pairMax]], which the partition-pruned store probe
+    * [[graft.streaming.GrowingDedupState.probeComplete]] shares). */
   private[graft] def completeFrom(cross: DataFrame, within: DataFrame): DataFrame =
-    cross
+    pairMax(cross.unionByName(within.select(col("doc_a").as("new_id"),
+      col("doc_b").as("old_id"), col("jacc_x1e6"))))
+
+  /** Verified (new_id, old_id, jacc_x1e6) rows of either leg as one
+    * pair-distinct (doc_a, doc_b, jacc_x1e6) set, doc_a < doc_b, the
+    * MAX score across duplicates — the tail of [[completeFrom]], and of
+    * the store probe that verifies both legs in one pass. */
+  private[graft] def pairMax(verified: DataFrame): DataFrame =
+    verified
       .select(least(col("new_id"), col("old_id")).as("doc_a"),
         greatest(col("new_id"), col("old_id")).as("doc_b"), col("jacc_x1e6"))
       // an index that already holds some batch docs (a replayed
       // micro-batch probing a self-growing index) must not emit
       // self-pairs — the growingDedupSink idempotence contract
       .filter(col("doc_a") =!= col("doc_b"))
-      .unionByName(within)
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(max(col("jacc_x1e6")).as("jacc_x1e6"))
-
-  /** [[minhashLsh]] with the hot-bucket guard — the FIRST batch of a
-    * growing-index stream has no history to probe, but a boilerplate
-    * flood arriving in that batch still needs the occupancy cap
-    * (skip mode) or the loud abort (fail mode). Guard off = plain
-    * [[minhashLsh]], byte-identical. */
-  def minhashLshGuarded(shingled: DataFrame, minJaccX1e6: Long,
-                        maxBucketOccupancy: Long = Long.MaxValue,
-                        failOnHotBucket: Boolean = false): DataFrame =
-    guardedSelfLsh(pinned(shingled), minJaccX1e6, maxBucketOccupancy,
-      failOnHotBucket)
 
   /** The within-batch self-LSH leg of [[incrementalMinhashComplete]],
     * with the SAME hot-bucket guard semantics as the index probe: skip
@@ -586,39 +642,12 @@ object Dedup {
                              failOnHotBucket: Boolean): DataFrame = {
     if (maxBucketOccupancy == Long.MaxValue) minhashLsh(mat, minJaccX1e6)
     else {
-      val bands0 = bandTable(mat)
-      val hot = bands0.groupBy(col("band"), col("h1"), col("h2"))
-        .agg(count(lit(1)).as("occupancy"))
-        .filter(col("occupancy") > maxBucketOccupancy)
-      val bands =
-        if (failOnHotBucket)
-          bands0.join(broadcast(hot.select(col("band"), col("h1"), col("h2"),
-            col("occupancy").as("_hot_occ"))), Seq("band", "h1", "h2"), "left")
-        else
-          bands0.join(broadcast(hot.select(col("band"), col("h1"), col("h2"))),
-            Seq("band", "h1", "h2"), "left_anti")
-      // as in incrementalMinhashIndexed: the abort rides inside the
-      // projected doc_a and mixes BOTH join sides so it can neither be
-      // pruned nor rebuilt under the join — any hot bucket (occupancy
-      // ≥ 2 distinct docs per (doc, band) row construction) yields at
-      // least one candidate, so fail mode always fires when hot.
-      val docA =
-        if (failOnHotBucket)
-          when(coalesce(col("x._hot_occ"), col("y._hot_occ")).isNotNull,
-            raise_error(concat(
-              lit("incrementalMinhashComplete: within-batch band bucket holds "),
-              coalesce(col("x._hot_occ"), col("y._hot_occ")).cast("string"),
-              lit(s" docs (cap $maxBucketOccupancy); raise the cap, shrink " +
-                "the batch, or run exact dedup on the boilerplate first — " +
-                "Dedup.hotBuckets names the offending buckets"))))
-            .otherwise(col("x.doc_id"))
-        else col("x.doc_id")
-      val cand = bands.alias("x")
-        .join(bands.alias("y"),
-          col("x.band") === col("y.band") && col("x.h1") === col("y.h1") &&
-            col("x.h2") === col("y.h2") && col("x.doc_id") < col("y.doc_id"))
-        .select(docA.as("doc_a"), col("y.doc_id").as("doc_b"))
-        .dropDuplicates("doc_a" :: "doc_b" :: Nil)
+      // any hot bucket (occupancy ≥ 2 distinct docs per (doc, band) row
+      // construction) yields at least one candidate, so fail mode always
+      // fires when hot
+      val cand = sideCandidates(None, bandTable(mat), withinBatch = true,
+          maxBucketOccupancy, failOnHotBucket)
+        .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"))
       verifyJaccard(cand, "doc_a", "doc_b", mat, mat, minJaccX1e6)
     }
   }

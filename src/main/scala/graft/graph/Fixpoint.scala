@@ -103,9 +103,11 @@ object Fixpoint {
     * the pointer jump is one self-join of that aggregate, whose node-
     * keyed side reuses the aggregation's exchange, so a round plans two
     * exchanges (or one plus a broadcast when adaptive execution sees a
-    * small label table). The label-sum convergence test runs on the
-    * round's own materialization ([[loopSums]]): three jobs per round.
-    * Lineage is cut per round. Non-convergence within maxRounds throws
+    * small label table). The convergence test counts the labels a
+    * round moved, on the round's own materialization ([[loopSums]]):
+    * three jobs per round, and the state build needs no job of its own
+    * — it materializes inside the first round's. Lineage is cut per
+    * round. Non-convergence within maxRounds throws
     * instead of silently returning split components. */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
     // checkpoint the PAIR input before symmetrizing: the union otherwise
@@ -123,28 +125,23 @@ object Fixpoint {
         col("nbrs"))
       .cut
     // min over own label and every neighbor's label, adjacency carried
-    // along. The (always true) null filter is the one the pointer jump's
-    // join infers for its right side: stating it here keeps both join
-    // sides the same plan, so they share one exchange.
+    // along, and the node's label before the round (`_old`, from its own
+    // state row: every message goes to a node that has one). The (always
+    // true) null filter is the one the pointer jump's join infers for
+    // its right side: stating it here keeps both join sides the same
+    // plan, so they share one exchange.
     def propagate(s: DataFrame): DataFrame =
       s.select(explode(col("nbrs")).as("node"), col("component"),
           lit(null).cast(s.schema("nbrs").dataType).as("nbrs"))
-        .unionByName(s)
+        .unionByName(s.select(col("node"), col("component"), col("nbrs")))
         .groupBy(col("node"))
-        .agg(min(col("component")).as("component"), max(col("nbrs")).as("nbrs"))
+        .agg(min(col("component")).as("component"), max(col("nbrs")).as("nbrs"),
+          max(when(col("nbrs").isNotNull, col("component"))).as("_old"))
         .filter(col("node").isNotNull)
-    // labels only ever DECREASE, so the label sum strictly decreases
-    // until convergence (BigInt: a 10^12-node graph's id sum overflows
-    // int64); the same pass counts the nodes
-    def labelSum(df: DataFrame): (BigInt, BigInt) = {
-      val s = loopSums(df, lit(1L), col("component"))
-      (s(0), s(1))
-    }
-    val (nodes, sum0) = labelSum(state)
-    var prevSum = sum0
-    // empty pair set (e.g. a corpus with no near-dup pairs at all): the
-    // empty (node, component) frame IS the fixpoint
-    if (nodes == 0) return state.select(col("node"), col("component"))
+    // labels only ever DECREASE, so a round changed the labeling exactly
+    // when some node's label moved: the count rides on the round's cut
+    def changed(df: DataFrame): BigInt =
+      loopSums(df, (col("component") =!= col("_old")).cast("long")).head
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -152,25 +149,24 @@ object Fixpoint {
       // pointer jump (path halving): component := component's component.
       // Every label value is itself a node id (mins over node ids), so the
       // self-join resolves; coalesce is belt-and-braces for the root. The
-      // right side keeps `nbrs` too (never reached: every state row has
-      // an array) so column pruning cannot turn it into a second, narrower
-      // aggregation — both sides share the one exchange.
+      // right side keeps `nbrs` and `_old` too (never reached: every state
+      // row has both) so column pruning cannot turn it into a second,
+      // narrower aggregation — both sides share the one exchange.
       state = propagated
         .join(propagated.select(col("node").as("component"),
-          col("component").as("_jumped"), col("nbrs").as("_nbrs")),
-          Seq("component"), "left")
+          col("component").as("_jumped"), col("nbrs").as("_nbrs"),
+          col("_old").as("_old_r")), Seq("component"), "left")
         .select(col("node"), coalesce(col("_jumped"), col("component")).as("component"),
-          coalesce(col("nbrs"), col("_nbrs")).as("nbrs"))
+          coalesce(col("nbrs"), col("_nbrs")).as("nbrs"),
+          coalesce(col("_old"), col("_old_r")).as("_old"))
         .cut
-      val s = labelSum(state)._2
-      converged = s == prevSum
-      prevSum = s
+      converged = changed(state) == 0
       round += 1
     }
     // Same boundary case as transitiveClosure: the last permitted round may
     // have landed exactly on the fixpoint. Confirm with one more
     // propagation before declaring failure.
-    if (!converged && labelSum(propagate(state))._2 != prevSum)
+    if (!converged && changed(propagate(state)) != 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxRounds rounds; " +
           "raise maxRounds (labels would be silently wrong otherwise)")
@@ -264,9 +260,8 @@ object Fixpoint {
     * an edge can split a component, which needs a full (or
     * spanning-tree-assisted) recompute. */
   def incrementalComponents(labels: DataFrame, newEdges: DataFrame): DataFrame = {
-    // the labeling is read four times below (two projections, the
-    // new-node anti-join, the final relabel), so an unpinned input gets
-    // one cut — but a caller that already holds a pinned labeling (the
+    // the labeling is read three times below (two projections and the
+    // final relabel), so an unpinned input gets one cut — but a caller that already holds a pinned labeling (the
     // streaming sink re-pins its state every micro-batch) must NOT pay
     // a fresh |labels| re-materialization per fold on top: re-reading
     // pinned blocks is a cheap scan, re-cutting them writes a whole new
@@ -275,19 +270,23 @@ object Fixpoint {
     val lab =
       if (org.apache.spark.sql.graftbridge.Bridge.isTruncated(labels)) lab0
       else lab0.cut
-    val ends = newEdges.select(col("a"), col("b"))
     def proj(k: String) = lab.select(col("node").as(k), col("component").as(s"_c$k"))
-    val superEdges = ends
+    // each edge end with its old component, null for a node the labeling
+    // has never seen — pinned, because it yields both the quotient edges
+    // and the new nodes: one lookup of the labeling per fold, and the
+    // relabel below reads no labeling-sized build side a second time
+    val ends = newEdges.select(col("a"), col("b"))
       .join(proj("a"), Seq("a"), "left")
       .join(proj("b"), Seq("b"), "left")
+      .pin
+    val superEdges = ends
       .select(coalesce(col("_ca"), col("a")).as("a"),
         coalesce(col("_cb"), col("b")).as("b"))
       .filter(col("a") =!= col("b"))
     val quotient = connectedComponents(superEdges)
       .select(col("node").as("old_component"), col("component").as("merged"))
-    val newNodes = ends.select(col("a").as("node"))
-      .unionByName(ends.select(col("b").as("node"))).distinct()
-      .join(lab.select(col("node")), Seq("node"), "left_anti")
+    val newNodes = ends.filter(col("_ca").isNull).select(col("a").as("node"))
+      .unionByName(ends.filter(col("_cb").isNull).select(col("b").as("node"))).distinct()
       .select(col("node"), col("node").as("component"))
     lab.unionByName(newNodes)
       .join(quotient, col("component") === col("old_component"), "left")

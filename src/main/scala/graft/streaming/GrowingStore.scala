@@ -120,8 +120,7 @@ object BatchStore {
   private[streaming] def hasDataFiles(f: org.apache.hadoop.fs.FileSystem,
                                       p: Path): Boolean =
     f.exists(p) && f.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".") &&
+      org.apache.spark.sql.graftbridge.ParquetBridge.visible(s.getPath.getName) &&
         (!s.isDirectory || hasDataFiles(f, s.getPath))
     }
 
@@ -560,46 +559,48 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
     * buckets. Exposed for the probe's files-read contract spec. */
   private[graft] def prunedPaths(spark: SparkSession, dir: String,
                                  pcol: String, vals: Seq[Int]): Seq[String] =
-    if (vals.isEmpty) Seq.empty
-    else {
-      val pattern = new Path(dir,
-        s"epoch=*/batch=*/$pcol={${vals.distinct.sorted.mkString(",")}}")
-      Option(fs(spark).globStatus(pattern)).toSeq.flatten
-        .filter(_.isDirectory).map(_.getPath.toString)
-    }
+    prunedGlob(spark, dir, pcol, vals, "").filter(_.isDirectory)
+      .map(_.getPath.toString)
 
-  /** [[prunedPaths]] read with the store's declared `schema`, leaving
-    * out `ownBatch`'s partition of this handle's epoch. */
+  private def prunedGlob(spark: SparkSession, dir: String, pcol: String,
+                         vals: Seq[Int], below: String) =
+    if (vals.isEmpty) Seq.empty
+    else Option(fs(spark).globStatus(new Path(dir,
+        s"epoch=*/batch=*/$pcol={${vals.distinct.sorted.mkString(",")}}$below")))
+      .toSeq.flatten
+
+  /** The data files of [[prunedPaths]], read with the store's declared
+    * `schema`, leaving out `ownBatch`'s partition of this handle's
+    * epoch. One glob lists the files themselves and the read is built
+    * from that listing ([[org.apache.spark.sql.graftbridge.ParquetBridge
+    * .readListed]]): `spark.read` would list the bucket dirs again, in a
+    * Spark job once a probe's paths pass 32 (three uncompacted batches
+    * of 16 buckets). */
   private def prunedRead(spark: SparkSession, dir: String, pcol: String,
                          vals: Seq[Int], schema: StructType,
                          ownBatch: Option[Long]): Option[DataFrame] = {
     val own = ownBatch.map(b => (s"epoch=$epoch", s"batch=$b"))
-    val paths = prunedPaths(spark, dir, pcol, vals).filterNot { p =>
-      val batch = new Path(p).getParent
-      own.contains((batch.getParent.getName, batch.getName))
+    val files = prunedGlob(spark, dir, pcol, vals, "/*").filter { s =>
+      val batch = s.getPath.getParent.getParent
+      s.isFile && org.apache.spark.sql.graftbridge.ParquetBridge.visible(s.getPath.getName) &&
+        !own.contains((batch.getParent.getName, batch.getName))
     }
-    if (paths.isEmpty) None
-    else Some(spark.read.schema(schema).option("basePath", dir).parquet(paths: _*))
+    if (files.isEmpty) None
+    else Some(org.apache.spark.sql.graftbridge.ParquetBridge.readListed(spark, dir, files, schema))
   }
 
   /** The COMPLETE per-batch near-dup pair set against the accumulated
     * store — [[graft.dedup.Dedup.incrementalMinhashComplete]] semantics
     * (index probe ∪ within-batch self-LSH, pair-distinct, deterministic
     * MAX across re-ingested versions, same hot-bucket guard on both
-    * legs) with the history reads PARTITION-PRUNED:
-    *
-    *  1. the batch's band table collects its distinct `bk` buckets
-    *     (≤ min(4·|batch|, bandBuckets) values, driver-bounded) and the
-    *     band store is read at exactly those partition paths;
-    *  2. candidate (new_id, old_id) pairs then collect their old ids'
-    *     distinct `pb` buckets and the payload store is read at exactly
-    *     those paths for the verification join.
+    * legs) with the history reads PARTITION-PRUNED and both legs run
+    * as ONE candidate join and ONE verification ([[prunedProbe]]).
     *
     * Equality with the full-scan probe is structural: a band bucket's
     * rows all live in one `bk` partition (the partition key is a hash of
     * the band join key), so unread partitions cannot hold matching
     * bands, and unread payload buckets cannot hold candidate old ids.
-    * An empty or untouched store degrades to the guarded self-LSH (the
+    * An empty or untouched store leaves only the within-batch leg (the
     * first-batch shape).
     *
     * `ownBatch` is the micro-batch id this probe serves: the probe
@@ -613,17 +614,10 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
   def probeComplete(newShingled: DataFrame, minJaccX1e6: Long,
                     maxBucketOccupancy: Long = Long.MaxValue,
                     failOnHotBucket: Boolean = false,
-                    ownBatch: Option[Long] = None): DataFrame = {
-    import graft.dedup.Dedup
-    val newMat = Dedup.pinned(newShingled)
-    val within = Dedup.minhashLshGuarded(newMat, minJaccX1e6,
-      maxBucketOccupancy, failOnHotBucket)
-    prunedCross(newMat, minJaccX1e6, maxBucketOccupancy,
-        failOnHotBucket, ownBatch) match {
-      case None        => within
-      case Some(cross) => Dedup.completeFrom(cross, within)
-    }
-  }
+                    ownBatch: Option[Long] = None): DataFrame =
+    graft.dedup.Dedup.pairMax(prunedProbe(graft.dedup.Dedup.pinned(newShingled),
+        minJaccX1e6, maxBucketOccupancy, failOnHotBucket, ownBatch,
+        withinBatch = true).get)
 
   /** The probe-ONLY pruned read — [[graft.dedup.Dedup
     * .incrementalMinhashIndexed]] semantics against this store's
@@ -638,90 +632,123 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
                    maxBucketOccupancy: Long = Long.MaxValue,
                    failOnHotBucket: Boolean = false): DataFrame = {
     val newMat = graft.dedup.Dedup.pinned(newShingled)
-    prunedCross(newMat, minJaccX1e6, maxBucketOccupancy, failOnHotBucket,
-        ownBatch = None)
+    prunedProbe(newMat, minJaccX1e6, maxBucketOccupancy, failOnHotBucket,
+        ownBatch = None, withinBatch = false)
       .getOrElse(newMat.select(col("doc_id").as("new_id"),
         col("doc_id").as("old_id"), lit(0L).as("jacc_x1e6")).limit(0))
   }
 
-  /** The pruned cross-probe core shared by [[probeComplete]] and
-    * [[probeIndexed]]: (new_id, old_id, jacc_x1e6) of `newMat` against
-    * the store, None when the store holds no batch partitions or no
-    * bucket the batch hashes into. `newMat` must already be
-    * materialized. */
-  private def prunedCross(newMat: DataFrame, minJaccX1e6: Long,
+  /** The pruned probe core shared by [[probeComplete]] and
+    * [[probeIndexed]]: verified (new_id, old_id, jacc_x1e6) rows of
+    * `newMat` against the store — and, with `withinBatch`, against
+    * itself (new_id < old_id) — or None when there is nothing to verify
+    * against (no history bucket the batch hashes into and no
+    * within-batch leg). `newMat` must be a lazy pin or a materialized
+    * leaf. Three jobs on the calling thread — none while the band store
+    * is empty:
+    *
+    *  1. '''bk collect''' — the batch's band buckets (≤ min(4·|batch|,
+    *     bandBuckets) values), and with them the first materialization
+    *     of `newMat`.
+    *  1. '''the candidate broadcast''' — [[graft.dedup.Dedup
+    *     .sideCandidates]] joins the batch's bands against the history's
+    *     (read at exactly the collected bk paths) and, for the
+    *     within-batch leg, against its own; cutting the result plans the
+    *     join, whose broadcast runs here.
+    *  1. '''pb collect''' — the cut's first materialization, which also
+    *     returns the distinct `pb` buckets of the history candidates'
+    *     old ids, the way [[graft.graph.Fixpoint]]'s loop tests ride a
+    *     round's cut. The payload store is read at exactly those paths.
+    *
+    * Verification is then lazy: one side-tagged shingle frame (batch ∪
+    * pruned payload, [[graft.dedup.Dedup.verifySides]]) serves both
+    * lookups of both legs, one broadcast for the whole pass. */
+  private def prunedProbe(newMat: DataFrame, minJaccX1e6: Long,
       maxBucketOccupancy: Long, failOnHotBucket: Boolean,
-      ownBatch: Option[Long]): Option[DataFrame] = {
+      ownBatch: Option[Long], withinBatch: Boolean): Option[DataFrame] = {
     import graft.dedup.Dedup
+    import graft.Lineage._
     import GrowingDedupState.{BandSchema, PayloadSchema}
     val spark = newMat.sparkSession
     probeIoMemo = None // never report a previous probe's IO as this one's
-    if (!BatchStore.nonEmpty(spark, bandDir)) {
-      // signatures without bands is EITHER the documented first-batch
-      // crash window (payload published, crash before the band write —
-      // the batch is invisible and its replay overwrites both) or a
-      // store written by the pre-bucketed layout. Tell them apart by
-      // the payload partitioning: bucketed payloads nest pb=* dirs; a
-      // legacy store has none, and silently degrading to self-LSH
-      // would un-probe its ENTIRE accumulated history.
-      if (legacyLayout(spark))
-        throw new IllegalStateException(
-          s"GrowingDedupState: $sigDir holds signatures but no band " +
-            "partitions and no pb buckets — a store written by the " +
-            "pre-bucketed layout. Run compact()/maybeAutoCompact to " +
-            "migrate it (the sinks do this at session start) before " +
-            "probing.")
-      None
-    } else {
-      val (bB, pB) = effectiveBuckets(spark)
-      val newBands = graft.Lineage.pinned(Dedup.bandTable(newMat), eager = false)
-      val bks = graft.Jobs.described(spark, "probe: bk collect") {
-        newBands.select(bandBucketExpr(bB).as("bk"))
-          .distinct().collect().map(_.getInt(0)).toSeq
+    val stored = BatchStore.nonEmpty(spark, bandDir)
+    // signatures without bands is EITHER the documented first-batch
+    // crash window (payload published, crash before the band write —
+    // the batch is invisible and its replay overwrites both) or a store
+    // written by the pre-bucketed layout. Tell them apart by the payload
+    // partitioning: bucketed payloads nest pb=* dirs; a legacy store has
+    // none, and silently degrading to self-LSH would un-probe its
+    // ENTIRE accumulated history.
+    if (!stored && legacyLayout(spark))
+      throw new IllegalStateException(
+        s"GrowingDedupState: $sigDir holds signatures but no band " +
+          "partitions and no pb buckets — a store written by the " +
+          "pre-bucketed layout. Run compact()/maybeAutoCompact to " +
+          "migrate it (the sinks do this at session start) before " +
+          "probing.")
+    val (bB, pB) = effectiveBuckets(spark)
+    val newBands = Dedup.bandTable(newMat)
+    val bks =
+      if (!stored) Seq.empty
+      else graft.Jobs.described(spark, "probe: bk collect") {
+        distinctInts(newBands.select(bandBucketExpr(bB)))
       }
-      prunedRead(spark, bandDir, "bk", bks, BandSchema, ownBatch) match {
-        case None => None
-        case Some(hist) =>
-          // building the lazy pin plans the candidate join, whose
-          // broadcast runs as a job of its own right here
-          val cand = graft.Jobs.described(spark, "probe: candidates") {
-            graft.Lineage.pinned(
-              Dedup.probeCandidates(
-                hist.select(col("doc_id"), col("band"), col("h1"), col("h2")),
-                newBands, maxBucketOccupancy, failOnHotBucket),
-              eager = false)
-          }
-          val pbs = graft.Jobs.described(spark, "probe: pb collect") {
-            cand.select(payloadBucketExpr(pB, col("old_id")).as("pb"))
-              .distinct().collect().map(_.getInt(0)).toSeq
-          }
-          if (spark.conf.getOption("graft.growing.probeIoDiagnostics")
-              .contains("true")) {
-            val f = fs(spark)
-            def sum(paths: Seq[String]): (Long, Long) =
-              paths.foldLeft((0L, 0L)) { case ((nf, nb), p) =>
-                val s = f.getContentSummary(new Path(p))
-                (nf + s.getFileCount, nb + s.getLength)
-              }
-            val (bf, bb) = sum(prunedPaths(spark, bandDir, "bk", bks))
-            val (bsf, bsb) = sum(Seq(bandDir))
-            val (pf, pbb) = sum(prunedPaths(spark, sigDir, "pb", pbs))
-            val (psf, psb) = sum(Seq(sigDir))
-            probeIoMemo = Some(ProbeIo(bf, bb, bsf, bsb, pf, pbb, psf, psb))
-          }
-          prunedRead(spark, sigDir, "pb", pbs, PayloadSchema, ownBatch) match {
-            case None if pbs.isEmpty => None // no candidates at all
-            case None => throw new IllegalStateException(
-              s"GrowingDedupState: payload partitions missing under $sigDir " +
-                s"for probed candidate buckets ${pbs.mkString(",")} — " +
-                "store corrupted (bands published without their payload?)")
-            case Some(pay) =>
-              Some(Dedup.verifyJaccard(cand, "new_id", "old_id", newMat,
-                pay.select(col("doc_id"), col("shingles")), minJaccX1e6))
-          }
+    val hist = prunedRead(spark, bandDir, "bk", bks, BandSchema, ownBatch)
+    if (hist.isEmpty && !withinBatch) return None
+    val sides = Dedup.sideCandidates(hist, newBands, withinBatch,
+      maxBucketOccupancy, failOnHotBucket).withColumn("new_hist", lit(false))
+    // without history there are no payload buckets to learn: the
+    // candidates stay lazy and the whole probe runs after the caller's
+    // next fork. With history, `new_hist` is constant, but as a column of
+    // the cut it reaches the verification joins opaque, so both lookups
+    // share one build side.
+    val (cand, pbs) =
+      if (hist.isEmpty) (sides, Seq.empty[Int])
+      else {
+        val cut = graft.Jobs.described(spark, "probe: candidates")(sides.cut)
+        (cut, graft.Jobs.described(spark, "probe: pb collect") {
+          distinctInts(cut.select(
+            when(col("hist"), payloadBucketExpr(pB, col("old_id")))))
+        })
       }
+    if (hist.nonEmpty &&
+        spark.conf.getOption("graft.growing.probeIoDiagnostics").contains("true")) {
+      val f = fs(spark)
+      def sum(paths: Seq[String]): (Long, Long) =
+        paths.foldLeft((0L, 0L)) { case ((nf, nb), p) =>
+          val s = f.getContentSummary(new Path(p))
+          (nf + s.getFileCount, nb + s.getLength)
+        }
+      val (bf, bb) = sum(prunedPaths(spark, bandDir, "bk", bks))
+      val (bsf, bsb) = sum(Seq(bandDir))
+      val (pf, pbb) = sum(prunedPaths(spark, sigDir, "pb", pbs))
+      val (psf, psb) = sum(Seq(sigDir))
+      probeIoMemo = Some(ProbeIo(bf, bb, bsf, bsb, pf, pbb, psf, psb))
     }
+    val pay = prunedRead(spark, sigDir, "pb", pbs, PayloadSchema, ownBatch)
+    if (pay.isEmpty && pbs.nonEmpty)
+      throw new IllegalStateException(
+        s"GrowingDedupState: payload partitions missing under $sigDir " +
+          s"for probed candidate buckets ${pbs.mkString(",")} — " +
+          "store corrupted (bands published without their payload?)")
+    val shingles =
+      (newMat.select(col("doc_id"), lit(false).as("hist"), col("shingles")) +:
+        pay.map(_.select(col("doc_id"), lit(true).as("hist"), col("shingles"))).toSeq)
+        .reduce(_.unionByName(_))
+    Some(Dedup.verifySides(cand, shingles, minJaccX1e6))
   }
+
+  /** The distinct non-null values of `df`'s one int column, in ONE
+    * job without a shuffle: each partition folds its values into a set
+    * and the driver merges the sets. Run over a lazy cut or pin, the
+    * job is also its materialization. For bucket ids only: the result
+    * is bounded by the bucket count. */
+  private def distinctInts(df: DataFrame): Seq[Int] =
+    df.queryExecution.toRdd.mapPartitions { rows =>
+      val seen = scala.collection.mutable.BitSet.empty
+      rows.foreach(r => if (!r.isNullAt(0)) seen += r.getInt(0))
+      Iterator(seen.toArray)
+    }.collect().flatten.distinct.sorted.toSeq
 
   /** The raw signature store — may hold duplicate doc ids after a
     * cross-epoch replay; the probe's pair-level dedups tolerate them. */

@@ -84,7 +84,7 @@ object Bridge {
       : org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val spark = ds.sparkSession
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
+    val rdd = keepMetrics(ds.queryExecution.toRdd.map(_.copy()), ds)
     // persist first: RDD.localCheckpoint keeps a pre-set level's
     // serialized flag (LocalRDDCheckpointData.transformStorageLevel only
     // forces useDisk), whereas unset falls back to deserialized
@@ -92,6 +92,42 @@ object Bridge {
     rdd.localCheckpoint()
     if (eager) rdd.count()
     spark.internalCreateDataFrame(rdd, ds.schema)
+  }
+
+  /** The SQL metrics of the plans whose RDDs were checkpointed, each
+    * set held as long as its checkpointed RDD is reachable.
+    *
+    * The driver keeps accumulators only weakly; a metric lives as long
+    * as its plan does. A checkpoint truncates its RDD's lineage when
+    * the first job that computes it ends, and with the lineage goes
+    * the last reference to the plan that produced it. Jobs launched
+    * together over one lazily checkpointed frame — the broadcasts and
+    * adaptive stages of one plan start at once — still run tasks
+    * serialized with that lineage; once the plan is collected, their
+    * metric updates land on "non-existent accumulator" errors and are
+    * lost. A running job reaches the checkpointed RDD itself, so the
+    * metrics hang off it. */
+  private val sourceMetrics = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], Seq[AnyRef]]())
+
+  private def keepMetrics[R <: org.apache.spark.rdd.RDD[_]](rdd: R,
+      source: org.apache.spark.sql.DataFrame): R = {
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val plan = source.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.executedPlan
+    sourceMetrics.put(rdd,
+      helper.collectWithSubqueries(plan) { case p => p.metrics.values.toSeq }.flatten)
+    rdd
+  }
+
+  /** [[keepMetrics]] for a frame checkpointed by `Dataset.localCheckpoint`
+    * or `Dataset.checkpoint`: `cut`'s RDD keeps `source`'s plan metrics. */
+  def keepSourceMetrics(cut: org.apache.spark.sql.DataFrame,
+                        source: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    cut.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.foreach(keepMetrics(_, source))
+    cut
   }
 
   /** Reliable (checkpoint-dir-backed) variant of [[localCheckpointNoStats]]:
@@ -106,7 +142,7 @@ object Bridge {
       : org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val spark = ds.sparkSession
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
+    val rdd = keepMetrics(ds.queryExecution.toRdd.map(_.copy()), ds)
     rdd.persist(pinStorageLevel(spark))
     rdd.checkpoint()
     if (eager) rdd.count()
@@ -224,9 +260,72 @@ object Bridge {
       : org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val spark = ds.sparkSession
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
+    val rdd = keepMetrics(ds.queryExecution.toRdd.map(_.copy()), ds)
     rdd.persist(pinStorageLevel(spark))
     if (eager) rdd.count()
     spark.internalCreateDataFrame(rdd, ds.schema)
   }
+}
+
+/** Parquet reads that skip Spark's driver-side discovery jobs. */
+object ParquetBridge {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+  import org.apache.spark.sql.types.StructType
+
+  /** The schema `spark.read.parquet(path)` would infer, derived on the
+    * driver. Inference reads one footer — the first visible data file —
+    * inside a one-task Spark job (`ParquetFileFormat.mergeSchemasInParallel`);
+    * this reads the same footer here and converts it with the same
+    * converter settings, so a read that declares the result plans exactly
+    * like the inferring one and runs no job. */
+  def schemaOf(spark: org.apache.spark.sql.SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
+    val file =
+      if (!st.isDirectory) st
+      else fs.listStatus(p).filter(s => s.isFile && visible(s.getPath.getName))
+        .sortBy(_.getPath.getName).headOption
+        .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    val sql = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = sql.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+      nanosAsLong = sql.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, footer), converter)
+  }
+
+  /** A parquet read of exactly `files` (leaf data files under `basePath`,
+    * partition columns taken from their paths as `spark.read` with
+    * `basePath` takes them), built from a listing the caller already
+    * holds. `spark.read` would list the files' directories again — in a
+    * Spark job once there are more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` of them. */
+  def readListed(spark: org.apache.spark.sql.SparkSession, basePath: String,
+                 files: Seq[FileStatus], schema: StructType): org.apache.spark.sql.DataFrame = {
+    val byDir = files.groupBy(_.getPath.getParent).map { case (d, fs) => d -> fs.toArray }
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byDir.get(path)
+      def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val options = Map("basePath" -> basePath)
+    val index = new InMemoryFileIndex(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      byDir.keys.toSeq.sortBy(_.toString), options, Some(schema), listed)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      schema.asNullable, None, new ParquetFileFormat, options)(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
+  }
+
+  /** Names a Spark file listing keeps: not `_`- or `.`-prefixed. */
+  def visible(name: String): Boolean = !name.startsWith("_") && !name.startsWith(".")
 }

@@ -64,6 +64,33 @@ class PlanContractsSpec extends SparkSuite {
     DriverHygiene.releasePersisted(spark, gc = false)
   }
 
+  test("table reads declare the inferred schema and run no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val names = Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "events", "documents", "embeddings")
+    // both settings of the nanos switch the events loader flips
+    Seq("false", "true").foreach { nanos =>
+      withConf("spark.sql.legacy.parquet.nanosAsLong" -> nanos) {
+        names.foreach { n =>
+          assert(Tables.table(spark, dir, n).schema ==
+            spark.read.parquet(s"$dir/$n.parquet").schema, s"$n, nanosAsLong=$nanos")
+        }
+      }
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try Tables.lineitem(spark, dir)
+    finally {
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"building the lineitem read ran ${jobs.get} jobs")
+  }
+
   test("attribution: filters push to the scan, conversions broadcast, rank-filter is a group limit") {
     val p = plan("attribution_multi_touch")
     assert(p.contains("PushedFilters: [In(event_type"), "touch filter must reach parquet")

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one session every Spark-backed suite runs on: `local[4]` with
-  * [[shufflePartitions]] shuffle partitions, AQE and UTC session time.
+  * [[shufflePartitions]] shuffle partitions, AQE, UTC session time and,
+  * as in [[GraftSession]], a 16384-entry codegen cache and no artifact
+  * isolation (so sessions and streaming queries share generated code).
   * All suites share the JVM's one SparkContext; a suite's settings are
   * applied to the shared session when the suite first touches `spark`. */
 trait SparkSuite extends AnyFunSuite {
@@ -17,6 +19,8 @@ trait SparkSuite extends AnyFunSuite {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", "16384")
+    .config("spark.sql.artifact.isolation.enabled", "false")
     .getOrCreate()
 
   /** Runs `body` with the session conf keys set to the given values, then

@@ -704,7 +704,37 @@ class StreamingSpec extends SparkSuite {
     assert(readPairs() == want)
   }
 
-  test("growing sinks resume from on-disk state across streaming sessions") {
+  /** Runs `body`, then fails if the scheduler logged a lost SQL metric
+    * meanwhile: a task reported an update for an accumulator the driver
+    * had already garbage-collected ("attempted to access non-existent
+    * accumulator"), so that metric never reached its plan. */
+  private def noLostMetrics[A](body: => A): A = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val lost = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("lost-metrics", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val text = String.valueOf(e.getMessage.getFormattedMessage) +
+          Option(e.getThrown).map(t => " " + t.getMessage).getOrElse("")
+        if (text.contains("non-existent accumulator")) lost.add(text)
+      }
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.scheduler.DAGScheduler").asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try {
+      val result = body
+      assert(lost.isEmpty, s"lost SQL metrics: ${lost.toArray.mkString("; ")}")
+      result
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
+  test("growing sinks resume from on-disk state across streaming sessions") (noLostMetrics {
     implicit val sqlCtx = spark.sqlContext
     import graft.dedup.Dedup
     val fox = "the quick brown fox jumps over the lazy dog again and again"
@@ -807,7 +837,7 @@ class StreamingSpec extends SparkSuite {
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(withNew == oneShotPlus && (withNew -- oneShot).nonEmpty,
       s"post-compaction probe missed history: $withNew vs $oneShotPlus")
-  }
+  })
 
   test("components recovery folds only the WAL tail the snapshot does not cover") {
     implicit val sqlCtx = spark.sqlContext
@@ -1116,7 +1146,7 @@ class StreamingSpec extends SparkSuite {
       .collect().toMap == ids.map(_ -> 1L).toMap)
   }
 
-  test("a steady growing-components batch runs at most 15 jobs, none a footer read") {
+  test("a steady growing-components batch runs at most 8 jobs, 1 broadcast, none a footer read") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     implicit val sqlCtx = spark.sqlContext
     val fox = "the quick brown fox jumps over the lazy dog again and again"
@@ -1127,16 +1157,24 @@ class StreamingSpec extends SparkSuite {
       Seq((1L, fox + " extra"), (4L, "another unrelated document mentioning shuffles joins")),
       Seq((5L, pipe + " more"), (6L, fox + " extra again"),
         (7L, "a last unrelated document about broadcast hash joins")))
-    // (batch id, job id, footer-only): a footer-inference job is the one
-    // whose every RDD is the bare parallelize -> mapPartitions pair
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Boolean)]()
+    // one job of a batch: a footer-inference job is the one whose every
+    // RDD is the bare parallelize -> mapPartitions pair; a broadcast job
+    // carries its exchange's job tag; the signature chain's two appends
+    // run off the stream thread
+    case class Job(id: Int, desc: String, footer: Boolean, broadcast: Boolean) {
+      def chain: Boolean = Set("grow: payload append", "grow: band append")(desc)
+    }
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Job)]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
-          .foreach { b =>
-            val scopes = e.stageInfos.flatMap(_.rddInfos).map(_.scope.map(_.name).getOrElse(""))
-            jobs.add((b, e.jobId, scopes.forall(Set("parallelize", "mapPartitions"))))
-          }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        prop("streaming.sql.batchId").foreach { b =>
+          val scopes = e.stageInfos.flatMap(_.rddInfos).map(_.scope.map(_.name).getOrElse(""))
+          jobs.add(b -> Job(e.jobId, prop("spark.job.description").getOrElse(""),
+            scopes.forall(Set("parallelize", "mapPartitions")),
+            prop("spark.job.tags").exists(_.contains("broadcast exchange"))))
+        }
+      }
     }
     // the streaming gates' session: one shuffle partition, no AQE
     withConf("spark.sql.shuffle.partitions" -> "1", "spark.sql.adaptive.enabled" -> "false") {
@@ -1154,11 +1192,77 @@ class StreamingSpec extends SparkSuite {
       }
     }
     import scala.jdk.CollectionConverters._
-    val byBatch = jobs.asScala.toSeq.groupBy(_._1)
+    val byBatch = jobs.asScala.toSeq.groupBy(_._1).map { case (b, js) => b -> js.map(_._2) }
     Seq("1", "2").foreach { b =>
       val js = byBatch.getOrElse(b, Nil)
-      assert(js.nonEmpty && js.size <= 15, s"batch $b ran ${js.size} jobs")
-      assert(!js.exists(_._3), s"batch $b ran footer-read jobs ${js.filter(_._3).map(_._2)}")
+      info(s"batch $b: " + js.sortBy(_.id).map(j =>
+        s"${j.id} ${j.desc}${if (j.broadcast) " [broadcast]" else ""}").mkString("; "))
+      assert(js.nonEmpty && js.size <= 8, s"batch $b ran ${js.size} jobs")
+      assert(js.count(!_.chain) <= 6, s"batch $b ran ${js.count(!_.chain)} stream-thread jobs")
+      assert(js.count(_.broadcast) <= 1, s"batch $b ran ${js.count(_.broadcast)} broadcast jobs")
+      assert(!js.exists(_.footer), s"batch $b ran footer-read jobs ${js.filter(_.footer).map(_.id)}")
     }
+  }
+
+  test("a probe over many uncompacted batches reads its pruned paths without a listing job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.dedup.Dedup
+    implicit val sqlCtx = spark.sqlContext
+    // 24 topics, one doc per topic in each of 4 batches: each batch fills
+    // all 16 band buckets, so the last probe reads 48 bk paths — past the
+    // 32 at which spark.read lists them in a Spark job — and every doc
+    // has a near-dup in every other batch
+    val docs = (0L until 96L).map { i =>
+      val t = i % 24
+      (i, (Seq("a", "b", "c", "d", "e", "f", "g", "h").map(w => s"w$t$w") :+ s"tail$i").mkString(" "))
+    }
+    val listings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("Listing leaf files")).foreach(listings.add)
+    }
+    val st = GrowingDedupState(java.nio.file.Files.createTempDirectory("grow-listing").toString)
+    val src = MemoryStream[(Long, String)]
+    val q = Streaming.growingDedupSink(src.toDF().toDF("doc_id", "text"), st, 500000L).start()
+    spark.sparkContext.addSparkListener(listener)
+    try docs.grouped(24).foreach { b => src.addData(b: _*); q.processAllAvailable() }
+    finally {
+      q.stop()
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(st.prunedPaths(spark, st.bandDir, "bk", 0 until 16).size == 64)
+    assert(listings.isEmpty, s"listing jobs ran: ${listings.toArray.mkString("; ")}")
+    val oneShot = Dedup.minhashLsh(Dedup.shingleTable(docs.toDF("doc_id", "text"),
+      "doc_id", "text"), 500000L).select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(oneShot.size > 100)
+    assert(st.matches(spark).select("doc_a", "doc_b").as[(Long, Long)].collect().toSet == oneShot)
+  }
+
+  test("a second streaming query compiles almost no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    implicit val sqlCtx = spark.sqlContext
+    val fox = "the quick brown fox jumps over the lazy dog again and again"
+    val batches = Seq(
+      Seq((0L, fox), (2L, "completely different text about spark catalyst optimizer rules")),
+      Seq((1L, fox + " extra"), (4L, "another unrelated document mentioning shuffles joins")))
+    // each query runs under its own clone of the session; generated
+    // classes are cached per (classloader, source), so a per-session
+    // classloader would recompile every class the first query compiled
+    def drain(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val src = MemoryStream[(Long, String)]
+      val q = Streaming.growingComponentsSink(src.toDF().toDF("doc_id", "text"),
+        GrowingDedupState(java.nio.file.Files.createTempDirectory("grow-codegen").toString),
+        500000L).start()
+      try batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = drain()
+    val second = drain()
+    info(s"compiles: first query $first, second query $second")
+    assert(second <= 3, s"the second query compiled $second classes (the first $first)")
   }
 }

@@ -590,8 +590,9 @@ class VertexRoundsSpec extends SparkSuite {
     val chain = (0L until 64L).map(i => (i, i + 1))
     val ccRounds = componentRounds(chain)
     assert(ccRounds >= 4)
-    // state build (shuffle + label sum), per round the aggregation and
-    // pointer-jump exchanges plus the label sum, then the collect
+    // per round the aggregation and pointer-jump exchanges plus the
+    // changed-label count (the state build rides in the first round),
+    // then the collect
     val ccJobs = jobsOf(Fixpoint.connectedComponents(nullableDf(chain, "a", "b")).collect())
     assert(ccJobs <= 3 * ccRounds + 3, s"$ccJobs jobs for $ccRounds rounds")
   }
