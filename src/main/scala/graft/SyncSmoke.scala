@@ -49,8 +49,8 @@ object SyncSmoke {
       // timing window, so the next stage never replays it
       def force(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
-      val custRaw = multiply(Tables.customer(spark, sfDir), "c_custkey", m)
-      val ordRaw = multiply(Tables.orders(spark, sfDir), "o_custkey", m)
+      val custRaw = multiply(Tables.customer(spark, sfDir), m, "c_custkey")
+      val ordRaw = multiply(Tables.orders(spark, sfDir), m, "o_custkey")
 
       // ---- extract + transform (the intel-module shape: rename,
       // derive, type-coerce into the schema's record layout)

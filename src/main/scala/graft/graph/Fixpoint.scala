@@ -210,7 +210,7 @@ object Fixpoint {
     * sample seeds at 100 TB; rounds = maxDepth. */
   def seedDistances(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be non-negative")
-    val e = edges.select(col("src"), col("dst"))
+    val e = edges.select(col("src"), col("dst")).pin
     val start = seeds.select(col("node").as("seed")).distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
       .pin
@@ -388,7 +388,7 @@ object Fixpoint {
     * One [[levelLoop]] round per level: the frontier ⋈ edges join, one
     * distinct, the anti-join against the visited keys and the loop
     * test — O(E) work and five jobs per level in the executed
-    * `graph_bfs_distances` plans (the edges, read afresh, are broadcast
+    * `graph_bfs_distances` plans (the edges, pinned once, are broadcast
     * every level; the visited keys are shuffled and broadcast). The
     * right tool for small diameters / bounded neighborhoods
     * (blast-radius queries, k-hop enrichment). For full reachability
@@ -397,7 +397,7 @@ object Fixpoint {
     * level. */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be non-negative")
-    val e = edges.select(col("src"), col("dst"))
+    val e = edges.select(col("src"), col("dst")).pin
     val start = seeds.select(col("node")).distinct().withColumn("dist", lit(0L)).pin
     levelLoop(start, Seq("node"), Some("dist"), maxDepth) { f =>
       f.join(e, f("node") === e("src")).select(col("dst").as("node")).distinct()
@@ -421,7 +421,7 @@ object Fixpoint {
     * exceed it. Output: (node, dist, sigma). */
   def bfsPathCounts(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be non-negative")
-    val e = edges.select(col("src"), col("dst"))
+    val e = edges.select(col("src"), col("dst")).pin
     val start = seeds.select(col("node")).distinct()
       .withColumn("dist", lit(0L)).withColumn("sigma", lit(1L))
       .pin
@@ -447,7 +447,7 @@ object Fixpoint {
     * label; a seed's own label always wins at distance 0. */
   def nearestSeed(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be non-negative")
-    val e = edges.select(col("src"), col("dst"))
+    val e = edges.select(col("src"), col("dst")).pin
     val start = seeds.select(col("node"), col("label"))
       .groupBy(col("node")).agg(min(col("label")).as("label"))
       .withColumn("dist", lit(0L)).pin

@@ -573,16 +573,7 @@ object LlmQueries {
     * instead of re-running the Lloyd round every call. */
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame = {
     val q = Similarity.quantized(Tables.embeddings(spark, dir))
-    // artifact key = corpus VERSION, not just path: size+mtime of the
-    // embeddings parquet fingerprints the data, so a regenerated corpus
-    // at the same path can never serve a stale clustering
-    val src = new java.io.File(s"$dir/embeddings.parquet")
-    val files = Option(src.listFiles()).map(_.toSeq).getOrElse(Seq(src))
-    val fp = java.lang.Long.toHexString(
-      files.map(f => f.length() * 31L + f.lastModified()).sum)
-    val art = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_kmeans_" + dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-        s"_${fp}_c16_i1").toString
+    val art = graft.sources.Artifacts.perApplication(dir, "embeddings", "kmeans_c16_i1")
     Dedup.semanticDedup(q,
       Similarity.kmeansArtifact(spark, q, art, nCentroids = 16, iterations = 1),
       minCosX1e6 = 350000L)

@@ -932,19 +932,13 @@ object StreamQueries {
 
   /** Shared SCC assignment for the rings-on-a-tree digraph, persisted
     * via [[graft.graph.Fixpoint.sccArtifact]] so the multi-fixpoint
-    * runs once per corpus version and both the SCC gate and the
-    * condensation quotient read the labels back (artifact key =
-    * size+mtime fingerprint of the customer parquet the digraph is
-    * derived from — a regenerated corpus can never serve stale labels). */
-  private def sccLabels(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/customer.parquet")
-    val files = Option(src.listFiles()).map(_.toSeq).getOrElse(Seq(src))
-    val fp = java.lang.Long.toHexString(
-      files.map(f => f.length() * 31L + f.lastModified()).sum)
-    val art = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_scc_" + dir.replaceAll("[^A-Za-z0-9._-]", "_") + s"_$fp").toString
-    Fixpoint.sccArtifact(spark, sccDigraph(spark, dir), art)
-  }
+    * runs once per application and input version, and both the SCC gate
+    * and the condensation quotient read the labels back
+    * ([[graft.sources.Artifacts.perApplication]] of the customer table
+    * the digraph is derived from). */
+  private def sccLabels(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.sccArtifact(spark, sccDigraph(spark, dir),
+      graft.sources.Artifacts.perApplication(dir, "customer", "scc"))
 
   def graphScc(spark: SparkSession, dir: String): DataFrame =
     sccLabels(spark, dir)

@@ -29,6 +29,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * of the input version), so either copy is byte-identical. */
 object Artifacts {
 
+  /** Where a battery query keeps the artifact it builds from table
+    * `table` of `sfDir`: under this application's SparkFiles root, a
+    * directory Spark deletes when the context stops, so no later run —
+    * and no later build of the code — reads it. Within the application
+    * the name carries the table's path and a size+mtime fingerprint of
+    * its files, so every query over the same table reuses one artifact
+    * and a table rewritten in place gets a new one. */
+  def perApplication(sfDir: String, table: String, tag: String): String = {
+    val src = new java.io.File(s"$sfDir/$table.parquet")
+    val files = Option(src.listFiles()).map(_.toSeq).getOrElse(Seq(src))
+    val fp = java.lang.Long.toHexString(
+      files.map(f => f.length() * 31L + f.lastModified()).sum)
+    new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(),
+      s"graft_${tag}_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_") + s"_$fp").toString
+  }
+
   /** True iff `dir/_SUCCESS` exists, resolved through the Hadoop
     * FileSystem owning the path's scheme. */
   def isPublished(spark: SparkSession, dir: String): Boolean = {

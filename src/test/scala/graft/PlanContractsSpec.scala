@@ -65,7 +65,6 @@ class PlanContractsSpec extends SparkSuite {
   }
 
   test("table reads declare the inferred schema and run no job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val names = Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
     // both settings of the nanos switch the events loader flips
@@ -77,18 +76,8 @@ class PlanContractsSpec extends SparkSuite {
         }
       }
     }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try Tables.lineitem(spark, dir)
-    finally {
-      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(jobs.get == 0, s"building the lineitem read ran ${jobs.get} jobs")
+    val (_, jobs) = jobStarts(Tables.lineitem(spark, dir))
+    assert(jobs.isEmpty, s"building the lineitem read ran ${jobs.size} jobs")
   }
 
   test("attribution: filters push to the scan, conversions broadcast, rank-filter is a group limit") {

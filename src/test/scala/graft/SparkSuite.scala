@@ -1,6 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one session every Spark-backed suite runs on: `local[4]` with
@@ -22,6 +26,26 @@ trait SparkSuite extends AnyFunSuite {
     .config("spark.sql.codegen.cache.maxEntries", "16384")
     .config("spark.sql.artifact.isolation.enabled", "false")
     .getOrCreate()
+
+  /** Runs `body` and returns its result with the start event of every
+    * Spark job that began while it ran, in start order: the listener
+    * goes on after the bus has delivered every earlier event and comes
+    * off once it has delivered every event `body` posted. */
+  def jobStarts[A](body: => A): (A, Seq[SparkListenerJobStart]) = {
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e)
+    }
+    Bridge.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val result =
+      try body
+      finally {
+        Bridge.waitListenerBus(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    (result, starts.asScala.toSeq)
+  }
 
   /** Runs `body` with the session conf keys set to the given values, then
     * puts back what each key held before (unset if it was unset), also

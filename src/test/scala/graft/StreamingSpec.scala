@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
@@ -1157,7 +1158,6 @@ class StreamingSpec extends SparkSuite {
   /** The jobs of steady batches 1 and 2 of a three-batch components
     * stream, by batch id; measured once, read by both budget tests. */
   private lazy val steadyBatchJobs: Map[String, Seq[BatchJob]] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     implicit val sqlCtx = spark.sqlContext
     val fox = "the quick brown fox jumps over the lazy dog again and again"
     val pipe = "training data pipelines need deduplication at scale every day"
@@ -1167,36 +1167,33 @@ class StreamingSpec extends SparkSuite {
       Seq((1L, fox + " extra"), (4L, "another unrelated document mentioning shuffles joins")),
       Seq((5L, pipe + " more"), (6L, fox + " extra again"),
         (7L, "a last unrelated document about broadcast hash joins")))
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, BatchJob)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        prop("streaming.sql.batchId").foreach { b =>
-          val scopes = e.stageInfos.flatMap(_.rddInfos).map(_.scope.map(_.name).getOrElse(""))
-          jobs.add(b -> BatchJob(e.jobId, prop("spark.job.description").getOrElse(""),
-            scopes.forall(Set("parallelize", "mapPartitions")),
-            prop("spark.job.tags").exists(_.contains("broadcast exchange"))))
-        }
-      }
-    }
     // the streaming gates' session: one shuffle partition, no AQE
-    withConf("spark.sql.shuffle.partitions" -> "1", "spark.sql.adaptive.enabled" -> "false") {
+    val (_, starts) = withConf("spark.sql.shuffle.partitions" -> "1",
+        "spark.sql.adaptive.enabled" -> "false") {
       val src = MemoryStream[(Long, String)]
       val q = Streaming.growingComponentsSink(src.toDF().toDF("doc_id", "text"),
         GrowingDedupState(java.nio.file.Files.createTempDirectory("grow-budget").toString),
         500000L).start()
-      spark.sparkContext.addSparkListener(listener)
-      try batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
-      finally {
-        q.stop()
-        // deliver every queued job start before the listener goes
-        org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
-        spark.sparkContext.removeSparkListener(listener)
+      jobStarts {
+        try batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
+        finally q.stop()
       }
     }
-    import scala.jdk.CollectionConverters._
-    val byBatch = jobs.asScala.toSeq.groupBy(_._1).map { case (b, js) => b -> js.map(_._2) }
-    Seq("1", "2").map(b => b -> byBatch.getOrElse(b, Nil)).toMap
+    batchJobs(starts, "1", "2")
+  }
+
+  /** The jobs of micro-batches `ids` among `starts`, by batch id. */
+  private def batchJobs(starts: Seq[SparkListenerJobStart], ids: String*): Map[String, Seq[BatchJob]] = {
+    val byBatch = starts.flatMap { e =>
+      def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      prop("streaming.sql.batchId").map { b =>
+        val scopes = e.stageInfos.flatMap(_.rddInfos).map(_.scope.map(_.name).getOrElse(""))
+        b -> BatchJob(e.jobId, prop("spark.job.description").getOrElse(""),
+          scopes.forall(Set("parallelize", "mapPartitions")),
+          prop("spark.job.tags").exists(_.contains("broadcast exchange")))
+      }
+    }.groupBy(_._1).map { case (b, js) => b -> js.map(_._2) }
+    ids.map(b => b -> byBatch.getOrElse(b, Nil)).toMap
   }
 
   test("a steady growing-components batch runs at most 15 jobs, none a footer read") {
@@ -1217,8 +1214,49 @@ class StreamingSpec extends SparkSuite {
     }
   }
 
+  test("a file-sourced steady growing-components batch runs at most 11 jobs, 3 broadcasts, none a footer read") {
+    implicit val sqlCtx = spark.sqlContext
+    // three parquet files of 100 documents, drained one file per trigger:
+    // with file statistics the probe's candidate join and the
+    // verification broadcast, as in the benchmark's stream_ingest batches
+    // (the MemoryStream batches above plan sort-merge joins instead)
+    val rnd = new scala.util.Random(7)
+    val vocab = (0 until 400).map(i => s"w$i")
+    val docs = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    (0L until 300L).foreach { id =>
+      // every third document a one-word edit of an earlier one
+      val text = if (id % 3 == 2) {
+        val words = docs(rnd.nextInt(docs.size))._2.split(" ")
+        words.updated(rnd.nextInt(words.length), vocab(rnd.nextInt(vocab.size))).mkString(" ")
+      } else Seq.fill(40)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+      docs += id -> text
+    }
+    val srcDir = java.nio.file.Files.createTempDirectory("grow-files-src").toString
+    docs.grouped(100).foreach { b =>
+      b.toSeq.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(srcDir)
+      Thread.sleep(20) // distinct file times keep the trigger order
+    }
+    val (_, starts) = withConf("spark.sql.shuffle.partitions" -> "1",
+        "spark.sql.adaptive.enabled" -> "false") {
+      jobStarts {
+        val q = Streaming.growingComponentsSink(
+          spark.readStream.schema("doc_id BIGINT, text STRING")
+            .option("maxFilesPerTrigger", "1").parquet(srcDir),
+          GrowingDedupState(java.nio.file.Files.createTempDirectory("grow-files").toString),
+          800000L).start()
+        try q.processAllAvailable() finally q.stop()
+      }
+    }
+    batchJobs(starts, "1", "2").toSeq.sortBy(_._1).foreach { case (b, js) =>
+      info(s"batch $b: " + js.sortBy(_.id).map(j =>
+        s"${j.id} ${j.desc}${if (j.broadcast) " [broadcast]" else ""}").mkString("; "))
+      assert(js.nonEmpty && js.size <= 11, s"batch $b ran ${js.size} jobs")
+      assert(js.count(_.broadcast) <= 3, s"batch $b ran ${js.count(_.broadcast)} broadcast jobs")
+      assert(!js.exists(_.footer), s"batch $b ran footer-read jobs ${js.filter(_.footer).map(_.id)}")
+    }
+  }
+
   test("a probe over many uncompacted batches reads its pruned paths without a listing job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.dedup.Dedup
     implicit val sqlCtx = spark.sqlContext
     // 24 topics, one doc per topic in each of 4 batches: each batch fills
@@ -1229,24 +1267,18 @@ class StreamingSpec extends SparkSuite {
       val t = i % 24
       (i, (Seq("a", "b", "c", "d", "e", "f", "g", "h").map(w => s"w$t$w") :+ s"tail$i").mkString(" "))
     }
-    val listings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(_.startsWith("Listing leaf files")).foreach(listings.add)
-    }
     val st = GrowingDedupState(java.nio.file.Files.createTempDirectory("grow-listing").toString)
     val src = MemoryStream[(Long, String)]
     val q = Streaming.growingDedupSink(src.toDF().toDF("doc_id", "text"), st, 500000L).start()
-    spark.sparkContext.addSparkListener(listener)
-    try docs.grouped(24).foreach { b => src.addData(b: _*); q.processAllAvailable() }
-    finally {
-      q.stop()
-      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
-      spark.sparkContext.removeSparkListener(listener)
+    val (_, starts) = jobStarts {
+      try docs.grouped(24).foreach { b => src.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
     }
+    val listings = starts.flatMap(e => Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description"))))
+      .filter(_.startsWith("Listing leaf files"))
     assert(st.prunedPaths(spark, st.bandDir, "bk", 0 until 16).size == 64)
-    assert(listings.isEmpty, s"listing jobs ran: ${listings.toArray.mkString("; ")}")
+    assert(listings.isEmpty, s"listing jobs ran: ${listings.mkString("; ")}")
     val oneShot = Dedup.minhashLsh(Dedup.shingleTable(docs.toDF("doc_id", "text"),
       "doc_id", "text"), 500000L).select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(oneShot.size > 100)

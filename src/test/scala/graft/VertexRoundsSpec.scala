@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.graph.{Centrality, Fixpoint, Paths}
 
@@ -562,17 +559,8 @@ class VertexRoundsSpec extends SparkSuite {
 
   // ---- job budget --------------------------------------------------------
 
-  /** Spark jobs `body` runs, counted by a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    Bridge.waitListenerBus(spark)
-    spark.sparkContext.addSparkListener(l)
-    try { body; Bridge.waitListenerBus(spark); n.get }
-    finally spark.sparkContext.removeSparkListener(l)
-  }
+  /** Spark jobs `body` runs. */
+  private def jobsOf(body: => Unit): Int = jobStarts(body)._2.size
 
   // both budgets at the suite's own 4 partitions with AQE on
   test("job budget: coloring runs two jobs per round, components three") {
