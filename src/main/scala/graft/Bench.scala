@@ -16,17 +16,14 @@ object Bench {
     System.out.flush()
   }
 
-  /** Runs the battery and returns the driver-contract JSON line. */
-  private def battery(spark: SparkSession, args: Array[String]): String = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Warm the JVM/codegen/parquet paths so the first timed query doesn't
-    // absorb one-time session cost. Codegen compilation is cached on the
-    // generated source, so running one representative of each codegen-heavy
-    // operator family at sf0.001 (~tiny) pre-compiles the kernels the sfDir
-    // run reuses — otherwise the alphabetically-first family member absorbs
-    // ~3s of compilation that is really per-session, not per-query.
+  /** Warms the JVM, codegen and parquet paths so the first timed query
+    * doesn't absorb one-time session cost. Codegen compilation is cached
+    * on the generated source, so running one representative of each
+    * codegen-heavy operator family at sf0.001 (~tiny) pre-compiles the
+    * kernels a later run reuses — otherwise the first family member
+    * timed absorbs ~3s of compilation that is really per-session, not
+    * per-query. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, sfDir).limit(10).count()
     val warmDir = "/root/testdata/sf0.001"
@@ -40,6 +37,14 @@ object Bench {
           DriverHygiene.releasePersisted(spark)
         }
     }
+  }
+
+  /** Runs the battery and returns the driver-contract JSON line. */
+  private def battery(spark: SparkSession, args: Array[String]): String = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark.sparkContext.setLogLevel("WARN")
+
+    warmUp(spark, sfDir)
 
     // optional args = subset of query names (local iteration; the driver
     // passes none and gets the full battery)
@@ -81,43 +86,18 @@ object Bench {
     // alongside wall time, record
     //  * JVM GC ms (GC MXBean collection-time delta — driver==executor
     //    in local mode, so this is ALL GC in the window),
-    //  * summed task executorRunTime ms and task-attributed jvmGCTime ms,
-    //  * completed task + stage counts (an AQE replan shows up as a
-    //    different stage/task census on identical code)
-    // via a listener whose counters are snapshotted after draining the
-    // async bus. A wall-time spike then separates into: GC wall (MXBean
-    // jump), slow kernels (task ms jump, e.g. C2 deopt), scheduling gaps
-    // (wall up, task ms flat), or a replan (stage census change).
+    //  * from the query's JobCensus window: summed task executorRunTime
+    //    ms, executorCpuTime and task-attributed jvmGCTime ms, and the
+    //    completed task + stage counts (an AQE replan shows up as a
+    //    different stage/task census on identical code).
+    // A wall-time spike then separates into: GC wall (MXBean jump), slow
+    // kernels (task ms jump, e.g. C2 deopt), scheduling gaps (wall up,
+    // task ms flat), or a replan (stage census change). Task CPU vs run
+    // time separates descheduling from genuine cycles: a run spike at
+    // FLAT cpu means the tasks sat off-CPU (ambient host contention).
     import java.lang.management.ManagementFactory
-    import java.util.concurrent.atomic.AtomicLong
     import scala.jdk.CollectionConverters._
-    val taskRunMs = new AtomicLong; val taskGcMs = new AtomicLong
-    val taskN = new AtomicLong; val stageN = new AtomicLong
-    // executorCpuTime vs executorRunTime separates descheduling
-    // from genuine cycles: a wall/run spike at FLAT cpu means the tasks
-    // sat off-CPU (ambient host contention); cpu spiking with run means
-    // the kernels really executed more cycles (deopt, cache eviction).
-    // Accumulated in raw NANOSECONDS (divide once at read): truncating
-    // per-task loses up to 1 ms × thousands of tasks — whole seconds of
-    // attribution skew over a pass (r12 ADVICE).
-    val taskCpuNs = new AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            taskRunMs.addAndGet(m.executorRunTime)
-            taskCpuNs.addAndGet(m.executorCpuTime)
-            taskGcMs.addAndGet(m.jvmGCTime)
-            taskN.incrementAndGet()
-          }
-        }
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          stageN.incrementAndGet(); ()
-        }
-      })
+    val census = JobCensus(spark)
     def jvmGcMs(): Long = ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
     // JIT compiler-thread time (C1+C2, cumulative ms): a wall spike at
@@ -170,63 +150,25 @@ object Bench {
     }
     def procCpuMs(): Long =
       osBean.map(_.getProcessCpuTime / 1000000L).getOrElse(0L)
-    final case class Diag(gcMs: Long, taskMs: Long, taskGcMs: Long,
-                          tasks: Long, stages: Long, jitMs: Long,
-                          taskCpuMs: Long, aluUs: Long, memUs: Long,
-                          codeKb: Long, metaKb: Long, compiles: Long,
-                          hostMs: Long, procMs: Long)
+    // the values of diag_fields, in order, for one query of one pass
+    val diagFields = Seq("gc_ms", "task_ms", "task_gc_ms", "tasks", "stages",
+      "jit_ms", "task_cpu_ms", "code_kb", "meta_kb", "compiles", "host_ms", "proc_ms")
+    def counters() = Seq(jvmGcMs(), jitMsNow(), compileCount(), hostBusyMs(), procCpuMs())
 
-    // Calibration probes (SPARK_GRAFT_PROBE=1): two fixed pure-JVM
-    // workloads timed at each query boundary — compiled once, never
-    // deopt, independent of Spark. If a query's wall/cpu spike coincides
-    // with a probe spike the MACHINE slowed (host contention — memory
-    // stalls count as thread CPU time); probes flat while Spark kernels
-    // spike = JVM-internal to the query's own code. alu = register-only
-    // mix (frequency/steal-sensitive); mem = 64 MiB strided xor-scan
-    // (bandwidth-sensitive). ~15 ms each warm.
-    val probeOn = sys.env.get("SPARK_GRAFT_PROBE").contains("1")
-    val memArr = if (probeOn) new Array[Long](8 << 20) else null
-    @volatile var blackhole = 0L
-    def aluProbeUs(): Long = {
-      if (!probeOn) return 0L
-      val t0 = System.nanoTime()
-      var x = 0x9e3779b97f4a7c15L; var i = 0
-      while (i < 20000000) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1
-      }
-      blackhole ^= x
-      (System.nanoTime() - t0) / 1000
-    }
-    def memProbeUs(): Long = {
-      if (!probeOn) return 0L
-      val t0 = System.nanoTime()
-      var acc = 0L; var i = 0
-      while (i < memArr.length) { acc ^= memArr(i); memArr(i) = acc + i; i += 17 }
-      blackhole ^= acc
-      (System.nanoTime() - t0) / 1000
-    }
-    // warm both probe loops to steady state before any timed use
-    if (probeOn) (1 to 5).foreach { _ => aluProbeUs(); memProbeUs() }
-
-    val timed: Seq[Seq[(String, (Double, Diag))]] = (1 to passes).map { _ =>
+    val timed: Seq[Seq[(String, (Double, Seq[Long]))]] = (1 to passes).map { _ =>
       val pass = ordered.map { case (name, fn) =>
-        Bridge.waitListenerBus(spark)
-        val (gc0, tr0, tg0, tn0, sn0, jit0, tc0, cc0) =
-          (jvmGcMs(), taskRunMs.get, taskGcMs.get, taskN.get, stageN.get,
-            jitMsNow(), taskCpuNs.get, compileCount())
-        val (hb0, pc0) = (hostBusyMs(), procCpuMs())
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        Bridge.waitListenerBus(spark)
+        val ((c0, dt), w) = census.during {
+          val c0 = counters()
+          val t0 = System.nanoTime()
+          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+          (c0, (System.nanoTime() - t0) / 1e9)
+        }
         // per-query Janino compile delta: on a warm pass this must be ~0 —
         // any query still compiling fragments in pass 2+ owns part of the
         // warm-pass compile floor (micro-batch watermark literals etc.)
-        val diag = Diag(jvmGcMs() - gc0, taskRunMs.get - tr0,
-          taskGcMs.get - tg0, taskN.get - tn0, stageN.get - sn0,
-          jitMsNow() - jit0, (taskCpuNs.get - tc0) / 1000000L,
-          aluProbeUs(), memProbeUs(), codeUsedKb(), metaUsedKb(),
-          compileCount() - cc0, hostBusyMs() - hb0, procCpuMs() - pc0)
+        val Seq(gc, jit, compiles, host, proc) = counters().zip(c0).map { case (a, b) => a - b }
+        val diag = Seq(gc, w.taskRunMs, w.taskGcMs, w.tasks, w.stages, jit,
+          w.taskCpuNs / 1000000L, codeUsedKb(), metaUsedKb(), compiles, host, proc)
         // pay accumulated cleanup debt BETWEEN queries, not inside a later
         // timed section (see DriverHygiene)
         DriverHygiene.releasePersisted(spark)
@@ -260,12 +202,11 @@ object Bench {
         "\"" + k + "\":" + math.round(v * 1000) / 1000.0 }
         .mkString("{", ",", "}")
     }.mkString("[", ",", "]")
-    // per-pass diagnostics: [gc_ms, task_ms, task_gc_ms, tasks, stages]
-    // per query — the spike-attribution quartet (see listener above)
+    // per-pass diagnostics: the diag_fields values per query (see the
+    // spike attribution above)
     val perPassDiag = timed.map { pass =>
-      pass.map { case (k, (_, d)) =>
-        s""""$k":[${d.gcMs},${d.taskMs},${d.taskGcMs},${d.tasks},${d.stages},${d.jitMs},${d.taskCpuMs},${d.aluUs},${d.memUs},${d.codeKb},${d.metaKb},${d.compiles},${d.hostMs},${d.procMs}]"""
-      }.mkString("{", ",", "}")
+      pass.map { case (k, (_, d)) => "\"" + k + "\":" + d.mkString("[", ",", "]") }
+        .mkString("{", ",", "}")
     }.mkString("[", ",", "]")
     // The active JVM flag set, stamped so every artifact self-describes
     // its JVM config — a run through a path that drops the code-cache /
@@ -308,7 +249,7 @@ object Bench {
       .map { case (k, (lo, hi)) => s""""$k":[$lo,$hi]""" }
       .mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"pass_totals":${passTotals.mkString("[", ",", "]")},"codegen_compiles_per_pass":${compilesPerPass.mkString("[", ",", "]")},"code_cache_max_kb":$codeMaxKb,"jvm_flags":$jvmFlags,"pin_storage":"${Bridge.pinStorageSetting(spark).getOrElse("ser")}","host_ms_user_hz":100,"known_bands":$knownBands,"per_pass":$perPass,"per_pass_diag":$perPassDiag,"diag_fields":["gc_ms","task_ms","task_gc_ms","tasks","stages","jit_ms","task_cpu_ms","alu_us","mem_us","code_kb","meta_kb","compiles","host_ms","proc_ms"],"queries":$fullQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"pass_totals":${passTotals.mkString("[", ",", "]")},"codegen_compiles_per_pass":${compilesPerPass.mkString("[", ",", "]")},"code_cache_max_kb":$codeMaxKb,"jvm_flags":$jvmFlags,"pin_storage":"${Bridge.pinStorageSetting(spark).getOrElse("ser")}","host_ms_user_hz":100,"known_bands":$knownBands,"per_pass":$perPass,"per_pass_diag":$perPassDiag,"diag_fields":${diagFields.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":$fullQs,"sf":"$sfDir"}"""
     val detailPath = java.nio.file.Paths.get("bench")
     java.nio.file.Files.createDirectories(detailPath)
     java.nio.file.Files.writeString(detailPath.resolve("BENCH_FULL_latest.json"),

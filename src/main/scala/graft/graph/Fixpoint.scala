@@ -173,35 +173,6 @@ object Fixpoint {
     state.select(col("node"), col("component"))
   }
 
-  /** Incremental connected components: fold a NEW batch of pairs into an
-    * EXISTING labeling without re-walking the old graph — the cross-epoch
-    * companion of [[connectedComponents]] for a continuously-ingesting
-    * corpus (each sync's near-dup matches update the dedup clusters; the
-    * graph analog of [[graft.dedup.Dedup.incrementalMinhash]]).
-    *
-    * The previous labeling IS a contraction of the old graph: every old
-    * component collapses to a depth-1 star (node → its component root,
-    * roots kept as self-edges so untouched singletons survive in the
-    * output). Union the stars with the new pairs and run the ordinary
-    * min-label fixpoint — convergence now takes O(log d') rounds where
-    * d' is the diameter of the CONTRACTED graph (old components as
-    * supernodes + new edges), independent of the old graph's structure.
-    * A 10⁹-node history whose components are already labeled costs one
-    * star-table scan per sync, never a re-traversal; labels remain
-    * min-node-id, so output ≡ full [[connectedComponents]] over
-    * (old edges ∪ new pairs) exactly (spec'd: equality on seeded random
-    * graphs, and a 60-hop path labels in ≤3 rounds where the full
-    * recompute provably cannot).
-    *
-    * `prevLabels`: (node, component) with component = min node id of the
-    * old component — [[connectedComponents]] output verbatim. */
-  def incrementalComponents(prevLabels: DataFrame, newPairs: DataFrame,
-                            maxRounds: Int = 20): DataFrame = {
-    val stars = prevLabels.select(col("node").as("a"), col("component").as("b"))
-    connectedComponents(
-      stars.unionByName(newPairs.select(col("a"), col("b"))), maxRounds)
-  }
-
   /** PER-SEED hop distances — [[bfsDistances]] keyed by (seed, node), the
     * primitive behind sampled-landmark centralities
     * ([[Centrality.harmonicCentrality]]) and landmark-distance

@@ -284,9 +284,10 @@ object LlmQueries {
     * ([[Dedup.incrementalMinhash]] — history never re-shingled) and fold
     * into the existing labels through
     * [[graft.graph.Fixpoint.incrementalComponents]] — the old graph is
-    * never re-walked, only its star contraction. The result must equal a
-    * full recompute over (history pairs ∪ incremental matches), which is
-    * what the oracle computes from scratch. */
+    * never re-walked: the fixpoint runs over the components the new
+    * pairs touch. The result must equal a full recompute over (history
+    * pairs ∪ incremental matches), which is what the oracle computes
+    * from scratch. */
   def dedupIncrementalComponents(spark: SparkSession, dir: String): DataFrame = {
     val sh = Dedup.shingleTable(Tables.documents(spark, dir), "doc_id", "text")
     val hist = sh.filter(col("doc_id") % 5 =!= 0)

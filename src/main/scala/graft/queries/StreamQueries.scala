@@ -725,7 +725,7 @@ object StreamQueries {
     * [[graft.streaming.Streaming.growingComponentsSink]] from empty
     * state — per micro-batch: complete match (growing index probe ∪
     * within-batch self-LSH), then, side by side and joined before the
-    * batch returns, the index fold and a star-contraction fold of the
+    * batch returns, the index fold and a quotient-graph fold of the
     * new pairs into the evolving component labeling. The final
     * labels, left-joined onto the doc table with singleton fallback,
     * must equal the one-shot [[LlmQueries.dedupComponents]] pipeline —
@@ -812,7 +812,7 @@ object StreamQueries {
     * history corpus is clustered ONCE; its incremental probe matches are
     * replayed one file per micro-batch through
     * [[graft.streaming.Streaming.incrementalComponentsSink]], each batch
-    * folding into the labeling via star contraction — the accumulated
+    * folding into the labeling via its quotient graph — the accumulated
     * labels after the last batch must equal the one-shot
     * [[LlmQueries.dedupIncrementalComponents]] recompute (shared oracle),
     * no matter how the match feed was sliced. */

@@ -3,21 +3,18 @@ package graft.stats
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.util.LongAccumulator
 
 /** Sync observability — the reference emits nodes/rels created/deleted
   * per statement to statsd (cartography/graph/statement.py:284-299,
   * cartography/stats.py). Spark-native: named accumulators for
-  * connector-side counters, a QueryExecutionListener capturing output-row
-  * metrics per action, and explicit merge-delta counting where the
-  * created/updated/deleted split matters.
+  * connector-side counters and explicit merge-delta counting where the
+  * created/updated/deleted split matters; the jobs, stages and task
+  * time a statement runs come from [[graft.JobCensus]].
   */
 class SyncStats(spark: SparkSession) {
   private val counters = new TrieMap[String, LongAccumulator]()
-  val actions = new TrieMap[String, Long]() // action name -> output rows
 
   /** Named executor-side counter (statsd-counter analog). */
   def counter(name: String): LongAccumulator =
@@ -25,16 +22,6 @@ class SyncStats(spark: SparkSession) {
 
   def counterValue(name: String): Long =
     counters.get(name).map(_.value.longValue()).getOrElse(0L)
-
-  private val listener = new QueryExecutionListener {
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-      val rows = qe.executedPlan.metrics.get("numOutputRows").map(_.value)
-      rows.foreach(r => actions.put(s"$funcName:${actions.size}", r))
-    }
-    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-  }
-  spark.listenerManager.register(listener)
-  def unregister(): Unit = spark.listenerManager.unregister(listener)
 
   /** Created/updated/unchanged split for a merge batch — computed with
     * joins before the merge runs (the reference reads these from Cypher

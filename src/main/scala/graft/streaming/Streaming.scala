@@ -576,7 +576,7 @@ object Streaming {
     * re-delivered batch re-derives pairs the labeling already
     * contracted (no self-pairs by [[graft.dedup.Dedup
     * .incrementalMinhashComplete]]'s cross-term guard), and the
-    * star-contraction fold is replay-insensitive by spec — so the pair
+    * quotient-graph fold is replay-insensitive by spec — so the pair
     * stream feeds the fold DIRECTLY, with no accumulated-pair-set dedup
     * in the path at all. Labels persist as snapshot state
     * ([[BatchStore.publishSnapshot]]): a full linear write per
@@ -693,11 +693,11 @@ object Streaming {
 
   /** Streaming cluster maintenance: each micro-batch of (a, b) pairs
     * folds into the evolving component labeling through
-    * [[graft.graph.Fixpoint.incrementalComponents]] — the old labels
-    * enter each fold as depth-1 stars, so per-batch cost tracks the
-    * BATCH's structure, never the accumulated graph. Folding is
-    * order-insensitive AND replay-idempotent: stars are
-    * connectivity-preserving contractions and labels are min node ids,
+    * [[graft.graph.Fixpoint.incrementalComponents]] — each fold runs
+    * on the quotient graph of the components the batch touches, so
+    * per-batch cost tracks the BATCH's structure, never the accumulated
+    * graph. Folding is order-insensitive AND replay-idempotent: old
+    * components enter as super-nodes and labels are min node ids,
     * so labels(b1 ∘ b2) = labels(b1 ∪ b2) and a replayed batch re-adds
     * edges the labeling already contracted (spec'd both ways). The
     * production shape of live dedup-cluster upkeep: compose with

@@ -32,19 +32,19 @@ class Round19OpsSpec extends SparkSuite {
 
   test("incrementalComponents converges where an uncontracted path cannot") {
     // old graph: one 60-hop path, pre-labeled (all nodes -> 0); new edge
-    // merges it with a second labeled path. The contraction makes the
-    // merged structure depth ~1, so 3 rounds suffice — while a full
-    // recompute over the RAW path provably cannot label 60 hops in 3
-    // rounds (pointer jumping needs ~log2(60) ≈ 6): the round budget
-    // that fails raw is ample after contraction.
+    // merges it with a second labeled path. The quotient graph is the
+    // two old components joined by one super-edge, so its fixpoint
+    // converges at once — while a full recompute over the RAW path
+    // provably cannot label 60 hops in 3 rounds (pointer jumping needs
+    // ~log2(60) ≈ 6).
     val path1 = (0L until 60L).map(i => (i, i + 1))           // 0..60
     val path2 = (100L until 130L).map(i => (i, i + 1))        // 100..130
     val prev = Fixpoint.connectedComponents((path1 ++ path2).toDF("a", "b"))
     val bridge = Seq((60L, 100L)).toDF("a", "b")
-    val inc = labelsOf(Fixpoint.incrementalComponents(prev, bridge, maxRounds = 3))
+    val inc = labelsOf(Fixpoint.incrementalComponents(prev, bridge))
     assert(inc.values.toSet == Set(0L), "merged component labels to min id 0")
     assert(inc.keySet == ((0L to 60L) ++ (100L to 130L)).toSet)
-    // control: the raw merged path in the same 3-round budget must fail
+    // control: the raw merged path in a 3-round budget must fail
     // loudly (connectedComponents throws instead of returning bad labels)
     val raw = (path1 ++ path2 ++ Seq((60L, 100L))).toDF("a", "b")
     intercept[IllegalStateException](

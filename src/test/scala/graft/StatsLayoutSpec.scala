@@ -24,7 +24,6 @@ class StatsLayoutSpec extends SparkSuite {
     val stats = new SyncStats(spark)
     val (created, updated) = stats.mergeDelta(t1, b2, Seq("id"))
     assert(created == 1L && updated == 1L)
-    stats.unregister()
   }
 
   test("named accumulators count executor-side events") {
@@ -34,7 +33,6 @@ class StatsLayoutSpec extends SparkSuite {
       it: Iterator[java.lang.Long] => it.foreach(_ => acc.add(1))
     }
     assert(stats.counterValue("rows_seen") == 100L)
-    stats.unregister()
   }
 
   test("label migration renames node tables, labels arrays, and edge keys") {

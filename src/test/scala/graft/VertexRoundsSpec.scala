@@ -201,8 +201,6 @@ class VertexRoundsSpec extends SparkSuite {
       assert(pairs(Fixpoint.connectedComponents(df(e, "a", "b"))) == want)
       val (oldE, newE) = e.splitAt(e.size / 2)
       val prev = Fixpoint.connectedComponents(df(oldE, "a", "b"))
-      assert(pairs(Fixpoint.incrementalComponents(prev, df(newE, "a", "b"),
-        maxRounds = 20)) == want, s"seed $seed, contracted-star form")
       assert(pairs(Fixpoint.incrementalComponents(prev, df(newE, "a", "b"))) == want,
         s"seed $seed, quotient form")
     }
