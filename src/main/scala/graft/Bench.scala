@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, prints one JSON line (driver contract).
@@ -249,7 +248,7 @@ object Bench {
       .map { case (k, (lo, hi)) => s""""$k":[$lo,$hi]""" }
       .mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"pass_totals":${passTotals.mkString("[", ",", "]")},"codegen_compiles_per_pass":${compilesPerPass.mkString("[", ",", "]")},"code_cache_max_kb":$codeMaxKb,"jvm_flags":$jvmFlags,"pin_storage":"${Bridge.pinStorageSetting(spark).getOrElse("ser")}","host_ms_user_hz":100,"known_bands":$knownBands,"per_pass":$perPass,"per_pass_diag":$perPassDiag,"diag_fields":${diagFields.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":$fullQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"pass_totals":${passTotals.mkString("[", ",", "]")},"codegen_compiles_per_pass":${compilesPerPass.mkString("[", ",", "]")},"code_cache_max_kb":$codeMaxKb,"jvm_flags":$jvmFlags,"host_ms_user_hz":100,"known_bands":$knownBands,"per_pass":$perPass,"per_pass_diag":$perPassDiag,"diag_fields":${diagFields.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":$fullQs,"sf":"$sfDir"}"""
     val detailPath = java.nio.file.Paths.get("bench")
     java.nio.file.Files.createDirectories(detailPath)
     java.nio.file.Files.writeString(detailPath.resolve("BENCH_FULL_latest.json"),

@@ -46,9 +46,11 @@ object JobCensus {
   }
 
   /** The jobs of one window in start order, with the window's completed
-    * stages and the tasks that reported metrics, their run, CPU and GC time. */
+    * stages and the tasks that reported metrics, their run, CPU and GC
+    * time, and the number of SQL executions the window started. */
   final case class Window(jobs: Seq[Job], tasks: Long, stages: Long,
-                          taskRunMs: Long, taskCpuNs: Long, taskGcMs: Long)
+                          taskRunMs: Long, taskCpuNs: Long, taskGcMs: Long,
+                          sqlExecutions: Int)
 
   private var registered: Option[JobCensus] = None
 
@@ -102,7 +104,7 @@ object JobCensus {
     def window: Window = synchronized {
       val jobs = starts.toSeq.map { case (s, l) =>
         Job(s, l, ends.get(s.jobId).fold(0.0)(t => (t - s.time) / 1e3)) }
-      Window(jobs, tasks, stages, runMs, cpuNs, gcMs)
+      Window(jobs, tasks, stages, runMs, cpuNs, gcMs, planHeads.size)
     }
   }
 }

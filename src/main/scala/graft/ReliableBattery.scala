@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Reliable-lineage battery leg (r11 verdict item 3): run the
   * fixpoint-heavy gate subset (graph_*, fixpoint_*, centrality_*,
   * dedup_components) under `graft.lineage.mode=local` (the default —
-  * localCheckpoint, zero executor-loss tolerance) and under
+  * local checkpoints, zero executor-loss tolerance) and under
   * `graft.lineage.mode=reliable, reliableEvery=3` (every 3rd cut/pin a
-  * durable `Dataset.checkpoint` write, the rest plan-only cuts), assert
+  * durable checkpoint write, the rest plan-only), assert
   * the results HASH-IDENTICAL, and print per-query wall times for the
   * overhead curve. This is the proof that fault tolerance for the
   * multi-hour 100-TB fixpoint fleet is a config flip, not a rewrite —

@@ -47,7 +47,7 @@ object SyncSmoke {
       }
       // eager handoff: a stage's output is MATERIALIZED inside its own
       // timing window, so the next stage never replays it
-      def force(df: DataFrame): DataFrame = df.localCheckpoint(true)
+      def force(df: DataFrame): DataFrame = Lineage.pinned(df, eager = true)
 
       val custRaw = multiply(Tables.customer(spark, sfDir), m, "c_custkey")
       val ordRaw = multiply(Tables.orders(spark, sfDir), m, "o_custkey")

@@ -462,9 +462,10 @@ object Centrality {
     * Σ deg². Only actual triangles are exploded (3 corners each); the
     * oriented set is shuffled once, into the adjacency
     * ([[outAdjacency]]). */
-  def triangleCount(edges: DataFrame): DataFrame = trianglesOn(undirected(edges))
+  def triangleCount(edges: DataFrame): DataFrame = trianglesOn(undirected(edges).pin)
 
-  /** [[triangleCount]] of an already-canonical (a < b, distinct) edge set. */
+  /** [[triangleCount]] of an already-canonical (a < b, distinct) edge set,
+    * pinned by the caller: [[orientByDegree]] reads it three times. */
   private def trianglesOn(und: DataFrame): DataFrame = {
     val adj = outAdjacency(und)
     // the third corners ride the intersect result; u and v each count
@@ -495,7 +496,7 @@ object Centrality {
     * w = c. The degree orientation keeps out-degrees O(√E), so the work
     * is Σ d⁺² per closure level, not Σ deg². Output one row: (n_k4). */
   def cliqueCensusK4(edges: DataFrame): DataFrame = {
-    val adj = outAdjacency(undirected(edges))
+    val adj = outAdjacency(undirected(edges).pin)
     closeWedges(adj)
       .select(explode(col("ws")).as("w"), col("ws"))
       .join(adj.select(col("u").as("w"), col("ns").as("nw")), Seq("w"))

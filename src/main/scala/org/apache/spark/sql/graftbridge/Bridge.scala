@@ -1,13 +1,19 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{classic, Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Bridge to spark-sql's package-private Column ↔ Expression converters
-  * (org.apache.spark.sql.classic.ExpressionUtils is private[sql] in
-  * Spark 4) — the supported pattern for libraries that ship custom
-  * Catalyst expressions without going through the SQL function registry.
+/** Bridge to Spark's package-private API: the Column ↔ Expression
+  * converters (org.apache.spark.sql.classic.ExpressionUtils is
+  * private[sql] in Spark 4) — the supported pattern for libraries that
+  * ship custom Catalyst expressions without going through the SQL
+  * function registry — and the one [[checkpoint]] behind every cut and
+  * pin (`Dataset.ofRows`, `LogicalRDD.fromDataset` and
+  * `RDD.doCheckpoint` are private too).
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -22,76 +28,91 @@ object Bridge {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "built-in")
 
-  /** All cut/pin block storage defaults to SERIALIZED
-    * (MEMORY_AND_DISK_SER), not the deserialized default: a deserialized
-    * block rides MemoryStore's `DeserializedValuesHolder`, whose
-    * `SizeTracker` re-estimates the unroll vector by SAMPLING THE OBJECT
-    * GRAPH (`SizeEstimator.estimate` → `sampleArray`, pointer-chasing per
+  /** Block storage of cuts and pins: SERIALIZED (MEMORY_AND_DISK_SER),
+    * not the deserialized default. A deserialized block rides
+    * MemoryStore's `DeserializedValuesHolder`, whose `SizeTracker`
+    * re-estimates the unroll vector by SAMPLING THE OBJECT GRAPH
+    * (`SizeEstimator.estimate` → `sampleArray`, pointer-chasing per
     * sampled row) — JFR execution samples of a blown-up bench pass put
     * ~85% of the victim query's task CPU inside exactly that machinery,
     * and pointer-chasing is hypersensitive to memory-bandwidth contention
     * (stall cycles bill as thread CPU). A serialized block streams rows
     * into chunked byte buffers with an EXACT byte count — no estimator,
     * smaller footprint, cheaper spill — and UnsafeRow's Externalizable
-    * form is a plain length+bytes copy.
-    *
-    * The trade is a per-RE-READ deserialization: read-many fixpoints
-    * (rpq/anf/scan_clusters and the ReliableBattery's hash-aggregate
-    * consumers) pay a bounded premium (+0.3-0.7s at sf0.1, measured in
-    * PROGRESS round-14). `graft.lineage.pinStorage=deser` (Spark conf,
-    * or the same-named JVM system property for runmain.sh-launched
-    * mains) flips the whole engine back to deserialized blocks for
-    * storm-free environments where re-read latency dominates. */
-  def pinStorageLevel(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.storage.StorageLevel =
-    storageLevelOf(pinStorageSetting(spark).getOrElse("ser"))
+    * form is a plain length+bytes copy. The trade is a deserialization
+    * per RE-READ (+0.3-0.7s at sf0.1 on read-many fixpoints, PROGRESS
+    * round-14), which [[HotPinLevel]] buys back where it dominates. */
+  val PinLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER
 
-  /** `graft.lineage.pinStorage` as set — the session conf first, then the
-    * same-named JVM system property — checked to be 'ser' or 'deser';
-    * None when neither is set. The one reading of the knob: both pin
-    * levels and Bench's `pin_storage` stamp resolve through it. */
-  def pinStorageSetting(spark: org.apache.spark.sql.SparkSession): Option[String] = {
-    val key = "graft.lineage.pinStorage"
-    val v = spark.conf.getOption(key).orElse(sys.props.get(key))
-    v.filterNot(Set("ser", "deser")).foreach { other =>
-      throw new IllegalArgumentException(s"$key must be 'ser' or 'deser', got '$other'")
-    }
-    v
+  /** Block storage of HOT pins — frames a fixpoint re-reads many times
+    * per round (k-truss' peel table, coreness' live/edge state, the
+    * basket table of the rules miner): DESERIALIZED. Serialized blocks
+    * pay a full deserialization per re-read; for these sites the r15
+    * paired runs measured +0.5-0.7s per query at sf0.1 under SER, while
+    * the storm class SER protects against (SizeEstimator sampling on
+    * UNROLL) bills per write, which hot read-many frames do once. */
+  val HotPinLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK
+
+  /** What a [[checkpoint]] does to the lineage of its RDD. */
+  sealed abstract class Truncation
+  object Truncation {
+    /** Truncated; the blocks live only on their executors
+      * (`RDD.localCheckpoint`): fastest, no executor-loss tolerance. */
+    case object Local extends Truncation
+    /** Truncated to files under `SparkContext.checkpointDir`
+      * (`RDD.checkpoint`): a lost executor re-reads them. */
+    case object Durable extends Truncation
+    /** Kept: only the SQL plan becomes a leaf, and the RDD chain stays
+      * recomputable back to the last durable files — the rounds between
+      * the durable writes of an interval-checkpointed fixpoint. */
+    case object PlanOnly extends Truncation
   }
 
-  private def storageLevelOf(setting: String): org.apache.spark.storage.StorageLevel =
-    if (setting == "ser") org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-  /** Local checkpoint that does NOT inherit the parent plan's statistics.
+  /** The one checkpoint of the project: `df` as a `LogicalRDD` leaf over
+    * its own rows. Cuts, pins and hot pins all come through here (via
+    * [[graft.Lineage]]), and none opens a SQL execution of its own.
     *
-    * `Dataset.localCheckpoint` in Spark 4 rewrites the parent plan's
-    * stats onto the new `LogicalRDD` (`LogicalRDD.rewriteStatsAndConstraints`,
-    * sql/core ExistingRDD.scala). Inside an iterative fixpoint that is a
-    * DRIVER-SIDE TIME BOMB: round N's sizeInBytes is a BigInt *product*
-    * over round N−1's already-inherited stats, so the bit length roughly
-    * doubles per round and by round ~25 the driver spends minutes in
-    * BigInteger.multiplyToomCook3 per checkpoint (measured: 18s → 188s
-    * inter-round gaps on a 600-row graph) — independent of data size.
-    * Building the frame back from the raw RDD resets the stats to
-    * `spark.sql.defaultSizeInBytes`, which is the honest estimate for a
-    * fixpoint frontier anyway (its size is unknowable at plan time).
-    * Same laziness as `localCheckpoint(eager = false)`: the RDD is
-    * checkpoint-marked now and materialized by the round's first action.
-    */
-  def localCheckpointNoStats(df: org.apache.spark.sql.DataFrame,
-                             eager: Boolean = false)
-      : org.apache.spark.sql.DataFrame = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val spark = ds.sparkSession
+    * The rows are `queryExecution.toRdd`, copied, with the source plan's
+    * metrics kept ([[keepMetrics]]); the RDD is persisted at `level`
+    * first — RDD.localCheckpoint keeps a pre-set level's serialized flag
+    * (LocalRDDCheckpointData.transformStorageLevel only forces useDisk)
+    * where an unset one falls back to deserialized, and a durable write
+    * of a persisted RDD reads the blocks instead of recomputing the plan
+    * — and then marked per `truncation`. With `eager` the rows are
+    * materialized now, in one job (a truncating checkpoint runs its own:
+    * the local blocks, or the durable write); otherwise by the first
+    * action that reads the frame (with AQE, `toRdd` has already run the
+    * plan's shuffle stages).
+    *
+    * `keepStats` picks the leaf. True builds it the way
+    * `Dataset.checkpoint` does (`LogicalRDD.fromDataset`): the source's
+    * output attributes, statistics and constraints, and its executed
+    * plan's output partitioning and ordering. False resets the
+    * statistics to `spark.sql.defaultSizeInBytes`, on fresh attributes
+    * with unknown partitioning: inside a loop, inherited statistics
+    * COMPOUND — round N's sizeInBytes is a BigInt product over round
+    * N−1's inherited one, so the bit length roughly doubles per round
+    * and by round ~25 the driver spends minutes in
+    * BigInteger.multiplyToomCook3 per checkpoint (measured 18s → 188s
+    * inter-round gaps on a 600-row graph), whatever the data size. The
+    * default prior is the honest estimate for a frontier whose size is
+    * unknowable at plan time; AQE re-plans from the runtime sizes. */
+  def checkpoint(df: DataFrame, eager: Boolean, level: StorageLevel,
+                 keepStats: Boolean, truncation: Truncation): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
     val rdd = keepMetrics(ds.queryExecution.toRdd.map(_.copy()), ds)
-    // persist first: RDD.localCheckpoint keeps a pre-set level's
-    // serialized flag (LocalRDDCheckpointData.transformStorageLevel only
-    // forces useDisk), whereas unset falls back to deserialized
-    rdd.persist(pinStorageLevel(spark))
-    rdd.localCheckpoint()
-    if (eager) rdd.count()
-    spark.internalCreateDataFrame(rdd, ds.schema)
+    rdd.persist(level)
+    truncation match {
+      case Truncation.Local    => rdd.localCheckpoint()
+      case Truncation.Durable  => rdd.checkpoint()
+      case Truncation.PlanOnly => ()
+    }
+    if (eager) {
+      if (truncation == Truncation.PlanOnly) rdd.count() else rdd.doCheckpoint()
+    }
+    if (keepStats)
+      classic.Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+    else ds.sparkSession.internalCreateDataFrame(rdd, ds.schema)
   }
 
   /** The SQL metrics of the plans whose RDDs were checkpointed, each
@@ -108,61 +129,14 @@ object Bridge {
     * lost. A running job reaches the checkpointed RDD itself, so the
     * metrics hang off it. */
   private val sourceMetrics = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], Seq[AnyRef]]())
+    new java.util.WeakHashMap[RDD[_], Seq[AnyRef]]())
 
-  private def keepMetrics[R <: org.apache.spark.rdd.RDD[_]](rdd: R,
-      source: org.apache.spark.sql.DataFrame): R = {
+  private def keepMetrics[R <: RDD[_]](rdd: R, source: classic.Dataset[_]): R = {
     val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    val plan = source.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.executedPlan
-    sourceMetrics.put(rdd,
-      helper.collectWithSubqueries(plan) { case p => p.metrics.values.toSeq }.flatten)
+    sourceMetrics.put(rdd, helper.collectWithSubqueries(source.queryExecution.executedPlan) {
+      case p => p.metrics.values.toSeq }.flatten)
     rdd
   }
-
-  /** [[keepMetrics]] for a frame checkpointed by `Dataset.localCheckpoint`
-    * or `Dataset.checkpoint`: `cut`'s RDD keeps `source`'s plan metrics. */
-  def keepSourceMetrics(cut: org.apache.spark.sql.DataFrame,
-                        source: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    cut.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(keepMetrics(_, source))
-    cut
-  }
-
-  /** Reliable (checkpoint-dir-backed) variant of [[localCheckpointNoStats]]:
-    * same stats reset, same lazy semantics, but the materialized partitions
-    * are written to `SparkContext.checkpointDir` (HDFS/S3 on a cluster), so
-    * losing an executor mid-fixpoint re-reads the durable files instead of
-    * dying on "lineage truncated and cannot be recomputed". Persisted
-    * MEMORY_AND_DISK first per the RDD.checkpoint contract (otherwise the
-    * checkpoint write recomputes the whole plan a second time). */
-  def reliableCheckpointNoStats(df: org.apache.spark.sql.DataFrame,
-                                eager: Boolean = false)
-      : org.apache.spark.sql.DataFrame = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val spark = ds.sparkSession
-    val rdd = keepMetrics(ds.queryExecution.toRdd.map(_.copy()), ds)
-    rdd.persist(pinStorageLevel(spark))
-    rdd.checkpoint()
-    if (eager) rdd.count()
-    spark.internalCreateDataFrame(rdd, ds.schema)
-  }
-
-  /** Storage level for HOT pins — frames a fixpoint re-reads many times
-    * per round (k-truss' peel table, coreness' live/edge state, the
-    * basket table of the rules miner). Serialized blocks pay a full
-    * deserialization per RE-READ; for these sites the r15 paired runs
-    * measured +0.5-0.7s per query at sf0.1 under SER vs deser, while
-    * the storm class SER protects against (MemoryStore SizeEstimator
-    * sampling on UNROLL) bills per write, which hot read-many frames do
-    * once. So: hot pins default to deserialized; an EXPLICIT global
-    * `graft.lineage.pinStorage` (either value) still wins, so one knob
-    * can force the whole engine storm-safe ('ser') or fast ('deser')
-    * for artifact comparability. */
-  def hotPinStorageLevel(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.storage.StorageLevel =
-    storageLevelOf(pinStorageSetting(spark).getOrElse("deser"))
 
   /** True when the frame is already a materialized leaf — a
     * checkpoint/pin scan (`LogicalRDD`), possibly under trivial
@@ -247,24 +221,6 @@ object Bridge {
                       timeoutMs: Long = 10000L): Unit =
     try spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
     catch { case _: java.util.concurrent.TimeoutException => () }
-
-  /** Plan-only cut: rebuilds the frame as a `LogicalRDD` leaf (small SQL
-    * plan, stats reset to the default prior — the compounding-BigInt stat
-    * bomb is defused) WITHOUT truncating RDD lineage. The RDD chain stays
-    * recomputable back to the last durable checkpoint, which is what the
-    * intermediate rounds of an interval-checkpointed fixpoint need: cut the
-    * plan every round, pay the durable write every Nth. Persisted so the
-    * round's multiple consumers don't recompute it. */
-  def planCutNoStats(df: org.apache.spark.sql.DataFrame,
-                     eager: Boolean = false)
-      : org.apache.spark.sql.DataFrame = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val spark = ds.sparkSession
-    val rdd = keepMetrics(ds.queryExecution.toRdd.map(_.copy()), ds)
-    rdd.persist(pinStorageLevel(spark))
-    if (eager) rdd.count()
-    spark.internalCreateDataFrame(rdd, ds.schema)
-  }
 }
 
 /** Parquet reads that skip Spark's driver-side discovery jobs. */

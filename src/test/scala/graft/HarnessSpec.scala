@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** The session harness itself: sessions are built in exactly two places,
   * [[GraftSession]] for the mains and [[SparkSuite]] for the suites,
-  * [[JobCensus]] is the one listener on the bus, and `withConf` puts the
-  * conf back whatever its body does. */
+  * [[JobCensus]] is the one listener on the bus, every checkpoint goes
+  * through [[Lineage]], and `withConf` puts the conf back whatever its
+  * body does. */
 class HarnessSpec extends SparkSuite {
   /** Every Scala source under src/main and src/test. */
   private lazy val sources: Seq[Path] = {
@@ -34,6 +35,17 @@ class HarnessSpec extends SparkSuite {
     assert(census.size == 1 && subclasses(census.head) == List("SparkListener"))
     val offenders = sources.filterNot(census.contains).filter(subclasses(_).nonEmpty)
     assert(offenders.isEmpty, s"bus or query listeners outside JobCensus: ${offenders.mkString(", ")}")
+  }
+
+  test("only Lineage and Bridge checkpoint a Dataset or RDD in src/main") {
+    val call = """\.(localCheckpoint|checkpoint)\s*\(""".r
+    val allowed = Set("Lineage.scala", "Bridge.scala")
+    val main = sources.filter(_.startsWith(Paths.get("src/main")))
+    assert(main.exists(p => allowed(p.getFileName.toString)))
+    val offenders = main.filterNot(p => allowed(p.getFileName.toString))
+      .filter(p => call.findFirstIn(Files.readString(p)).nonEmpty)
+    assert(offenders.isEmpty,
+      s"checkpoints outside Lineage's cut/pin path: ${offenders.mkString(", ")}")
   }
 
   test("withConf restores the prior values when its body throws") {

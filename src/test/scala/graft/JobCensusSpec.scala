@@ -1,7 +1,8 @@
 package graft
 
 /** [[JobCensus]]: a window holds exactly its body's jobs, labels them as
-  * `JobBreakdown` prints them, and counts their stages and tasks. */
+  * `JobBreakdown` prints them, and counts their stages, tasks and SQL
+  * executions. */
 class JobCensusSpec extends SparkSuite {
   private def census = JobCensus(spark)
 
@@ -22,6 +23,7 @@ class JobCensusSpec extends SparkSuite {
     assert(described.jobs.map(_.label) == Seq("census: described"))
     val (_, sql) = census.during(spark.range(100).selectExpr("sum(id)").collect())
     assert(sql.jobs.nonEmpty)
+    assert(sql.sqlExecutions == 1)
     val Unlabeled = """\[unlabeled\] sql#\d+ (.+) @ .+""".r
     sql.jobs.map(_.label).foreach {
       case l @ Unlabeled(planHead) => assert(planHead != "?", l)
@@ -32,7 +34,7 @@ class JobCensusSpec extends SparkSuite {
   test("parallelize(1 to 8, 4).count() reads 1 job, 1 stage and 4 tasks") {
     val (n, w) = census.during(spark.sparkContext.parallelize(1 to 8, 4).count())
     assert(n == 8)
-    assert((w.jobs.size, w.stages, w.tasks) == (1, 1L, 4L))
+    assert((w.jobs.size, w.stages, w.tasks, w.sqlExecutions) == (1, 1L, 4L, 0))
     assert(w.taskRunMs >= 0 && w.taskCpuNs > 0 && w.taskGcMs >= 0)
   }
 }

@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 
 /** The `graft.lineage.mode` strategy switch must be output-invisible:
   * a fixpoint produces byte-identical results under `local` (default,
-  * localCheckpoint), `reliable` (durable checkpoint-dir files), and
+  * local checkpoints), `reliable` (durable checkpoint-dir files), and
   * `reliable` with an interval (plan-only cuts between durable writes).
   * Reliable mode must actually WRITE to the checkpoint dir — that is
-  * the executor-loss-recovery evidence. */
+  * the executor-loss-recovery evidence. The checkpoint contract test
+  * pins down, per kind and mode, each leaf's statistics, storage level,
+  * lineage and eagerness, and that no checkpoint opens a SQL execution. */
 class LineageModeSpec extends SparkSuite {
   override protected def shufflePartitions: Int = 7
   import spark.implicits._
@@ -51,7 +53,8 @@ class LineageModeSpec extends SparkSuite {
   test("plan-only cut keeps the SQL plan a leaf but preserves recomputability") {
     import org.apache.spark.sql.graftbridge.Bridge
     val df = spark.range(100).toDF("id").withColumn("v", col("id") * 2)
-    val cut = Bridge.planCutNoStats(df)
+    val cut = Bridge.checkpoint(df, eager = false, Bridge.PinLevel, keepStats = false,
+      Bridge.Truncation.PlanOnly)
     // SQL plan is a leaf (LogicalRDD) — the stat bomb is defused
     assert(cut.queryExecution.optimizedPlan.children.isEmpty)
     // and unlike localCheckpoint, the RDD lineage is still recomputable:
@@ -113,32 +116,78 @@ class LineageModeSpec extends SparkSuite {
     assert(viaPinned == viaRaw)
   }
 
-  test("pinHot stores deserialized unless the global knob explicitly forces a level") {
-    import org.apache.spark.sql.graftbridge.Bridge
+  test("checkpoint contract: cut, pin and hot pin under local, reliable and reliable every 3") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+    import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.storage.StorageLevel
-    // default: hot sites deserialized, plain pins serialized
-    assert(Bridge.hotPinStorageLevel(spark) == StorageLevel.MEMORY_AND_DISK)
-    assert(Bridge.pinStorageLevel(spark) == StorageLevel.MEMORY_AND_DISK_SER)
-    // explicit global wins over the per-site hint, both directions
-    withConf("graft.lineage.pinStorage" -> "ser") {
-      assert(Bridge.hotPinStorageLevel(spark) == StorageLevel.MEMORY_AND_DISK_SER)
-    }
-    withConf("graft.lineage.pinStorage" -> "deser") {
-      assert(Bridge.hotPinStorageLevel(spark) == StorageLevel.MEMORY_AND_DISK)
-      assert(Bridge.pinStorageLevel(spark) == StorageLevel.MEMORY_AND_DISK)
-      assert(Bridge.pinStorageSetting(spark).contains("deser")) // Bench's stamp
-    }
-    assert(Bridge.pinStorageSetting(spark).isEmpty)
-    withConf("graft.lineage.pinStorage" -> "bogus") {
-      intercept[IllegalArgumentException] { Bridge.pinStorageLevel(spark) }
-    }
-    // output-invisible: a hot pin is still the same frame
-    import graft.Lineage.CutOps
-    val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    assert(df.pinHot.collect().toSet == df.collect().toSet)
-    // reliable mode routes pinHot through the durable pin path
-    withConf("graft.lineage.mode" -> "reliable") {
-      assert(df.pinHot.collect().toSet == df.collect().toSet)
+    import Lineage.CutOps
+    ckptDir
+    case class Kind(name: String, of: DataFrame => DataFrame, level: StorageLevel,
+                    keepsStats: Boolean, eager: Boolean)
+    val kinds = Seq(
+      Kind("cut", _.cut, StorageLevel.MEMORY_AND_DISK_SER, keepsStats = false, eager = false),
+      Kind("cutEager", _.cutEager, StorageLevel.MEMORY_AND_DISK_SER, keepsStats = false, eager = true),
+      Kind("pin", _.pin, StorageLevel.MEMORY_AND_DISK_SER, keepsStats = true, eager = false),
+      Kind("pinEager", _.pinEager, StorageLevel.MEMORY_AND_DISK_SER, keepsStats = true, eager = true),
+      Kind("pinHot", _.pinHot, StorageLevel.MEMORY_AND_DISK, keepsStats = true, eager = false))
+    // mode → the number of durable checkpoints among three in a row
+    // (every=3 hits the shared counter's multiple of 3 exactly once,
+    // whatever its phase); a checkpoint that is not durable is local in
+    // local mode and plan-only in reliable mode
+    val modes = Seq(
+      "local" -> (Seq("graft.lineage.mode" -> "local"), 0),
+      "reliable" -> (Seq("graft.lineage.mode" -> "reliable"), 3),
+      "reliable every 3" -> (Seq("graft.lineage.mode" -> "reliable",
+        "graft.lineage.reliableEvery" -> "3"), 1))
+    val defaultSize = 7777777L
+    def leafOf(df: DataFrame) = df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l }
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val fs = new Path(ckptDir.toURI).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // without AQE the source's hash partitioning reaches an inheriting leaf
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val src = spark.range(0, 60, 1, 3).select(col("id"), (col("id") % 7).as("v"))
+        .repartition(4, col("v"))
+      val want = rows(src)
+      // what an inheriting leaf must equal: the leaf Dataset.checkpoint builds
+      val ref = leafOf(src.localCheckpoint(false)).get
+      assert(ref.outputPartitioning.isInstanceOf[HashPartitioning])
+      assert(ref.stats.sizeInBytes != BigInt(defaultSize))
+      for ((mode, (conf, durableOfThree)) <- modes; k <- kinds) {
+        val cell = s"${k.name} × $mode"
+        withConf(conf :+ ("spark.sql.defaultSizeInBytes" -> defaultSize.toString): _*) {
+          val (frames, w) = JobCensus(spark).during(Seq.fill(3)(k.of(src)))
+          assert(w.sqlExecutions == 0, s"$cell opened a SQL execution")
+          val leaves = frames.map(f => leafOf(f).getOrElse(fail(s"$cell: no LogicalRDD leaf")))
+          val truncatedBeforeAction = leaves.map(_.rdd.isCheckpointed)
+          frames.foreach(f => assert(rows(f) == want, cell))
+          val durable = leaves.map(_.rdd.getCheckpointFile.exists(f => fs.exists(new Path(f))))
+          assert(durable.count(identity) == durableOfThree, s"$cell: durable $durable")
+          frames.indices.foreach { i =>
+            val (l, truncates) = (leaves(i), mode == "local" || durable(i))
+            assert(l.rdd.getStorageLevel == k.level, cell)
+            assert(l.rdd.isCheckpointed == truncates, s"$cell: lineage")
+            assert(truncatedBeforeAction(i) == (k.eager && truncates), s"$cell: eagerness")
+            // statistics, attributes and partitioning: inherited from the
+            // source, or reset (the default size, fresh attributes, unknown)
+            val inherits = k.keepsStats && truncates
+            val leaf = (l.stats.sizeInBytes, l.output.map(_.exprId), l.outputPartitioning)
+            if (inherits)
+              assert(leaf == ((ref.stats.sizeInBytes, ref.output.map(_.exprId), ref.outputPartitioning)),
+                s"$cell: inherited leaf")
+            else {
+              assert(l.stats.sizeInBytes == BigInt(defaultSize), s"$cell: statistics")
+              assert(l.output.map(_.exprId).intersect(ref.output.map(_.exprId)).isEmpty, s"$cell: attributes")
+              assert(l.outputPartitioning.isInstanceOf[UnknownPartitioning], s"$cell: partitioning")
+            }
+            if (!truncates) { // plan-only: recomputable once its blocks are gone
+              l.rdd.unpersist(blocking = true)
+              assert(rows(frames(i)) == want, s"$cell: recompute")
+            }
+          }
+        }
+      }
     }
   }
 
