@@ -3,13 +3,11 @@ package graft.client
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.graph.Graph
-
 /** Typed graph read-back helpers — the reference's client query surface
   * (reference: cartography/client/core/tx.py:367-533:
-  * read_list_of_values_tx / read_list_of_dicts_tx / read_list_of_tuples_tx /
-  * read_single_value_tx / read_single_dict_tx), which later sync stages use
-  * to feed derived computations (graph-as-source, SURVEY §2.1).
+  * read_list_of_values_tx / read_list_of_dicts_tx / read_single_value_tx),
+  * which later sync stages use to feed derived computations
+  * (graph-as-source, SURVEY §2.1).
   *
   * These are the only operators allowed to collect: they exist precisely
   * where the reference pulls a bounded result to the driver (config-sized
@@ -42,10 +40,6 @@ object Readers {
       .map(r => cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
   }
 
-  /** Rows as raw tuples in column order (read_list_of_tuples_tx). */
-  def listOfTuples(df: DataFrame, maxRows: Int = DefaultMaxRows): Seq[Seq[Any]] =
-    bounded(df, maxRows).toSeq.map(_.toSeq)
-
   /** Streaming escape hatch for genuinely-large read-backs: rows as a
     * lazy iterator of maps via `toLocalIterator`, which holds AT MOST ONE
     * PARTITION on the driver at a time instead of the whole result (the
@@ -65,16 +59,4 @@ object Readers {
   /** First value of the first row, or None (read_single_value_tx). */
   def singleValue(df: DataFrame, column: String): Option[Any] =
     df.select(col(column)).limit(1).collect().headOption.map(_.get(0))
-
-  /** First row as a map, or None (read_single_dict_tx). */
-  def singleDict(df: DataFrame): Option[Map[String, Any]] =
-    df.limit(1).collect().headOption.map { r: Row =>
-      df.columns.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap
-    }
-
-  /** Node lookup by label + property filter — the prebuilt client query
-    * shape (reference: cartography/client/aws/iam.py:10-56). */
-  def nodesWhere(graph: Graph, label: String,
-                 pred: org.apache.spark.sql.Column): DataFrame =
-    graph.nodeTable(label).filter(pred)
 }

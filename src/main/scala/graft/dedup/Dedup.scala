@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VecFunctions.vec_dot
@@ -62,28 +62,18 @@ object Dedup {
       col("shingles").as("sh_a"))
     val b = mat.select(col("block"), col("doc_id").as("doc_b"),
       col("shingles").as("sh_b"))
-    a.join(b, Seq("block")).filter(col("doc_a") < col("doc_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("uni",
-        size(col("sh_a")).cast("long") + size(col("sh_b")) - col("inter"))
-      .withColumn("jacc_x1e6",
-        floor(lit(1000000.0) * col("inter") / col("uni")).cast("long"))
-      .filter(col("jacc_x1e6") >= minJaccX1e6)
+    scored(a.join(b, Seq("block")).filter(col("doc_a") < col("doc_b")), Jaccard, minJaccX1e6)
       .select(col("doc_a"), col("doc_b"), col("jacc_x1e6"))
   }
 
   /** MinHash + LSH near-dup detection: 8 minhashes → 4 bands of 2 → band
     * equi-join candidates → exact Jaccard verification ≥ minJaccX1e6.
     * Candidate generation cost is one shuffle on (band, h1, h2); the full
-    * pair space is never built (shingle→minhash→band→bucket-join). */
+    * pair space is never built (shingle→minhash→band→bucket-join). The
+    * shingle prep feeds the band join and both verification lookups, so
+    * it is pinned once. */
   def minhashLsh(shingled: DataFrame, minJaccX1e6: Long): DataFrame =
-    lshCandidatePairs(shingled)
-      .withColumn("uni",
-        size(col("sh_a")).cast("long") + size(col("sh_b")) - col("inter"))
-      .withColumn("jacc_x1e6",
-        floor(lit(1000000.0) * col("inter") / col("uni")).cast("long"))
-      .filter(col("jacc_x1e6") >= minJaccX1e6)
-      .select(col("doc_a"), col("doc_b"), col("jacc_x1e6"))
+    selfLsh(signatures(shingled), minJaccX1e6)
 
   /** EXACT all-pairs Jaccard join via prefix filtering (the AllPairs /
     * PPJoin family — Bayardo, Ma & Srikant, WWW 2007): the lossless,
@@ -126,16 +116,10 @@ object Dedup {
       .filter(col("sb") * 1000000L >= col("sa") * minJaccX1e6 &&
         col("sa") * 1000000L >= col("sb") * minJaccX1e6)
       .select(col("doc_a"), col("doc_b")).distinct()
-    cand
-      .join(mat.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), Seq("doc_a"))
-      .join(mat.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("uni",
-        size(col("sh_a")).cast("long") + size(col("sh_b")) - col("inter"))
-      .withColumn("jacc_x1e6",
-        floor(lit(1000000.0) * col("inter") / col("uni")).cast("long"))
-      .filter(col("jacc_x1e6") >= minJaccX1e6)
-      .select(col("doc_a"), col("doc_b"), col("jacc_x1e6"))
+      .select(col("doc_a").as("new_id"), col("doc_b").as("old_id"),
+        lit(false).as("hist"), lit(false).as("new_hist"))
+    verify(cand, tagged(mat, hist = false), minJaccX1e6)
+      .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"), col("jacc_x1e6"))
   }
 
   /** MinHash-LSH candidates scored by one-sided shingle CONTAINMENT
@@ -146,12 +130,7 @@ object Dedup {
     * dedup pass wants flagged. Same band-bucket candidate generation as
     * [[minhashLsh]] (never O(n²)). */
   def minhashContainment(shingled: DataFrame, minContX1e6: Long): DataFrame =
-    lshCandidatePairs(shingled)
-      .withColumn("containment_x1e6",
-        floor(lit(1000000.0) * col("inter") /
-          least(size(col("sh_a")), size(col("sh_b"))).cast("long")).cast("long"))
-      .filter(col("containment_x1e6") >= minContX1e6)
-      .select(col("doc_a"), col("doc_b"), col("containment_x1e6"))
+    selfLsh(signatures(shingled), minContX1e6, Containment)
 
   /** Cross-corpus decontamination — training-set hygiene: flag every
     * training doc sharing at least one n-gram shingle with the eval set
@@ -255,73 +234,95 @@ object Dedup {
     * tuning bands/rows is a measurement problem, not a guess. Stops at
     * the band join — none of the verification machinery runs. */
   def lshCandidates(shingled: DataFrame): DataFrame =
-    bandCandidates(pinned(shingled))
+    sideCandidates(None, bandTable(pinned(shingled)), withinBatch = true,
+        Long.MaxValue, failOnHotBucket = false)
+      .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"))
 
-  /** Band-bucket candidate generation: 8 minhashes → 4 bands of 2 →
-    * band equi-join → distinct (doc_a < doc_b) pairs. One shuffle on
-    * (band, h1, h2); the full pair space is never built. `mat` should
-    * already be materialized — the band self-join consumes it twice. */
-  private def bandCandidates(mat: DataFrame): DataFrame = {
-    val bands = bandTable(mat)
-    bands.alias("x")
-      .join(bands.alias("y"),
-        col("x.band") === col("y.band") && col("x.h1") === col("y.h1") &&
-          col("x.h2") === col("y.h2") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a" :: "doc_b" :: Nil)
-  }
+  /** A verification score over two shingle sets `sh_a`, `sh_b`:
+    * floor(1e6·|∩|/`den`), kept as column `name`. `den` may read the
+    * intersection size as `inter`. */
+  private[graft] final case class Score(name: String, den: Column)
 
-  /** Exact-Jaccard verification shared by every LSH candidate path:
-    * join the candidate pairs back to both shingle sets and keep pairs
-    * with floor(1e6·|∩|/|∪|) ≥ the threshold. The ONE body of that
-    * scaling — the byte-identical-across-paths contracts (indexed vs
-    * from-scratch, incremental vs one-shot) hold because every path
-    * verifies through this. */
-  private[graft] def verifyJaccard(cand: DataFrame, leftKey: String, rightKey: String,
-                                   shLeft: DataFrame, shRight: DataFrame,
-                                   minJaccX1e6: Long): DataFrame =
-    scoredJaccard(cand
-      .join(shLeft.select(col("doc_id").as(leftKey), col("shingles").as("sh_a")),
-        Seq(leftKey))
-      .join(shRight.select(col("doc_id").as(rightKey), col("shingles").as("sh_b")),
-        Seq(rightKey)), minJaccX1e6)
-      .select(col(leftKey), col(rightKey), col("jacc_x1e6"))
+  /** Exact Jaccard: the denominator is the union. */
+  private val Jaccard = Score("jacc_x1e6",
+    size(col("sh_a")).cast("long") + size(col("sh_b")) - col("inter"))
 
-  /** [[verifyJaccard]] for side-tagged candidates ([[sideCandidates]]
-    * plus a `new_hist` column that is false on every row): both lookups
-    * go to ONE shingle frame `sh` (doc_id, hist, shingles) — the batch's
-    * rows with `hist` false, the history's with `hist` true — keyed on
-    * (doc_id, hist), so a doc id present on both sides (a replay, a
-    * re-ingest) is scored against the right version. Both lookups plan
-    * the same build side, so a broadcast runs once and the second join
-    * reuses it; that holds only while `new_hist` reaches the join as an
-    * opaque column (a `cut` candidate frame), not as a literal the
-    * optimizer could push into one build side. Output (new_id, old_id,
-    * jacc_x1e6). */
-  private[graft] def verifySides(cand: DataFrame, sh: DataFrame,
-                                 minJaccX1e6: Long): DataFrame = {
-    val s = sh.select(col("doc_id"), col("hist"), col("shingles"))
-    val (l, r) = (s.alias("l"), s.alias("r"))
-    scoredJaccard(cand.alias("c")
-      .join(l, col("c.new_id") === col("l.doc_id") && col("c.new_hist") === col("l.hist"))
-      .join(r, col("c.old_id") === col("r.doc_id") && col("c.hist") === col("r.hist"))
-      .select(col("c.new_id").as("new_id"), col("c.old_id").as("old_id"),
-        col("l.shingles").as("sh_a"), col("r.shingles").as("sh_b")), minJaccX1e6)
-      .select(col("new_id"), col("old_id"), col("jacc_x1e6"))
-  }
+  /** One-sided containment: the denominator is the smaller set. */
+  private val Containment = Score("containment_x1e6",
+    least(size(col("sh_a")), size(col("sh_b"))).cast("long"))
 
-  /** The one body of the exact-Jaccard scaling: pairs carrying both
-    * shingle sets (`sh_a`, `sh_b`) gain `jacc_x1e6` = floor(1e6·|∩|/|∪|)
-    * and keep it when it reaches the threshold. */
-  private def scoredJaccard(pairs: DataFrame, minJaccX1e6: Long): DataFrame =
+  /** The one body of the exact scaling: pairs carrying both shingle sets
+    * (`sh_a`, `sh_b`) gain `score.name` = floor(1e6·|∩|/den) and keep
+    * it when it reaches the threshold. */
+  private def scored(pairs: DataFrame, score: Score, minX1e6: Long): DataFrame =
     pairs
       .withColumn("inter",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("uni",
-        size(col("sh_a")).cast("long") + size(col("sh_b")) - col("inter"))
-      .withColumn("jacc_x1e6",
-        floor(lit(1000000.0) * col("inter") / col("uni")).cast("long"))
-      .filter(col("jacc_x1e6") >= minJaccX1e6)
+      .withColumn("den", score.den)
+      .withColumn(score.name,
+        floor(lit(1000000.0) * col("inter") / col("den")).cast("long"))
+      .filter(col(score.name) >= minX1e6)
+
+  /** `df`'s (doc_id, hist, shingles) rows, tagged as history (`hist`
+    * true) or batch — the shingle frame [[verify]] looks both ids up in. */
+  private[graft] def tagged(df: DataFrame, hist: Boolean): DataFrame =
+    df.select(col("doc_id"), lit(hist).as("hist"), col("shingles"))
+
+  /** The one verification of every candidate path: side-tagged
+    * candidates ([[sideCandidates]]' (new_id, old_id, hist, new_hist))
+    * look both ids up in ONE [[tagged]] shingle frame `sh`, keyed on
+    * (doc_id, hist), so a doc id present on both sides (a replay, a
+    * re-ingest) is scored against the right version; [[scored]] keeps
+    * the pairs that reach the threshold. The byte-identical-across-paths
+    * contracts (indexed vs from-scratch, incremental vs one-shot, store
+    * probe vs full scan) hold because every path verifies through this.
+    *
+    * When a side tag reaches the join as a literal, the optimizer pushes
+    * it into that lookup and prunes `sh` to the matching side. When both
+    * reach it opaque (a `cut` candidate frame), the two lookups plan the
+    * same build side, so a broadcast runs once and the second join
+    * reuses it. Output (new_id, old_id, score). */
+  private[graft] def verify(cand: DataFrame, sh: DataFrame, minX1e6: Long,
+                            score: Score = Jaccard): DataFrame = {
+    val s = sh.select(col("doc_id"), col("hist"), col("shingles"))
+    val (l, r) = (s.alias("l"), s.alias("r"))
+    scored(cand.alias("c")
+      .join(l, col("c.new_id") === col("l.doc_id") && col("c.new_hist") === col("l.hist"))
+      .join(r, col("c.old_id") === col("r.doc_id") && col("c.hist") === col("r.hist"))
+      .select(col("c.new_id"), col("c.old_id"),
+        col("l.shingles").as("sh_a"), col("r.shingles").as("sh_b")), score, minX1e6)
+      .select(col("new_id"), col("old_id"), col(score.name))
+  }
+
+  /** The MinHash-LSH core: the band buckets of `probe` (a signature
+    * table — doc_id, shingles, h0..h7) joined in ONE [[sideCandidates]]
+    * pass against `hist` (its band table and its signature rows) and,
+    * with `withinBatch`, against themselves, then ONE [[verify]] over the
+    * batch's and the history's shingles. When both legs meet, the
+    * candidates are cut, as the store probe's are: their side tags then
+    * reach the verification opaque, so both lookups share one build
+    * side, the batch ∪ history frame the old ids need anyway. A single
+    * leg's lookups prune to their own sides (the history leg's new ids
+    * to the batch, its old ids to the history) or, in a self join, share
+    * the batch already. Output (new_id, old_id, score); within-batch rows
+    * have new_id < old_id. */
+  private[graft] def lsh(probe: DataFrame, hist: Option[(DataFrame, DataFrame)],
+                         withinBatch: Boolean, minX1e6: Long,
+                         maxBucketOccupancy: Long = Long.MaxValue,
+                         failOnHotBucket: Boolean = false,
+                         score: Score = Jaccard): DataFrame = {
+    val cand = sideCandidates(hist.map(_._1), bandsOf(probe), withinBatch,
+      maxBucketOccupancy, failOnHotBucket)
+    verify(if (withinBatch && hist.nonEmpty) cand.cut else cand,
+      (tagged(probe, hist = false) +: hist.map(h => tagged(h._2, hist = true)).toSeq)
+        .reduce(_.unionByName(_)), minX1e6, score)
+  }
+
+  /** [[lsh]] of a signature table against itself, as (doc_a, doc_b,
+    * score) with doc_a < doc_b. */
+  private def selfLsh(sigs: DataFrame, minX1e6: Long, score: Score = Jaccard): DataFrame =
+    lsh(sigs, None, withinBatch = true, minX1e6, score = score)
+      .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"), col(score.name))
 
   /** One row per doc: (doc_id, shingles, h0..h7) — the minhash
     * signature table, which is the PERSISTABLE form of the LSH index
@@ -369,17 +370,8 @@ object Dedup {
     * which is what lets one persisted epoch artifact feed BOTH a
     * history clustering and the per-sync [[incrementalMinhashIndexed]]
     * probe instead of computing minhashes twice. */
-  def minhashLshIndexed(index: DataFrame, minJaccX1e6: Long): DataFrame = {
-    val bands = bandsOf(index)
-    val sh = index.select(col("doc_id"), col("shingles"))
-    val cand = bands.alias("x")
-      .join(bands.alias("y"),
-        col("x.band") === col("y.band") && col("x.h1") === col("y.h1") &&
-          col("x.h2") === col("y.h2") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a" :: "doc_b" :: Nil)
-    verifyJaccard(cand, "doc_a", "doc_b", sh, sh, minJaccX1e6)
-  }
+  def minhashLshIndexed(index: DataFrame, minJaccX1e6: Long): DataFrame =
+    selfLsh(index, minJaccX1e6)
 
   /** Incremental MinHash+LSH dedup: match a NEW batch against the
     * HISTORICAL corpus through band buckets only — the per-sync shape
@@ -442,41 +434,29 @@ object Dedup {
   def incrementalMinhashIndexed(index: DataFrame, newShingled: DataFrame,
                                 minJaccX1e6: Long,
                                 maxBucketOccupancy: Long = Long.MaxValue,
-                                failOnHotBucket: Boolean = false): DataFrame = {
-    val newMat = pinned(newShingled)
-    val cand = probeCandidates(bandsOf(index), bandTable(newMat),
-      maxBucketOccupancy, failOnHotBucket)
-    verifyJaccard(cand, "new_id", "old_id", newMat, index, minJaccX1e6)
-  }
-
-  /** The candidate-generation core of [[incrementalMinhashIndexed]] over
-    * EXPLICIT band frames — exposed (package-private) so the persisted
-    * growing store can feed it a PARTITION-PRUNED history read
-    * ([[graft.streaming.GrowingDedupState.probeComplete]]): occupancy
-    * census and exclusion semantics are identical because a band bucket's
-    * rows are never split across store partitions (the partition key is a
-    * hash of (band, h1, h2)), so the census over the pruned read equals
-    * the global census for every bucket the batch can probe. Returns
-    * distinct (new_id, old_id) candidates. */
-  private[graft] def probeCandidates(histBandsRaw: DataFrame,
-                                     newBands: DataFrame,
-                                     maxBucketOccupancy: Long,
-                                     failOnHotBucket: Boolean): DataFrame =
-    sideCandidates(Some(histBandsRaw), newBands, withinBatch = false,
-      maxBucketOccupancy, failOnHotBucket).select(col("new_id"), col("old_id"))
+                                failOnHotBucket: Boolean = false): DataFrame =
+    lsh(signatures(newShingled), Some(bandsOf(index) -> index), withinBatch = false,
+      minJaccX1e6, maxBucketOccupancy, failOnHotBucket)
 
   /** Candidate generation for BOTH legs of a complete probe in one band
-    * join: the batch's bands (`newBands`, the probe side) against the
-    * history's bands tagged `hist` true, and — with `withinBatch` — the
-    * batch's own bands tagged `hist` false, where a pair counts once
-    * (new_id < old_id). Returns distinct (new_id, old_id, hist).
+    * join — the one band-bucket join of the near-dup family: the batch's
+    * bands (`newBands`, the probe side) against the history's bands
+    * tagged `hist` true, and — with `withinBatch` — the batch's own bands
+    * tagged `hist` false, where a pair counts once (new_id < old_id).
+    * Returns distinct (new_id, old_id, hist) with `new_hist` false on
+    * every row (the probe side is always the batch), ready for
+    * [[verify]].
     *
     * The hot-bucket guard runs per side, each with its own occupancy
     * census (the history's for the probe, the batch's for the
     * within-batch leg), and only on the tagged side: a within-batch
     * candidate's two bands share their bucket, so the tagged side alone
     * decides whether it is hot. Skip mode drops hot buckets before the
-    * join; fail mode aborts on the first candidate drawn from one. */
+    * join; fail mode aborts on the first candidate drawn from one. The
+    * persisted growing store feeds it a PARTITION-PRUNED history read
+    * ([[graft.streaming.GrowingDedupState.probeComplete]]): a band
+    * bucket's rows never split across store partitions, so the census
+    * over the pruned read equals the global one for every probed bucket. */
   private[graft] def sideCandidates(histBands: Option[DataFrame],
                                     newBands: DataFrame, withinBatch: Boolean,
                                     maxBucketOccupancy: Long,
@@ -485,11 +465,11 @@ object Dedup {
     def side(bands: DataFrame, hist: Boolean) =
       guardBands(bands.select(col("doc_id"), col("band"), col("h1"), col("h2")),
         maxBucketOccupancy, failOnHotBucket).withColumn("hist", lit(hist))
-    val tagged = (histBands.map(side(_, hist = true)).toSeq ++
+    val sides = (histBands.map(side(_, hist = true)).toSeq ++
         (if (withinBatch) Seq(side(newBands, hist = false)) else Nil))
       .reduce(_.unionByName(_))
     val joined = newBands.alias("x")
-      .join(tagged.alias("y"),
+      .join(sides.alias("y"),
         col("x.band") === col("y.band") && col("x.h1") === col("y.h1") &&
           col("x.h2") === col("y.h2") &&
           (col("y.hist") || col("x.doc_id") < col("y.doc_id")))
@@ -520,7 +500,11 @@ object Dedup {
       else col("x.doc_id")
     joined
       .select(newId.as("new_id"), col("y.doc_id").as("old_id"), col("y.hist").as("hist"))
-      .dropDuplicates("new_id" :: "old_id" :: "hist" :: Nil)
+      // one side's tag is a constant: kept out of the key, the pairs stay
+      // hash-partitioned on (new_id, old_id) for a downstream pair join
+      .dropDuplicates(Seq("new_id", "old_id") ++
+        (if (histBands.nonEmpty && withinBatch) Seq("hist") else Nil))
+      .withColumn("new_hist", lit(false))
   }
 
   /** `bands` under the hot-bucket guard, its occupancy census taken over
@@ -544,26 +528,6 @@ object Dedup {
           Seq("band", "h1", "h2"), "left_anti")
     }
 
-  /** [[incrementalMinhashIndexed]] with the index's band table PREBUILT
-    * by the caller — the FIXED-index serving shape: a streaming sink
-    * probing one immutable corpus index builds (and pins) the band
-    * table ONCE per query, so each micro-batch re-reads the pinned
-    * blocks instead of re-scanning the index parquet and re-exploding
-    * its bands per batch (two full index passes per micro-batch
-    * otherwise; the band table is 4 narrow rows per doc — pin-sized for
-    * moderate indexes, and [[graft.streaming.GrowingDedupState
-    * .probeIndexed]] is the bucketed-store path when it is not).
-    * `histBands` must be exactly [[bandsOf]] of `index`. */
-  private[graft] def incrementalMinhashPrebuilt(histBands: DataFrame,
-      index: DataFrame, newShingled: DataFrame, minJaccX1e6: Long,
-      maxBucketOccupancy: Long = Long.MaxValue,
-      failOnHotBucket: Boolean = false): DataFrame = {
-    val newMat = pinned(newShingled)
-    val cand = probeCandidates(histBands, bandTable(newMat),
-      maxBucketOccupancy, failOnHotBucket)
-    verifyJaccard(cand, "new_id", "old_id", newMat, index, minJaccX1e6)
-  }
-
   /** The COMPLETE per-sync near-dup pair set: the asymmetric
     * history-index probe ([[incrementalMinhashIndexed]]) UNION the
     * within-batch self-LSH of the new docs. Without the second term,
@@ -572,24 +536,25 @@ object Dedup {
     * over probe matches alone can only cluster them if a shared history
     * doc happens to bridge them: a silent correctness hole for a
     * continuously-ingesting dedup pipeline. Output (doc_a, doc_b,
-    * jacc_x1e6), doc_a < doc_b. Because band-candidate generation is
-    * symmetric and both terms verify with the same exact Jaccard, this
-    * equals the from-scratch [[minhashLsh]] over (history ∪ batch)
-    * restricted to pairs with at least one batch side — exactly, pinned
-    * by the `dedup_incremental_batch_pairs` gate against DuckDB.
+    * jacc_x1e6), doc_a < doc_b. Both terms run as ONE band join
+    * ([[sideCandidates]]) and ONE exact verification ([[verify]]), and
+    * band-candidate generation is symmetric, so this equals the
+    * from-scratch [[minhashLsh]] over (history ∪ batch) restricted to
+    * pairs with at least one batch side — exactly, pinned by the
+    * `dedup_incremental_batch_pairs` gate against DuckDB.
     *
     * Scale: both terms stay batch-proportional — the probe is bounded
     * by |batch| × bucket occupancy (capped via `maxBucketOccupancy`),
     * the self-LSH by the batch's own bucket structure (batch size is
     * the pipeline's own admission knob; history never self-joins). The
     * hot-bucket guard applies to BOTH terms: a boilerplate flood
-    * arriving inside a single batch hits the within-batch self-join's
-    * own occupancy census, not just the index probe's.
+    * arriving inside a single batch hits the within-batch leg's own
+    * occupancy census, not just the index probe's.
     *
     * Output is pair-distinct even when the index already holds some
     * batch docs (a replayed micro-batch probing a self-growing index):
     * the overlap shape finds a pair in both probe directions AND in the
-    * within-batch term, so the union dedups on the pair key. On a
+    * within-batch term, so [[pairMax]] dedups on the pair key. On a
     * byte-identical replay the duplicate scores are equal and the dedup
     * is lossless; when an id was RE-INGESTED with changed text the
     * index-side and batch-side scores differ, and the kept score is
@@ -598,28 +563,15 @@ object Dedup {
   def incrementalMinhashComplete(index: DataFrame, newShingled: DataFrame,
                                  minJaccX1e6: Long,
                                  maxBucketOccupancy: Long = Long.MaxValue,
-                                 failOnHotBucket: Boolean = false): DataFrame = {
-    val newMat = pinned(newShingled) // shared by the probe and the self-join
-    completeFrom(
-      incrementalMinhashIndexed(index, newMat, minJaccX1e6,
-        maxBucketOccupancy, failOnHotBucket),
-      guardedSelfLsh(newMat, minJaccX1e6, maxBucketOccupancy, failOnHotBucket))
-  }
+                                 failOnHotBucket: Boolean = false): DataFrame =
+    pairMax(lsh(signatures(newShingled), Some(bandsOf(index) -> index),
+      withinBatch = true, minJaccX1e6, maxBucketOccupancy, failOnHotBucket))
 
-  /** The symmetrize-union-max tail of [[incrementalMinhashComplete]]:
-    * fold a (new_id, old_id, jacc_x1e6) cross-probe result and the
-    * within-batch self-LSH pairs into one pair-distinct (doc_a, doc_b,
-    * jacc_x1e6) set, doc_a < doc_b, deterministic MAX across re-ingested
-    * versions ([[pairMax]], which the partition-pruned store probe
-    * [[graft.streaming.GrowingDedupState.probeComplete]] shares). */
-  private[graft] def completeFrom(cross: DataFrame, within: DataFrame): DataFrame =
-    pairMax(cross.unionByName(within.select(col("doc_a").as("new_id"),
-      col("doc_b").as("old_id"), col("jacc_x1e6"))))
-
-  /** Verified (new_id, old_id, jacc_x1e6) rows of either leg as one
+  /** Verified (new_id, old_id, jacc_x1e6) rows of both legs as one
     * pair-distinct (doc_a, doc_b, jacc_x1e6) set, doc_a < doc_b, the
-    * MAX score across duplicates — the tail of [[completeFrom]], and of
-    * the store probe that verifies both legs in one pass. */
+    * MAX score across duplicates — the tail of
+    * [[incrementalMinhashComplete]] and of the store probe
+    * ([[graft.streaming.GrowingDedupState.probeComplete]]). */
   private[graft] def pairMax(verified: DataFrame): DataFrame =
     verified
       .select(least(col("new_id"), col("old_id")).as("doc_a"),
@@ -630,43 +582,6 @@ object Dedup {
       .filter(col("doc_a") =!= col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(max(col("jacc_x1e6")).as("jacc_x1e6"))
-
-  /** The within-batch self-LSH leg of [[incrementalMinhashComplete]],
-    * with the SAME hot-bucket guard semantics as the index probe: skip
-    * mode drops the batch's own over-occupied band buckets before the
-    * self-join (pairs can still match through their other bands); fail
-    * mode aborts on the first candidate drawn from a hot bucket. `mat`
-    * must already be materialized. Guard off = plain [[minhashLsh]]. */
-  private def guardedSelfLsh(mat: DataFrame, minJaccX1e6: Long,
-                             maxBucketOccupancy: Long,
-                             failOnHotBucket: Boolean): DataFrame = {
-    if (maxBucketOccupancy == Long.MaxValue) minhashLsh(mat, minJaccX1e6)
-    else {
-      // any hot bucket (occupancy ≥ 2 distinct docs per (doc, band) row
-      // construction) yields at least one candidate, so fail mode always
-      // fires when hot
-      val cand = sideCandidates(None, bandTable(mat), withinBatch = true,
-          maxBucketOccupancy, failOnHotBucket)
-        .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"))
-      verifyJaccard(cand, "doc_a", "doc_b", mat, mat, minJaccX1e6)
-    }
-  }
-
-  /** [[bandCandidates]] joined back to both shingle sets with the
-    * intersection size precomputed — the verification input shared by
-    * [[minhashLsh]] and [[minhashContainment]]. The shingle prep
-    * (tokenize + hash + shingle) is consumed by the band self-join AND
-    * both verification joins — materialize it once; the shingled table
-    * is corpus-sized rows but only (id, block, shingles) wide, far
-    * cheaper to store than to recompute per consumer. */
-  private def lshCandidatePairs(shingled: DataFrame): DataFrame = {
-    val mat = pinned(shingled)
-    val sh = mat.select(col("doc_id"), col("shingles"))
-    bandCandidates(mat)
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-  }
 
   /** SimHash near-dup pairs: docs with identical 32-bit tf-weighted
     * sketches. Exact-match pairing is a single equi-join on the sketch;

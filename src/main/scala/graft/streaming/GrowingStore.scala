@@ -623,11 +623,10 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
     * .incrementalMinhashIndexed]] semantics against this store's
     * bucketed layout (no within-batch term, no fold): the serving path
     * when the store is a FIXED corpus index probed by a stream of
-    * batches too large to pin ([[graft.dedup.Dedup
-    * .incrementalMinhashPrebuilt]] is the pin-once path for indexes
-    * that fit). Same partition pruning and guard semantics as
-    * [[probeComplete]]'s cross leg; byte-identical output to the
-    * full-scan probe. */
+    * batches too large to pin ([[Streaming.incrementalDedupSink]]'s
+    * pinned band table is the path for indexes that fit). Same
+    * partition pruning and guard semantics as [[probeComplete]]'s cross
+    * leg; byte-identical output to the full-scan probe. */
   def probeIndexed(newShingled: DataFrame, minJaccX1e6: Long,
                    maxBucketOccupancy: Long = Long.MaxValue,
                    failOnHotBucket: Boolean = false): DataFrame = {
@@ -661,7 +660,7 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
     *     round's cut. The payload store is read at exactly those paths.
     *
     * Verification is then lazy: one side-tagged shingle frame (batch ∪
-    * pruned payload, [[graft.dedup.Dedup.verifySides]]) serves both
+    * pruned payload, [[graft.dedup.Dedup.verify]]) serves both
     * lookups of both legs, one broadcast for the whole pass. */
   private def prunedProbe(newMat: DataFrame, minJaccX1e6: Long,
       maxBucketOccupancy: Long, failOnHotBucket: Boolean,
@@ -696,7 +695,7 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
     val hist = prunedRead(spark, bandDir, "bk", bks, BandSchema, ownBatch)
     if (hist.isEmpty && !withinBatch) return None
     val sides = Dedup.sideCandidates(hist, newBands, withinBatch,
-      maxBucketOccupancy, failOnHotBucket).withColumn("new_hist", lit(false))
+      maxBucketOccupancy, failOnHotBucket)
     // without history there are no payload buckets to learn: the
     // candidates stay lazy and the whole probe runs after the caller's
     // next fork. With history, `new_hist` is constant, but as a column of
@@ -731,11 +730,9 @@ final case class GrowingDedupState(root: String, epoch: String = "0",
         s"GrowingDedupState: payload partitions missing under $sigDir " +
           s"for probed candidate buckets ${pbs.mkString(",")} — " +
           "store corrupted (bands published without their payload?)")
-    val shingles =
-      (newMat.select(col("doc_id"), lit(false).as("hist"), col("shingles")) +:
-        pay.map(_.select(col("doc_id"), lit(true).as("hist"), col("shingles"))).toSeq)
-        .reduce(_.unionByName(_))
-    Some(Dedup.verifySides(cand, shingles, minJaccX1e6))
+    val shingles = (Dedup.tagged(newMat, hist = false) +:
+        pay.map(Dedup.tagged(_, hist = true)).toSeq).reduce(_.unionByName(_))
+    Some(Dedup.verify(cand, shingles, minJaccX1e6))
   }
 
   /** The distinct non-null values of `df`'s one int column, in ONE

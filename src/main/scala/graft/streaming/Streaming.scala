@@ -394,9 +394,9 @@ object Streaming {
     val histBands = graft.Lineage.pinned(
       graft.dedup.Dedup.bandsOf(index), eager = false)
     newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val hits = graft.dedup.Dedup.incrementalMinhashPrebuilt(
-        histBands, index, graft.dedup.Dedup.shingleTable(batch, idCol, textCol),
-        minJaccX1e6, maxBucketOccupancy)
+      val hits = graft.dedup.Dedup.lsh(
+        graft.dedup.Dedup.signatures(graft.dedup.Dedup.shingleTable(batch, idCol, textCol)),
+        Some(histBands -> index), withinBatch = false, minJaccX1e6, maxBucketOccupancy)
       matches.updateAndGet(cur => mergeDedupMatches(cur, hits))
       ()
     }
@@ -429,9 +429,9 @@ object Streaming {
     val histBands = graft.Lineage.pinned(
       graft.dedup.Dedup.bandsOf(index), eager = false)
     newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val hits = graft.dedup.Dedup.incrementalMinhashPrebuilt(
-        histBands, index, graft.dedup.Dedup.shingleTable(batch, idCol, textCol),
-        minJaccX1e6, maxBucketOccupancy)
+      val hits = graft.dedup.Dedup.lsh(
+        graft.dedup.Dedup.signatures(graft.dedup.Dedup.shingleTable(batch, idCol, textCol)),
+        Some(histBands -> index), withinBatch = false, minJaccX1e6, maxBucketOccupancy)
       BatchStore.append(hits, pairsDir, epoch, batchId)
       ()
     }

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 /** The session harness itself: sessions are built in exactly two places,
   * [[GraftSession]] for the mains and [[SparkSuite]] for the suites,
   * [[JobCensus]] is the one listener on the bus, every checkpoint goes
-  * through [[Lineage]], and `withConf` puts the conf back whatever its
-  * body does. */
+  * through [[Lineage]], the near-dup family scores and band-joins pairs
+  * in one place, and `withConf` puts the conf back whatever its body
+  * does. */
 class HarnessSpec extends SparkSuite {
   /** Every Scala source under src/main and src/test. */
   private lazy val sources: Seq[Path] = {
@@ -46,6 +47,17 @@ class HarnessSpec extends SparkSuite {
       .filter(p => call.findFirstIn(Files.readString(p)).nonEmpty)
     assert(offenders.isEmpty,
       s"checkpoints outside Lineage's cut/pin path: ${offenders.mkString(", ")}")
+  }
+
+  test("src/main holds one exact pair-score scaling and one band-bucket join") {
+    val main = sources.filter(_.startsWith(Paths.get("src/main")))
+    def count(needle: scala.util.matching.Regex) =
+      main.map(p => p.getFileName.toString -> needle.findAllIn(Files.readString(p)).size)
+        .filter(_._2 > 0)
+    val scalings = count("""col\("inter"\)\s*/""".r)
+    assert(scalings.map(_._2).sum == 1, s"exact |∩|/den scalings: ${scalings.mkString(", ")}")
+    val bandJoins = count("""col\("x\.band"\)\s*===\s*col\("y\.band"\)""".r)
+    assert(bandJoins.map(_._2).sum == 1, s"band-bucket joins: ${bandJoins.mkString(", ")}")
   }
 
   test("withConf restores the prior values when its body throws") {

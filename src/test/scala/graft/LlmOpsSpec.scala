@@ -114,6 +114,33 @@ class LlmOpsSpec extends SparkSuite {
     assert(complete == Set((1L, 15L), (5L, 10L)))
   }
 
+  test("incrementalMinhashComplete runs one band join and one verification: at most 3 jobs, 2 broadcasts") {
+    val dir = java.nio.file.Files.createTempDirectory("lsh-budget").toString + "/idx"
+    val sh = Dedup.shingleTable(Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "completely different text about spark catalyst optimizer rules"),
+      (5L, "training data pipelines need deduplication at scale every day"),
+      (10L, "training data pipelines need deduplication at scale every day extra"),
+      (15L, "the quick brown fox jumps over the lazy dog again and again more"))
+      .toDF("doc_id", "text"), "doc_id", "text")
+    val idx = Dedup.lshIndexArtifact(spark, sh.filter($"doc_id" % 5 =!= 0), dir)
+    // the streaming gates' session: one shuffle partition, no AQE
+    val (pairs, starts) = withConf("spark.sql.shuffle.partitions" -> "1",
+        "spark.sql.adaptive.enabled" -> "false") {
+      jobStarts {
+        Dedup.incrementalMinhashComplete(idx, sh.filter($"doc_id" % 5 === 0), 500000L)
+          .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+      }
+    }
+    assert(pairs == Set((1L, 15L), (5L, 10L)))
+    val broadcasts = starts.count(e => Option(e.properties)
+      .flatMap(p => Option(p.getProperty("spark.job.tags")))
+      .exists(_.contains("broadcast exchange")))
+    info(s"${starts.size} jobs, $broadcasts broadcasts")
+    assert(starts.size <= 3, s"${starts.size} jobs")
+    assert(broadcasts <= 2, s"$broadcasts broadcast jobs")
+  }
+
   test("hot-bucket skip mode drops only the hot-bucket candidates") {
     val sh = Dedup.shingleTable(hotCorpus, "doc_id", "text")
     val hist = sh.filter($"doc_id" < 11L)
