@@ -279,9 +279,9 @@ object Dedup {
     *
     * When a side tag reaches the join as a literal, the optimizer pushes
     * it into that lookup and prunes `sh` to the matching side. When both
-    * reach it opaque (a `cut` candidate frame), the two lookups plan the
-    * same build side, so a broadcast runs once and the second join
-    * reuses it. Output (new_id, old_id, score). */
+    * reach it opaque (the store probe cuts its candidates), the two
+    * lookups plan the same build side, so a broadcast runs once and the
+    * second join reuses it. Output (new_id, old_id, score). */
   private[graft] def verify(cand: DataFrame, sh: DataFrame, minX1e6: Long,
                             score: Score = Jaccard): DataFrame = {
     val s = sh.select(col("doc_id"), col("hist"), col("shingles"))
@@ -296,27 +296,37 @@ object Dedup {
 
   /** The MinHash-LSH core: the band buckets of `probe` (a signature
     * table — doc_id, shingles, h0..h7) joined in ONE [[sideCandidates]]
-    * pass against `hist` (its band table and its signature rows) and,
-    * with `withinBatch`, against themselves, then ONE [[verify]] over the
-    * batch's and the history's shingles. When both legs meet, the
+    * pass against the history signature table `index` and, with
+    * `withinBatch`, against themselves, then ONE [[verify]] over the
+    * batch's and the history's shingles. When [[bothLegs]] meet, the
     * candidates are cut, as the store probe's are: their side tags then
-    * reach the verification opaque, so both lookups share one build
-    * side, the batch ∪ history frame the old ids need anyway. A single
-    * leg's lookups prune to their own sides (the history leg's new ids
-    * to the batch, its old ids to the history) or, in a self join, share
-    * the batch already. Output (new_id, old_id, score); within-batch rows
-    * have new_id < old_id. */
-  private[graft] def lsh(probe: DataFrame, hist: Option[(DataFrame, DataFrame)],
+    * reach the verification opaque, so both lookups share one build side
+    * (batch ∪ history) and one broadcast. A single leg's literal tags
+    * prune each lookup to its own side instead. `indexBands`, when
+    * given, must be `bandsOf(index)` prebuilt (the fixed-index sinks pin
+    * it once per query). Output (new_id, old_id, score); within-batch
+    * rows have new_id < old_id. */
+  private[graft] def lsh(probe: DataFrame, index: Option[DataFrame],
                          withinBatch: Boolean, minX1e6: Long,
                          maxBucketOccupancy: Long = Long.MaxValue,
                          failOnHotBucket: Boolean = false,
-                         score: Score = Jaccard): DataFrame = {
-    val cand = sideCandidates(hist.map(_._1), bandsOf(probe), withinBatch,
-      maxBucketOccupancy, failOnHotBucket)
-    verify(if (withinBatch && hist.nonEmpty) cand.cut else cand,
-      (tagged(probe, hist = false) +: hist.map(h => tagged(h._2, hist = true)).toSeq)
+                         score: Score = Jaccard,
+                         indexBands: Option[DataFrame] = None): DataFrame = {
+    val cand = sideCandidates(indexBands.orElse(index.map(bandsOf)), bandsOf(probe),
+      withinBatch, maxBucketOccupancy, failOnHotBucket)
+    verify(if (bothLegs(index, withinBatch)) cand.cut else cand,
+      (tagged(probe, hist = false) +: index.map(tagged(_, hist = true)).toSeq)
         .reduce(_.unionByName(_)), minX1e6, score)
   }
+
+  /** Whether a probe runs both legs (history and within-batch). Two plan
+    * choices follow from it, and only from it: [[sideCandidates]] keys
+    * its candidate dedup on `hist` only then (with one leg `hist` is a
+    * constant, and as a key it would break the (new_id, old_id)
+    * partitioning a downstream pair join reuses — dedup_lsh_recall's
+    * full join), and [[lsh]] cuts the candidates only then. */
+  private def bothLegs(hist: Option[DataFrame], withinBatch: Boolean): Boolean =
+    hist.nonEmpty && withinBatch
 
   /** [[lsh]] of a signature table against itself, as (doc_a, doc_b,
     * score) with doc_a < doc_b. */
@@ -379,12 +389,14 @@ object Dedup {
     * ([[bandTable]]) is a persisted epoch artifact and each sync only
     * probes the buckets the new docs hash into. The history is never
     * self-joined and never re-shingled per sync; candidate volume is
-    * bounded by |new| × bucket occupancy, never |old|², and the exact
-    * verification join reads only the matched old docs' shingle sets.
-    * The asymmetric equi-join broadcasts nothing and shuffles on
-    * (band, h1, h2) — at 100 TB of history the probe cost scales with
-    * the BATCH, which is the whole point. Returns (new_id, old_id,
-    * jacc_x1e6) with exact Jaccard ≥ the threshold. */
+    * bounded by |new| × bucket occupancy, never |old|². The band join
+    * and the exact verification still SCAN the history's band and
+    * shingle columns once each (only the matched old docs' shingle sets
+    * reach the score; the candidates are the small side, which adaptive
+    * execution can broadcast at runtime); the partition-pruned
+    * [[graft.streaming.GrowingDedupState.probeIndexed]] is the path
+    * whose reads track the batch. Returns (new_id, old_id, jacc_x1e6)
+    * with exact Jaccard ≥ the threshold. */
   def incrementalMinhash(oldShingled: DataFrame, newShingled: DataFrame,
                          minJaccX1e6: Long,
                          maxBucketOccupancy: Long = Long.MaxValue,
@@ -435,7 +447,7 @@ object Dedup {
                                 minJaccX1e6: Long,
                                 maxBucketOccupancy: Long = Long.MaxValue,
                                 failOnHotBucket: Boolean = false): DataFrame =
-    lsh(signatures(newShingled), Some(bandsOf(index) -> index), withinBatch = false,
+    lsh(signatures(newShingled), Some(index), withinBatch = false,
       minJaccX1e6, maxBucketOccupancy, failOnHotBucket)
 
   /** Candidate generation for BOTH legs of a complete probe in one band
@@ -500,10 +512,8 @@ object Dedup {
       else col("x.doc_id")
     joined
       .select(newId.as("new_id"), col("y.doc_id").as("old_id"), col("y.hist").as("hist"))
-      // one side's tag is a constant: kept out of the key, the pairs stay
-      // hash-partitioned on (new_id, old_id) for a downstream pair join
       .dropDuplicates(Seq("new_id", "old_id") ++
-        (if (histBands.nonEmpty && withinBatch) Seq("hist") else Nil))
+        (if (bothLegs(histBands, withinBatch)) Seq("hist") else Nil))
       .withColumn("new_hist", lit(false))
   }
 
@@ -543,10 +553,15 @@ object Dedup {
     * pairs with at least one batch side — exactly, pinned by the
     * `dedup_incremental_batch_pairs` gate against DuckDB.
     *
-    * Scale: both terms stay batch-proportional — the probe is bounded
-    * by |batch| × bucket occupancy (capped via `maxBucketOccupancy`),
-    * the self-LSH by the batch's own bucket structure (batch size is
-    * the pipeline's own admission knob; history never self-joins). The
+    * Scale: both terms' CANDIDATE volume stays batch-proportional — the
+    * probe is bounded by |batch| × bucket occupancy (capped via
+    * `maxBucketOccupancy`), the self-LSH by the batch's own bucket
+    * structure (batch size is the pipeline's own admission knob; history
+    * never self-joins). The history's band and shingle columns are
+    * scanned once each, as in [[incrementalMinhash]]. The candidates
+    * are cut ([[lsh]]), so the verification plans without their size:
+    * one build side (batch ∪ history) serves both lookups, and a
+    * history too large to broadcast is sort-merge joined whole. The
     * hot-bucket guard applies to BOTH terms: a boilerplate flood
     * arriving inside a single batch hits the within-batch leg's own
     * occupancy census, not just the index probe's.
@@ -564,7 +579,7 @@ object Dedup {
                                  minJaccX1e6: Long,
                                  maxBucketOccupancy: Long = Long.MaxValue,
                                  failOnHotBucket: Boolean = false): DataFrame =
-    pairMax(lsh(signatures(newShingled), Some(bandsOf(index) -> index),
+    pairMax(lsh(signatures(newShingled), Some(index),
       withinBatch = true, minJaccX1e6, maxBucketOccupancy, failOnHotBucket))
 
   /** Verified (new_id, old_id, jacc_x1e6) rows of both legs as one

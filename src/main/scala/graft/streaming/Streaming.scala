@@ -396,7 +396,8 @@ object Streaming {
     newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       val hits = graft.dedup.Dedup.lsh(
         graft.dedup.Dedup.signatures(graft.dedup.Dedup.shingleTable(batch, idCol, textCol)),
-        Some(histBands -> index), withinBatch = false, minJaccX1e6, maxBucketOccupancy)
+        Some(index), withinBatch = false, minJaccX1e6, maxBucketOccupancy,
+        indexBands = Some(histBands))
       matches.updateAndGet(cur => mergeDedupMatches(cur, hits))
       ()
     }
@@ -431,7 +432,8 @@ object Streaming {
     newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val hits = graft.dedup.Dedup.lsh(
         graft.dedup.Dedup.signatures(graft.dedup.Dedup.shingleTable(batch, idCol, textCol)),
-        Some(histBands -> index), withinBatch = false, minJaccX1e6, maxBucketOccupancy)
+        Some(index), withinBatch = false, minJaccX1e6, maxBucketOccupancy,
+        indexBands = Some(histBands))
       BatchStore.append(hits, pairsDir, epoch, batchId)
       ()
     }
